@@ -1,29 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Index of the maximum element of an `array<double>` (first winner on
   * ties). The built-in composition
   * `array_position(scores, array_max(scores))` references `scores`
   * twice and therefore evaluates the array-producing expression twice
   * per row (no CSE across references) — this node reads it once.
-  * Generated code calls [[compute]] directly (whole-stage codegen
-  * preserved, no interpreted eval-island).
   */
-case class ArgMaxArray(child: Expression) extends UnaryExpression {
+case class ArgMaxArray(child: Expression) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "argmax_array"
   override def dataType: DataType = IntegerType
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("argmax", this, classOf[ArgMaxArray].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   def compute(arr: ArrayData): Int = {
     val n = arr.numElements()

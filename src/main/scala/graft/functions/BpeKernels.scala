@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -60,23 +59,15 @@ object BpeKernels {
   * loop, as a codegen'd expression over the word column.
   */
 case class EncodeBpeWord(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   override def prettyName: String = "encode_bpe_word"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   @transient private lazy val ms: Array[Array[UTF8String]] =
     merges.map { case (l, r) => Array(UTF8String.fromString(l),
       UTF8String.fromString(r), UTF8String.fromString(l + r)) }.toArray
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("encodeBpeWord", this,
-      classOf[EncodeBpeWord].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(w: UTF8String): ArrayData = {
     var toks = BpeKernels.codePointList(w)
@@ -97,23 +88,15 @@ case class EncodeBpeWord(child: Expression, merges: Seq[(String, String)])
   * training loop's per-round step over the distinct-word relation.
   */
 case class BpeMergeWord(child: Expression, l: String, r: String)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   override def prettyName: String = "bpe_merge_word"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   @transient private lazy val lu = UTF8String.fromString(l)
   @transient private lazy val ru = UTF8String.fromString(r)
   @transient private lazy val mu = UTF8String.fromString(l + r)
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMergeWord", this,
-      classOf[BpeMergeWord].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(toks: ArrayData): ArrayData = {
     val n = toks.numElements()

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,19 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * does `numBytesForFirstByte`-driven slicing; BpeSpec pins
   * kernel == HOF on mixed + astral text.
   */
-case class CodePoints(child: Expression) extends UnaryExpression {
+case class CodePoints(child: Expression) extends UnaryKernel[UTF8String] {
   override def prettyName: String = "code_points"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref =
-      ctx.addReferenceObj("codePoints", this, classOf[CodePoints].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   def compute(text: UTF8String): GenericArrayData = {
     val bytes = text.getBytes

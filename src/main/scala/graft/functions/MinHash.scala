@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Single-pass MinHash over an `array<string>` shingle column — or an
   * `array<long>` of PRE-HASHED shingles ([[Shingles]] with
@@ -24,28 +23,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * constants, a standard minwise family) folded in a tight JVM loop —
   * O(shingles · k) long ops, one call per ROW, not per element.
   *
-  * Codegen: the generated code calls [[compute]] directly through a
-  * bound reference, so the surrounding stage keeps whole-stage codegen
-  * with no interpreted eval-island (a CodegenFallback would wrap the
-  * row and virtual-dispatch `eval` per row). Evaluation is a pure
-  * function of the input array + constants: deterministic across runs,
-  * partitionings, and cluster layouts.
+  * Evaluation is a pure function of the input array + constants:
+  * deterministic across runs, partitionings, and cluster layouts.
   */
-abstract class MinHashBase extends UnaryExpression {
+abstract class MinHashBase extends UnaryKernel[ArrayData] {
   def k: Int
 
-  /** Scala-side kernel, invoked from both interpreted and generated
-    * code paths.
-    */
-  def compute(arr: ArrayData): ArrayData
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhash", this, classOf[MinHashBase].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes =
+    Seq(Bridge.anyOf(ArrayType(StringType), ArrayType(LongType)))
 
   @transient protected lazy val (aConsts, bConsts) = {
     val rnd = new java.util.SplittableRandom(0x6d696e68617368L) // "minhash"
@@ -137,16 +122,13 @@ object MinHashMod {
 
 /** `minhash_signature_mod(gram_hashes)` → array<long> of k mod-p
   * minwise components (see [[MinHashMod]]). Input must be
-  * `array<long>` of md5-parity gram hashes; same single-pass shape and
-  * codegen strategy as [[MinHashBase]].
+  * `array<long>` of md5-parity gram hashes; same single-pass shape as
+  * [[MinHashBase]].
   */
 case class MinHashSignatureMod(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryKernel[ArrayData] {
   override def prettyName: String = "minhash_signature_mod"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // reject array<string> etc. at ANALYSIS time — without this a
-  // mistyped SQL call surfaces as an executor ClassCastException
-  // (the NfcNormalize lesson); grams must be pre-hashed longs
   override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   @transient private lazy val (aConsts, bConsts) = MinHashMod.consts(k)
@@ -167,15 +149,6 @@ case class MinHashSignatureMod(child: Expression, k: Int)
       i += 1
     }
     new GenericArrayData(sig)
-  }
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashmod", this,
-      classOf[MinHashSignatureMod].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,9 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * pipeline: "é" as U+0065 U+0301 and as U+00E9 must hash, dedup,
   * shingle, and join identically, and raw web text mixes both freely.
   * Spark ships no normalizer; a Scala UDF would serialize through the
-  * encoder boundary on every row, so this is a native Expression with
-  * real `doGenCode` (the kernel is invoked directly from generated
-  * code — no eval island, same pattern as the TextScan kernels).
+  * encoder boundary on every row, so this is a native [[UnaryKernel]]
+  * invoked directly from generated code.
   *
   * Fast path: `Normalizer.isNormalized` is a cheap scan that returns
   * true for ASCII and already-composed text (the overwhelming
@@ -23,22 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `java.text.Normalizer` both implement UAX #15; q_text_normalize
   * hash-matches through the full fixture corpus.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
+case class NfcNormalize(child: Expression) extends UnaryKernel[UTF8String] {
   override def prettyName: String = "nfc_normalize"
   override def dataType: DataType = StringType
-  // Declared so misuse (nfc_normalize(123)) is an analysis-time type
-  // error, not a runtime ClassCastException.
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nfcNormalize", this,
-      classOf[NfcNormalize].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(text: UTF8String): UTF8String = {
     import java.text.Normalizer

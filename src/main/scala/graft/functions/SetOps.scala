@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
@@ -13,25 +12,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * stage evaluates it once per candidate pair, which made it the
   * hottest stage of the exact Jaccard join (measured 4 s of an ~11 s
   * run at sf0.1). The merge scan does ~|a|+|b| primitive comparisons
-  * with zero allocation. Codegen calls the kernel directly (same
-  * pattern as [[DotProduct]]), keeping whole-stage codegen intact.
+  * with zero allocation.
   *
   * Caller contract: both arrays sorted ascending with distinct
   * elements (the operator sorts once upstream, amortized over all
   * pairs touching the row).
   */
 case class SortedOverlapCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "sorted_overlap"
   override def dataType: DataType = IntegerType
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sovl", this, classOf[SortedOverlapCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
 
   def compute(x: ArrayData, y: ArrayData): Int = {
     val nx = x.numElements()
@@ -73,20 +65,13 @@ case class SortedOverlapCount(left: Expression, right: Expression)
   * (`sort_array(collect_set(...))` produces exactly that), so the
   * emitted (a, b) are canonical without per-pair comparisons.
   */
-case class SortedPairs(child: Expression) extends UnaryExpression {
+case class SortedPairs(child: Expression) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "sorted_pairs"
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("a", LongType, nullable = false),
       StructField("b", LongType, nullable = false))),
     containsNull = false)
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sortedPairs", this, classOf[SortedPairs].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   def compute(items: ArrayData): ArrayData = {
     val n = items.numElements()

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,23 +25,16 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class Shingles(child: Expression, n: Int, hashed: Boolean = false,
     md5Parity: Boolean = false, distinct: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(n >= 1, "shingle size must be >= 1")
   override def prettyName: String =
     if (md5Parity) "shingles_md5" else if (hashed) "shingles_hashed" else "shingles"
   override def dataType: DataType =
     if (hashed || md5Parity) ArrayType(LongType, containsNull = false)
     else ArrayType(StringType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   private val space = UTF8String.fromString(" ")
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingles", this, classOf[Shingles].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(toks: ArrayData): ArrayData = {
     val m = toks.numElements()
@@ -93,21 +85,14 @@ case class Shingles(child: Expression, n: Int, hashed: Boolean = false,
   * already holds).
   */
 case class WinnowFps(child: Expression, n: Int, window: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(n >= 1, "shingle size must be >= 1")
   require(window >= 1, "window must be >= 1")
   override def prettyName: String = "winnow_fps"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   private val space = UTF8String.fromString(" ")
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnowFps", this, classOf[WinnowFps].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(toks: ArrayData): ArrayData = {
     val m = toks.numElements()

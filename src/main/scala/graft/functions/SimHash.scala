@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** 64-bit SimHash of an `array<string>` OR `array<long>` feature
   * column (charikar sign-random-projection over the implicit feature
@@ -20,26 +20,19 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Same design rationale as [[MinHashBase]]: one tight JVM pass per
   * row (features hashed once, 64 counters updated inline) instead of
-  * 64 interpreted higher-order-function passes; generated code calls
-  * [[compute]] directly so the stage keeps whole-stage codegen. Pure
-  * function of the input ⇒ deterministic across partitionings.
+  * 64 interpreted higher-order-function passes. Pure function of the
+  * input ⇒ deterministic across partitionings.
   */
-case class SimHash(child: Expression) extends UnaryExpression {
+case class SimHash(child: Expression) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "simhash"
   override def dataType: DataType = LongType
+  override def inputTypes =
+    Seq(Bridge.anyOf(ArrayType(StringType), ArrayType(LongType)))
 
   // resolved only after analysis — must not be a constructor val
   private lazy val preHashed = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _) => true
+    case ArrayType(LongType, _) => true
     case _ => false
-  }
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhash", this, classOf[SimHash].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   def compute(arr: ArrayData): Long = {

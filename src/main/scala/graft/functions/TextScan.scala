@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass text-scan kernels replacing the regex formulations of
   * the text-stat operators. Java regex costs ~0.5 µs/char on the
   * stat patterns (measured at sf0.1) — fine for a demo, a bottleneck
   * for a 100 TB text scan; these kernels do the same counts in one
-  * code-point walk at JVM scan speed, with real codegen (`compute`
-  * called directly from generated code, no eval island).
+  * code-point walk at JVM scan speed, as [[UnaryKernel]]s.
   *
   * Parity contract: each kernel reproduces its regex counterpart's
   * count EXACTLY (same code-point classes, same non-overlapping
@@ -33,18 +32,11 @@ private[graft] object TextScan {
 /** `regexp_count(text, '[^A-Za-z0-9\s]')` — punctuation/symbol code
   * points — in one pass.
   */
-case class PunctCount(child: Expression) extends UnaryExpression {
+case class PunctCount(child: Expression) extends UnaryKernel[UTF8String] {
   import TextScan._
   override def prettyName: String = "punct_count"
   override def dataType: DataType = LongType
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("punctCount", this, classOf[PunctCount].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   def compute(text: UTF8String): Long = {
     val s = text.toString
@@ -66,18 +58,11 @@ case class PunctCount(child: Expression) extends UnaryExpression {
   * BPE-ish pre-tokenization count (letter runs, single digits,
   * single marks) — in one pass.
   */
-case class SubtokenCount(child: Expression) extends UnaryExpression {
+case class SubtokenCount(child: Expression) extends UnaryKernel[UTF8String] {
   import TextScan._
   override def prettyName: String = "subtoken_count"
   override def dataType: DataType = LongType
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("subtokCount", this, classOf[SubtokenCount].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   def compute(text: UTF8String): Long = {
     val s = text.toString
@@ -108,13 +93,14 @@ case class SubtokenCount(child: Expression) extends UnaryExpression {
   * one run-walk + set lookup reproduces the regex count.
   */
 case class WordSetCount(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   import TextScan._
   require(words.nonEmpty && words.forall(w => w.nonEmpty &&
     w.forall(ch => isWordChar(ch))),
     "words must be non-empty and all word-characters")
   override def prettyName: String = "word_set_count"
   override def dataType: DataType = LongType
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](words.size * 2)
@@ -122,14 +108,6 @@ case class WordSetCount(child: Expression, words: Seq[String])
     s
   }
   @transient private lazy val maxLen = words.map(_.length).max
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordSetCount", this, classOf[WordSetCount].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(text: UTF8String): Long = {
     val s = text.toString
@@ -156,18 +134,11 @@ case class WordSetCount(child: Expression, words: Seq[String])
   * cursor jumps past it.
   */
 case class GramSetCount(child: Expression, grams: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(grams.nonEmpty && grams.forall(_.nonEmpty), "grams must be non-empty")
   override def prettyName: String = "gram_set_count"
   override def dataType: DataType = LongType
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramSetCount", this, classOf[GramSetCount].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   @transient private lazy val gramArr: Array[String] = grams.toArray
 
@@ -211,29 +182,19 @@ case class GramSetCount(child: Expression, grams: Seq[String])
   * agree.
   */
 case class CharGramBuckets(child: Expression, n: Int, mod: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(n >= 1, "gram length must be >= 1")
   require(mod >= 1, "bucket count must be >= 1")
   override def prettyName: String = "char_gram_buckets"
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charGramBuckets", this,
-      classOf[CharGramBuckets].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
-  def compute(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val s = text.toString
     // code-point index: cp(i) = UTF-16 offset of the i-th code point
     val cps = s.codePointCount(0, s.length)
     if (cps < n) {
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     }
     val offs = new Array[Int](cps + 1)
     var o = 0
@@ -247,7 +208,7 @@ case class CharGramBuckets(child: Expression, n: Int, mod: Int)
       out(g) = java.lang.Long.valueOf(Shingles.md5Prefix60Memo(gram) % mod)
       g += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CharGramBuckets =
@@ -272,23 +233,14 @@ case class CharGramBuckets(child: Expression, n: Int, mod: Int)
   * are exact integers, so every downstream value is bit-identical.
   */
 case class CharGramBucketCounts(child: Expression, n: Int, mod: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(n >= 1, "gram length must be >= 1")
   require(mod >= 1, "bucket count must be >= 1")
   override def prettyName: String = "char_gram_bucket_counts"
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charGramBucketCounts", this,
-      classOf[CharGramBucketCounts].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
-  def compute(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val counts = new Array[Long](mod)
     val s = text.toString
     val cps = s.codePointCount(0, s.length)
@@ -305,7 +257,7 @@ case class CharGramBucketCounts(child: Expression, n: Int, mod: Int)
         g += 1
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       counts.map(java.lang.Long.valueOf).asInstanceOf[Array[Any]])
   }
 
@@ -325,28 +277,19 @@ case class CharGramBucketCounts(child: Expression, n: Int, mod: Int)
   * plan tree; a flattened primitive copy is built lazily per task.
   */
 case class CharGramScores(child: Expression, n: Int, mod: Int,
-    weights: Seq[Seq[Long]]) extends UnaryExpression {
+    weights: Seq[Seq[Long]]) extends UnaryKernel[UTF8String] {
   require(n >= 1, "gram length must be >= 1")
   require(mod >= 1, "bucket count must be >= 1")
   require(weights.nonEmpty && weights.forall(_.length == mod),
     "each class needs exactly `mod` bucket weights")
   override def prettyName: String = "char_gram_scores"
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   private val classes = weights.length
   @transient private lazy val flat: Array[Long] = weights.flatten.toArray
 
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charGramScores", this,
-      classOf[CharGramScores].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
-  def compute(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val acc = new Array[Long](classes)
     val s = text.toString
     val cps = s.codePointCount(0, s.length)
@@ -366,7 +309,7 @@ case class CharGramScores(child: Expression, n: Int, mod: Int,
         g += 1
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       acc.map(java.lang.Long.valueOf).asInstanceOf[Array[Any]])
   }
 

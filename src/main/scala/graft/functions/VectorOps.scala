@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -18,10 +17,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * operation order as the sequential HOF fold, so results are
   * bit-identical to the previous composition and deterministic across
   * partitionings.
-  *
-  * Codegen (same pattern as [[MinHashBase]]): generated code calls the
-  * `compute` kernel directly through a bound reference, so the stage
-  * keeps whole-stage codegen with no interpreted eval-island.
   */
 
 /** `dot_product(a, b)` — ordered-fold dot product of two
@@ -29,17 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * order of `aggregate(zip_with(...))`).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "dot_product"
   override def dataType: DataType = DoubleType
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dotp", this, classOf[DotProduct].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
@@ -66,21 +55,14 @@ case class DotProduct(left: Expression, right: Expression)
   * flattened primitive copy is built lazily per task for the loop.
   */
 case class MatVecDots(child: Expression, rows: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   override def prettyName: String = "mat_vec_dots"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   private val nRows = rows.length
   private val dim = if (rows.isEmpty) 0 else rows.head.length
   @transient private lazy val flat: Array[Double] = rows.flatten.toArray
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("matvec", this, classOf[MatVecDots].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(v: ArrayData): ArrayData = {
     val n = math.min(v.numElements(), dim)
@@ -122,19 +104,12 @@ case class MatVecDots(child: Expression, rows: Seq[Seq[Double]])
   * copy is built lazily per task for the loop.
   */
 case class LongVecDot(child: Expression, v: Seq[Long])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   override def prettyName: String = "long_vec_dot"
   override def dataType: DataType = LongType
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   @transient private lazy val flat: Array[Long] = v.toArray
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lvdot", this, classOf[LongVecDot].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(q: ArrayData): Long = {
     val n = math.min(q.numElements(), flat.length)
@@ -158,17 +133,11 @@ case class LongVecDot(child: Expression, v: Seq[Long])
   * (`list_sum([a.q[i]*b.q[i] ...])` in DuckDB).
   */
 case class LongDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "long_dot"
   override def dataType: DataType = LongType
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("longdot", this, classOf[LongDot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
 
   def compute(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
@@ -203,9 +172,10 @@ case class LongDot(left: Expression, right: Expression)
   * calls), never per row.
   */
 case class IntSignLshKeys(child: Expression, dim: Int, bits: Int,
-    tables: Int) extends UnaryExpression {
+    tables: Int) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "int_sign_lsh_keys"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   // row-major (table, bit, component); +1 when the md5 parity bit is
   // set, -1 otherwise
@@ -218,14 +188,6 @@ case class IntSignLshKeys(child: Expression, dim: Int, bits: Int,
         org.apache.spark.unsafe.types.UTF8String.fromString(s"$t:$b:$i"))
       if ((h & 1L) == 1L) 1 else -1
     }
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("intlsh", this, classOf[IntSignLshKeys].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
 
   def compute(q: ArrayData): ArrayData = {
     val n = math.min(q.numElements(), dim)
@@ -265,23 +227,16 @@ case class IntSignLshKeys(child: Expression, dim: Int, bits: Int,
   * planes locally — no closure shipping, bit-stable everywhere.
   */
 case class SignLshBuckets(child: Expression, dim: Int, bits: Int,
-    tables: Int, seed: Long) extends UnaryExpression {
+    tables: Int, seed: Long) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "sign_lsh_buckets"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   // row-major (table, bit, component) — identical stream order to
   // Similarity.hyperplanes(dim, bits, tables, seed)
   @transient private lazy val flat: Array[Double] = {
     val rnd = new scala.util.Random(seed)
     Array.fill(tables * bits * dim)(rnd.nextGaussian())
-  }
-
-  protected override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("signlsh", this, classOf[SignLshBuckets].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   def compute(v: ArrayData): ArrayData = {

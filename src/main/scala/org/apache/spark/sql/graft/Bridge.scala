@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   *
@@ -16,6 +17,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An `ExpectsInputTypes` input type that accepts any one of `types`
+    * (`TypeCollection` is `private[sql]`).
+    */
+  def anyOf(types: DataType*): AbstractDataType = TypeCollection(types: _*)
 
   /** Persist `df`'s computed rows at the RDD layer, bypassing the
     * `CacheManager`.

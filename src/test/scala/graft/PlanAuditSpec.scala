@@ -336,39 +336,6 @@ class PlanAuditSpec extends AnyFunSuite {
       "offsets must come back as a broadcast")
   }
 
-  test("nfc_normalize emits real codegen (no eval-island fallback)") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    GraftFunctions.register(spark)
-    val df = Tables.documents(spark, dir).limit(10)
-      .select(expr("nfc_normalize(text)").as("n"))
-    val wscg = df.queryExecution.executedPlan.collect {
-      case w: WholeStageCodegenExec => w.doCodeGen()._2.body
-    }
-    assert(wscg.nonEmpty, "projection did not plan WholeStageCodegen")
-    assert(wscg.mkString.contains(".compute("),
-      "NfcNormalize must be invoked directly from generated code")
-  }
-
-  test("sketch/vector expressions emit real codegen (no eval-island fallback)") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    // a projection exercising Shingles → MinHashBands and DotProduct
-    val df = Tables.documents(spark, dir).limit(10)
-      .select(graft.operators.Dedup.minhashBands(
-          graft.operators.Dedup.shingles(col("text"), 3), 32, 8).as("bands"),
-        graft.operators.Similarity.dot(
-          array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("d"))
-    val wscg = df.queryExecution.executedPlan.collect {
-      case w: WholeStageCodegenExec => w.doCodeGen()._2.body
-    }
-    assert(wscg.nonEmpty, "projection did not plan WholeStageCodegen")
-    val code = wscg.mkString
-    // the kernels are invoked directly from generated code: a
-    // CodegenFallback would show up as ".eval(" on an InternalRow
-    assert(code.contains(".compute("), code.take(600))
-  }
-
   /** Every Window node either partitions by the two-phase scan's _pid
     * stamp or is the ~|partitions|-row offsets window (ORDER BY _pid)
     * — i.e. no single-task window ever runs over the DATA relation.

@@ -64,6 +64,17 @@ class SqlSurfaceSpec extends AnyFunSuite {
       spark.sql("SELECT nfc_normalize(123)").collect())
   }
 
+  test("kernels reject mistyped input at analysis time") {
+    // every row kernel declares its input types (ExpectsInputTypes, no
+    // implicit cast): misuse is an analysis error, not a runtime
+    // ClassCastException mid-job
+    Seq("SELECT punct_count(123)",
+      "SELECT simhash(array(1, 2))",
+      "SELECT dot_product(array('a'), array('b'))").foreach { q =>
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+    }
+  }
+
   test("simhash()/minhash SQL functions run and agree with the DSL") {
     Seq((0L, "a b c d e f g"), (1L, "a b c d e f g"), (2L, "x y z w v u t"))
       .toDF("doc_id", "text").createOrReplaceTempView("docs_sql")
