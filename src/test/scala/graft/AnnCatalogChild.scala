@@ -8,8 +8,9 @@ import graft.operators.Similarity
 /** Forked-JVM child for AnnCatalogSpec: pins that the persisted ANN
   * indexes survive a FULL SparkSession/SparkContext restart — the
   * production build-once/probe-many shape, where the builder and the
-  * prober are different jobs. Uses a Hive (embedded-Derby) catalog in
-  * a scratch dir so the bucketBy spec lands in durable metadata:
+  * prober are different jobs. Each session is a [[Sessions.local]]
+  * session plus a Hive (embedded-Derby) catalog in a scratch dir, so
+  * the bucketBy spec lands in durable metadata:
   *
   *  - session 1 BUILDS the LSH index over the corpus and stops;
   *  - session 2 (fresh context, same metastore) APPENDS an increment
@@ -26,20 +27,12 @@ import graft.operators.Similarity
 object AnnCatalogChild {
   private val dim = 16
 
-  private def mkSession(base: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ann-catalog")
+  private def mkSession(base: String): SparkSession =
+    Sessions.local("4", _.appName("graft-ann-catalog")
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+      .enableHiveSupport())
 
   private def vec(seed: Int): Seq[Double] = {
     val r = new scala.util.Random(seed)
