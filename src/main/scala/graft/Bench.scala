@@ -123,15 +123,7 @@ object Bench {
     val only = args.toSet
     val spark = Sessions.fromEnv()
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Verify.jstr
 
     // absorb JIT/codegen/session warmup so the first timed query isn't
     // charged ~4s of one-time cost

@@ -221,8 +221,8 @@ case class IntSignLshKeys(child: Expression, dim: Int, bits: Int,
   * key(t) = fold over bits b of `key*2 + (dot(v, plane(t)(b)) >= 0)`.
   *
   * Hyperplanes are regenerated from `(dim, bits, tables, seed)` inside
-  * the expression (same fixed-seed Gaussian stream as
-  * `Similarity.hyperplanes`), so the plan tree carries four scalars
+  * the expression (a fixed-seed `scala.util.Random` Gaussian stream),
+  * so the plan tree carries four scalars
   * instead of tables x bits x dim literals, and executors rebuild the
   * planes locally — no closure shipping, bit-stable everywhere.
   */
@@ -232,8 +232,7 @@ case class SignLshBuckets(child: Expression, dim: Int, bits: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
-  // row-major (table, bit, component) — identical stream order to
-  // Similarity.hyperplanes(dim, bits, tables, seed)
+  // the seeded stream's draws, row-major (table, bit, component)
   @transient private lazy val flat: Array[Double] = {
     val rnd = new scala.util.Random(seed)
     Array.fill(tables * bits * dim)(rnd.nextGaussian())

@@ -56,16 +56,10 @@ object Bfs {
         .select(col("dst").as("node")).distinct()
         .join(settled, Seq("node"), "left_anti")
         .select(col("node"), lit(d.toLong).as("dist"))
-      // RDD-chain truncation at a fixed cadence: each level references
-      // the previous level's RDD, so a large-diameter traversal would
-      // otherwise drag an O(diameter) dependency graph through every
-      // job (Bridge.checkpointRows doc; round-12 verdict #3). The
-      // count() below materializes the level, which is when the local
-      // checkpoint actually severs the chain. (A checkpointed level
-      // rejected as empty is simply left to the ContextCleaner —
-      // unpersistRows skips locally-checkpointed frames by design.)
-      val next = if (d % 6 == 0) Bridge.checkpointRows(step)
-        else Bridge.persistRows(step)
+      // the count() below materializes the level, which is when a
+      // checkpoint round severs the chain (a checkpointed level
+      // rejected as empty is left to the ContextCleaner)
+      val next = Bridge.persistRound(step, d)
       live = next.count() > 0L
       if (live) levels += next
       else Bridge.unpersistRows(next) // rejected empty frontier

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.functions.IntSignLshKeys
 
 /** Binary / quantized embedding operators — the cheap-representation
   * end of the similarity stack. Modern retrieval pipelines binarize or
@@ -106,12 +109,13 @@ object BinaryEmbed {
     * float dots leave it rows-only): bucket keys from ±1 md5-parity
     * hyperplanes ([[graft.functions.IntSignLshKeys]]), candidates via
     * the (table, key) equi-join against the broadcast query side,
-    * exact integer-cosine rerank. The bucketing is part of the query
-    * semantics, so engine and oracle enumerate the SAME candidate set
-    * and the gate needs no recall argument. The reported cosine
-    * num/√(nₐ·nᵦ) is double-exact (nₐ·nᵦ < 2⁵³ under the |x| ≤ 1,
-    * dim·s² < 2⁶² contract; IEEE sqrt/div are correctly rounded), so
-    * ranking by it is deterministic in both engines.
+    * exact integer-cosine rerank over the [[IntVectors]] format. The
+    * bucketing is part of the query semantics, so engine and oracle
+    * enumerate the SAME candidate set and the gate needs no recall
+    * argument. The reported cosine is [[IntVectors.cosine]], so
+    * ranking by it is deterministic in both engines. `dim` is the
+    * vector width the overflow guard ([[IntVectors.requireExact]])
+    * and the key kernel assume.
     *
     * Scale shape: identical to the float path — narrow quantize +
     * key projections, query side broadcasts, candidates dedup on
@@ -121,31 +125,22 @@ object BinaryEmbed {
       queryIds: Seq[Long], k: Int, dim: Int = 64, bits: Int = 8,
       tables: Int = 6, s: Long = 1000L): DataFrame = {
     require(queryIds.nonEmpty && k >= 1, "need query ids and k >= 1")
-    import org.apache.spark.sql.graft.Bridge
-    import graft.functions.{IntSignLshKeys, LongDot}
-    def longDot(a: Column, b: Column): Column =
-      Bridge.column(LongDot(Bridge.expression(a), Bridge.expression(b)))
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.as("_id"),
-        transform(vec, x => floor(x.cast("double") * s + lit(0.5))
-          .cast("long")).as("_q"))
-      .withColumn("_na", longDot(col("_q"), col("_q")))
-      .withColumn("_keys", Bridge.column(IntSignLshKeys(
-        Bridge.expression(col("_q")), dim, bits, tables))))
-    val bucketed = q.select(col("_id"), col("_q"), col("_na"),
+    IntVectors.requireExact(dim, s)
+    val q = Bridge.persistRows(
+      withIntLshKeys(IntVectors.quantize(emb, vec, s, id.as("_id")),
+        dim, bits, tables))
+    val bucketed = q.select(col("_id"), col("q"), col("nq"),
       posexplode(col("_keys")).as(Seq("_table", "_key")))
     val qb = bucketed.filter(col("_id").isin(queryIds: _*))
       .select(col("_table"), col("_key"), col("_id").as("query_id"),
-        col("_q").as("_qq"), col("_na").as("_qna"))
+        col("q").as("_qq"), col("nq").as("_qna"))
     val cands = bucketed.join(broadcast(qb), Seq("_table", "_key"))
       .filter(col("_id") =!= col("query_id"))
       .dropDuplicates("query_id", "_id")
     val scored = cands
-      .withColumn("num", longDot(col("_qq"), col("_q")))
+      .withColumn("num", IntVectors.dot(col("_qq"), col("q")))
       .withColumn("cosine",
-        col("num").cast("double") /
-          sqrt((col("_qna") * col("_na")).cast("double")))
+        IntVectors.cosine(col("num"), col("_qna"), col("nq")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -153,6 +148,14 @@ object BinaryEmbed {
       .select(col("query_id"), col("_id").as("neighbor_id"),
         col("num"), col("cosine"), col("rank"))
   }
+
+  /** Adds `_keys`: the `tables` integer sign-LSH keys of the quantized
+    * vector `q` ([[graft.functions.IntSignLshKeys]]).
+    */
+  private def withIntLshKeys(df: DataFrame, dim: Int, bits: Int,
+      tables: Int): DataFrame =
+    df.withColumn("_keys", Bridge.column(IntSignLshKeys(
+      Bridge.expression(col("q")), dim, bits, tables)))
 
   /** Embedding-quality probe audit: leave-one-out k-NN label
     * consistency over a deterministically sampled probe set — the
@@ -362,8 +365,6 @@ object BinaryEmbed {
   def contrastiveTriplets(emb: DataFrame, id: Column, vec: Column,
       label: Column, tPct: Int = 30, dim: Int = 64, bits: Int = 8,
       tables: Int = 6, s: Long = 1000L, bucketCap: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    import graft.functions.IntSignLshKeys
     // best positive per anchor from the symmetrized near-dup pairs
     val pairs = intCosineNearDupPairs(emb, id, vec, tPct, dim, bits,
       tables, s, bucketCap)
@@ -380,14 +381,10 @@ object BinaryEmbed {
     // different-label bucket-mates under the same quantize+LSH keys;
     // signatures come from the RAW float signs (the [[
     // withBinarySignature]] contract), keys from the quantized vector
-    val q = Bridge.persistRows(withBinarySignature(
-      emb.filter(vec.isNotNull)
-        .select(id.as("_id"), label.as("_lab"), vec.as("_v"))
-        .withColumn("_q",
-          transform(col("_v"), x => floor(x.cast("double") * s + lit(0.5))
-            .cast("long"))), col("_v"))
-      .withColumn("_keys", Bridge.column(IntSignLshKeys(
-        Bridge.expression(col("_q")), dim, bits, tables)))
+    val q = Bridge.persistRows(withIntLshKeys(withBinarySignature(
+        IntVectors.quantize(emb, vec, s,
+          id.as("_id"), label.as("_lab"), vec.as("_v")), col("_v")),
+        dim, bits, tables)
       .select(col("_id"), col("_lab"), col("sig_lo").as("_lo"),
         col("sig_hi").as("_hi"), posexplode(col("_keys"))
           .as(Seq("_table", "_key"))))
@@ -421,59 +418,45 @@ object BinaryEmbed {
     * float dots are not SQL-reproducible, leaving it rows-only).
     *
     * Pipeline, every stage bit-identical in the DuckDB oracle:
-    *  1. quantize: qᵢ = ⌊xᵢ·s + ½⌋ (exact BIGINT), nₐ = Σ qᵢ²;
+    *  1. quantize to the [[IntVectors]] format (exact BIGINTs);
     *  2. bucket: `tables` integer sign-LSH keys from ±1 md5-parity
     *     hyperplanes ([[graft.functions.IntSignLshKeys]]) — the
     *     bucketing itself is part of the query semantics, so the gate
     *     needs no completeness argument: engine and oracle enumerate
     *     the SAME candidate set (all intra-bucket pairs, deduped);
-    *  3. verify: num = Σ qₐᵢ·qᵦᵢ > 0 and
-    *     10⁴·num² ≥ tPct²·nₐ·nᵦ in exact DECIMAL — equivalent to
-    *     cosine ≥ tPct/100 over the quantized vectors with no FP
-    *     comparison anywhere;
-    *  4. report cosine = num / √(nₐ·nᵦ): nₐ·nᵦ < 2⁵³ is double-exact
-    *     and IEEE sqrt/division are correctly rounded in both engines,
-    *     so even the double column hash-matches.
+    *  3. verify: [[IntVectors.cosineAtLeast]] — cosine ≥ tPct/100
+    *     over the quantized vectors with no FP comparison anywhere;
+    *  4. report [[IntVectors.cosine]], so even the double column
+    *     hash-matches.
     *
     * Scale shape: identical to the float path — narrow quantize/bucket
     * projections, salted band-key equi-join ([[BucketPairs]]), never
-    * all-pairs. Overflow contract: |x| ≤ 1 and dim·s² < 2⁶² keeps num
-    * and nₐ in 64-bit range; the threshold products live in
-    * DECIMAL(38,0) (HUGEINT oracle-side).
+    * all-pairs. Overflow contract: [[IntVectors]]'s, with `dim` the
+    * vector width; the threshold products live in DECIMAL(38,0)
+    * (HUGEINT oracle-side).
     */
   def intCosineNearDupPairs(emb: DataFrame, id: Column, vec: Column,
       tPct: Int = 30, dim: Int = 64, bits: Int = 8, tables: Int = 6,
       s: Long = 1000L, bucketCap: Int = 1000): DataFrame = {
-    require(tPct >= 1 && tPct <= 99, "tPct is an integer percent")
-    import org.apache.spark.sql.graft.Bridge
-    import graft.functions.{IntSignLshKeys, LongDot}
-    def longDot(a: Column, b: Column): Column =
-      Bridge.column(LongDot(Bridge.expression(a), Bridge.expression(b)))
+    val nearDup = IntVectors.cosineAtLeast(
+      col("num"), col("nq_a"), col("nq_b"), tPct)
+    IntVectors.requireExact(dim, s)
     // persisted pre-explode: BucketPairs consumes its input three
     // times (size lookup + both join sides); one row per vector
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.as("_id"),
-        transform(vec, x => floor(x.cast("double") * s + lit(0.5))
-          .cast("long")).as("_q"))
-      .withColumn("_na", longDot(col("_q"), col("_q")))
-      .withColumn("_keys", Bridge.column(IntSignLshKeys(
-        Bridge.expression(col("_q")), dim, bits, tables))))
-    val bucketed = q.select(col("_id"), col("_q"), col("_na"),
+    val q = Bridge.persistRows(
+      withIntLshKeys(IntVectors.quantize(emb, vec, s, id.as("_id")),
+        dim, bits, tables))
+    val bucketed = q.select(col("_id"), col("q"), col("nq"),
       posexplode(col("_keys")).as(Seq("_table", "_key")))
-    val dec = "decimal(38,0)"
     BucketPairs
       .boundedPairs(bucketed, Seq("_table", "_key"), "_id",
-        Seq("_q", "_na"), bucketCap)
+        Seq("q", "nq"), bucketCap)
       .dropDuplicates("_id_a", "_id_b")
-      .withColumn("num", longDot(col("_q_a"), col("_q_b")))
-      .filter(col("num") > 0 &&
-        col("num").cast(dec) * col("num") * lit(10000) >=
-          col("_na_a").cast(dec) * col("_na_b") * lit(tPct * tPct))
+      .withColumn("num", IntVectors.dot(col("q_a"), col("q_b")))
+      .filter(nearDup)
       .select(col("_id_a").as("id_a"), col("_id_b").as("id_b"),
         col("num"),
-        (col("num").cast("double") /
-          sqrt((col("_na_a") * col("_na_b")).cast("double"))).as("cosine"))
+        IntVectors.cosine(col("num"), col("nq_a"), col("nq_b")).as("cosine"))
   }
 
   /** Symmetric int8 scalar quantization with a per-vector scale:

@@ -138,8 +138,8 @@ object Bpe {
     * previous window formulation ([[encodeWindowed]], kept as the
     * spec-pinned relational reference) paid one exchange + R stacked
     * window passes over a relation ~5× the corpus row count.
-    * BpeSpec pins kernel == windowed == packed == sequential,
-    * including the l == r chain-parity cases.
+    * BpeSpec pins kernel == windowed == sequential, including the
+    * l == r chain-parity cases.
     */
   def encode(df: DataFrame, id: Column, text: Column,
       merges: Seq[(String, String)]): DataFrame = {
@@ -164,56 +164,6 @@ object Bpe {
     merges.foldLeft(charSymbols(df, id, text)) {
       case (s, (l, r)) => applyMerge(s, l, r)
     }
-
-  /** One greedy merge applied INSIDE a token array — the packed form
-    * of [[applyMerge]]: a left fold that joins the current token to
-    * the accumulator's last element when they match (l, r). Greedy
-    * equivalence: a merged token l+r can never re-match as l (strictly
-    * longer), so the fold cannot cascade within one merge, and for
-    * l == r chains the fold takes every second occurrence — exactly
-    * the run-parity rule (BpeSpec pins packed == window form ==
-    * sequential).
-    */
-  private def mergeInArray(arr: Column, l: String, r: String): Column =
-    aggregate(arr, array().cast("array<string>"),
-      (acc, t) => when(size(acc) > 0 &&
-          element_at(acc, -1) === lit(l) && t === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(t))))
-
-  /** [[encode]] without the per-character relation: each word's whole
-    * merge chain runs as one nested array fold per row, so the corpus
-    * is never exploded to symbols — ZERO exchanges and no window sort
-    * before whatever the caller aggregates, versus [[encode]]'s one
-    * exchange + sort of a per-character relation ~5× the corpus row
-    * count.
-    *
-    * Measured trade (sf0.1, local[32]): packed 5.5 s vs window 4.8 s —
-    * the fold's per-element array copies (higher-order functions
-    * rebuild the accumulator each step and sit outside whole-stage
-    * codegen) cost MORE CPU locally than the Tungsten sort+window they
-    * replace. q_bpe_encode therefore keeps the window form; this form
-    * is the right choice when the shuffle is the bottleneck (network-
-    * bound clusters, corpora whose symbol relation would spill) — the
-    * classic CPU-vs-shuffle trade, recorded here with numbers instead
-    * of assumed. Same output contract as [[encode]]:
-    * (doc_id, widx, pos, tok), pos order-only (dense here, sparse
-    * there); BpeSpec pins packed == window == sequential.
-    */
-  def encodePacked(df: DataFrame, id: Column, text: Column,
-      merges: Seq[(String, String)]): DataFrame = {
-    val ws = filter(split(lower(text), TextStats.WsRegex),
-      w => length(w) > 0)
-    def chars(w: Column): Column = codePoints(w)
-    def encodeWord(w: Column): Column =
-      merges.foldLeft(chars(w)) { case (a, (l, r)) =>
-        mergeInArray(a, l, r) }
-    df.select(id.as("doc_id"),
-        posexplode(transform(ws, w => encodeWord(w))))
-      .withColumnRenamed("pos", "widx")
-      .select(col("doc_id"), col("widx"), posexplode(col("col")))
-      .withColumnRenamed("col", "tok")
-  }
 
   /** Train `rounds` BPE merges over `text`: one row per learned
     * merge, (round 1.., left, right, merged, freq) with freq the
@@ -335,18 +285,12 @@ object Bpe {
         val (l, r, f) = (top.head.getString(0), top.head.getString(1),
           top.head.getAs[Long]("freq"))
         out += ((round.toLong, l, r, l + r, f))
-        // RDD-chain truncation at a fixed cadence: production BPE
-        // runs THOUSANDS of merge rounds, and each round's relation
-        // references the previous one — without severing, the chain
-        // depth equals the merge count (Bridge.checkpointRows doc;
-        // round-12 verdict #3). The next round's top-1 job
-        // materializes the relation, which is when the checkpoint
-        // cuts; unpersistRows skips checkpointed prevs by design.
-        val merged = syms.select(col("cnt"),
+        // production BPE runs THOUSANDS of merge rounds; the next
+        // round's top-1 job materializes the relation, which is when
+        // a checkpoint round cuts the chain
+        val next = Bridge.persistRound(syms.select(col("cnt"),
           Bridge.column(graft.functions.BpeMergeWord(
-            Bridge.expression(col("toks")), l, r)).as("toks"))
-        val next = if (round % 6 == 0) Bridge.checkpointRows(merged)
-          else Bridge.persistRows(merged)
+            Bridge.expression(col("toks")), l, r)).as("toks")), round)
         prev = syms
         syms = next
         round += 1

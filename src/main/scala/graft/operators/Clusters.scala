@@ -4,6 +4,7 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list, and the dedup
@@ -145,13 +146,10 @@ object Clusters {
       val t0 = if (debug) System.nanoTime() else 0L
       val next = smallStar(largeStar(cur, part), part)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // RDD-chain truncation at a fixed cadence: each round references
-      // the previous round's RDD, so a slow-converging forest would
-      // otherwise drag an O(rounds) dependency graph through every
-      // signature job (same policy as the DataFrame loops —
-      // Bridge.checkpointRows doc; round-12 verdict #3). The signature
-      // action below materializes the round, severing the chain here.
-      if (it % 6 == 5) next.localCheckpoint()
+      // the DataFrame loops' cadence (Bridge.persistRound) on the RDD
+      // form; the signature action below materializes the round,
+      // severing the chain here
+      if ((it + 1) % Bridge.CheckpointEvery == 0) next.localCheckpoint()
       val nextSig = signature(next)
       converged = nextSig == curSig
       if (debug) System.err.println(

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.functions.{LongDot, LongVecDot}
-
 /** Greedy k-center coreset selection (Gonzalez 1985 farthest-point
   * traversal) over an embedding corpus — the "pick k maximally
   * diverse exemplars" primitive a training-data pipeline uses for
@@ -16,90 +14,44 @@ import graft.functions.{LongDot, LongVecDot}
   * rule is a 2-approximation to the optimal k-center cover — the
   * best any polynomial algorithm achieves unless P=NP.
   *
-  * Same exactness recipe as [[KMeans]]: embeddings quantize once to
-  * integers (qᵢ = ⌊xᵢ·s + ½⌋), every distance is an exact 64-bit
-  * squared L2 expanded as n(p) − 2·p·c + n(c) with [[LongDot]] /
-  * [[LongVecDot]] codegen'd dots, and every selection tie breaks to
-  * the lowest id — so the traversal is bit-identical on any
-  * partitioning and fully replayable as relational SQL (the DuckDB
-  * oracle unrolls the k−1 argmax steps as MATERIALIZED CTEs).
+  * Embeddings take the [[IntVectors]] format: every distance is an
+  * exact 64-bit squared L2 and every selection tie breaks to the
+  * lowest id — so the traversal is bit-identical on any partitioning
+  * and fully replayable as relational SQL (the DuckDB oracle unrolls
+  * the k−1 argmax steps as MATERIALIZED CTEs).
   *
   * Scale shape: the quantized corpus is persisted once; each of the
-  * k−1 rounds is ONE narrow scan (a codegen'd t×dim dot block per
-  * row computing the running min-distance to the t selected centers)
-  * followed by a distributed top-1 (TakeOrdered — no global sort).
-  * The selected centers are O(k·dim) driver-resident metadata, the
-  * documented contract of [[KMeans]]'s centroid matrix and
-  * [[Similarity]]'s IVF build. Total work k²·dim·n/2 dots — choose
+  * k rounds is ONE narrow scan of [[IntVectors.greedy]] (a codegen'd
+  * t×dim dot block per row computing the running min-distance to the
+  * t selected centers) followed by a distributed top-1 (TakeOrdered —
+  * no global sort). The selected centers are O(k·dim) driver-resident
+  * metadata, the documented contract of [[KMeans]]'s centroid matrix
+  * and [[Similarity]]'s IVF build. Total work k²·dim·n/2 dots — choose
   * k ≪ √(budget/n·dim); for corpus-scale k, switch to k-means++
   * style sampling (this operator is the exact small-k tool).
   *
-  * Overflow contract (the [[KMeans]] one): |x| ≤ 1 ⇒ |q| ≤ s, so
-  * dots and distances are ≤ 4·dim·s² — dim·s² < 2⁶² enforced.
+  * Overflow contract: [[IntVectors]]'s.
   */
 object Coreset {
 
-  /** The quantized corpus (persisted) plus the selection sequence:
-    * (rank, id, coverage dist, quantized vector).
+  /** The quantized corpus (persisted) plus the selected rows in
+    * selection order, each with its `score`: the exact squared L2
+    * distance to the nearest previously-selected center, null for the
+    * first pick. With nothing selected every score is null, so the
+    * first pick is the lowest id — the deterministic seed.
     */
   private def traverse(emb: DataFrame, id: Column, vec: Column, k: Int,
-      s: Long): (DataFrame, Seq[(Long, Long, Option[Long], Array[Long])]) = {
-    require(k >= 1, "k must be >= 1")
-    require(s >= 1L, "scale must be positive")
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.cast("long").as("id"),
-        transform(vec, x => floor(x.cast("double") * s + lit(0.5))
-          .cast("long")).as("q"))
-      .withColumn("nq", Bridge.column(LongDot(
-        Bridge.expression(col("q")), Bridge.expression(col("q"))))))
-
-    val seedRows = q.orderBy(col("id")).limit(1).select("id", "q")
-      .collect()
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Option[Long], Array[Long])]
-    if (seedRows.nonEmpty) {
-      val dim = seedRows.head.getSeq[Long](1).length
-      require(dim.toLong * s * s < (1L << 62),
-        "dim * s^2 too large for exact 64-bit dots")
-      var centers = List(seedRows.head.getSeq[Long](1).toArray)
-      var selectedIds = Set(seedRows.head.getLong(0))
-      out += ((1L, seedRows.head.getLong(0), None, centers.head))
-      var t = 2
-      var exhausted = false
-      while (t <= k && !exhausted) {
-        // running min over the t-1 selected centers, all exact: the
-        // per-center distance is nq - 2*q·c + n(c) with c a reference
-        // object, so the whole block codegens into the scan. Selected
-        // ids are excluded (duplicate VECTORS are legitimate picks at
-        // d=0, but a selected POINT must not repeat — this is also
-        // what makes n < k return all n instead of looping)
-        val d = centers.map(c => distTo(c)).reduce(least(_, _))
-        // distributed top-1: farthest point, ties to the lowest id
-        val win = q.filter(!col("id").isInCollection(selectedIds))
-          .select(col("id"), col("q"), d.as("d"))
-          .orderBy(col("d").desc, col("id")).limit(1).collect()
-        if (win.isEmpty) exhausted = true
-        else {
-          val w = win.head
-          val c = w.getSeq[Long](1).toArray
-          out += ((t.toLong, w.getLong(0), Some(w.getAs[Long]("d")), c))
-          centers = c :: centers
-          selectedIds += w.getLong(0)
-          t += 1
-        }
-      }
+      s: Long): (DataFrame, Seq[Row]) = {
+    val q = Bridge.persistRows(
+      IntVectors.quantize(emb, vec, s, id.cast("long").as("id")))
+    // selected ids are excluded by the loop (duplicate VECTORS are
+    // legitimate picks at d=0, but a selected POINT must not repeat —
+    // this is also what makes n < k return all n instead of looping)
+    val sel = IntVectors.greedy(q, k, s) { centers =>
+      if (centers.isEmpty) lit(null).cast("long")
+      else centers.map(IntVectors.sqDist).reduce(least(_, _))
     }
-    (q, out.toSeq)
-  }
-
-  /** Exact squared L2 distance of the scan row's `q`/`nq` columns to
-    * the reference vector `c`.
-    */
-  private def distTo(c: Array[Long]): Column = {
-    val nc = c.map(x => x * x).sum
-    col("nq") - lit(2L) * Bridge.column(
-      LongVecDot(Bridge.expression(col("q")), c.toSeq)) + lit(nc)
+    (q, sel)
   }
 
   /** The k selected centers in selection order: one row per center,
@@ -117,7 +69,9 @@ object Coreset {
     // into a relation for the gate
     q.sparkSession.createDataFrame(
       q.sparkSession.sparkContext.parallelize(
-        sel.map { case (r, i, dO, _) => Row(r, i, dO.orNull) }, 1),
+        sel.zipWithIndex.map { case (r, i) =>
+          Row(i + 1L, r.getAs[Long]("id"), r.getAs[Any]("score"))
+        }, 1),
       StructType(Seq(StructField("sel_rank", LongType, nullable = false),
         StructField("id", LongType, nullable = false),
         StructField("dist", LongType, nullable = true))))
@@ -128,19 +82,17 @@ object Coreset {
     * dist), dist the exact squared L2 to the winning center, ties
     * broken to the lowest center id (so max(dist) over this relation
     * IS the k-center objective value). One extra narrow scan after
-    * the traversal — the [[KMeans.assign]] argmin shape with the
-    * selected centers as the cells.
+    * the traversal — [[IntVectors.nearest]], the [[KMeans.assign]]
+    * argmin, with the selected centers as the cells.
     */
   def kCenterAssign(emb: DataFrame, id: Column, vec: Column, k: Int,
       s: Long = 1000L): DataFrame = {
     val (q, sel) = traverse(emb, id, vec, k, s)
     require(sel.nonEmpty, "kCenterAssign needs at least one vector")
-    val cells = sel.map { case (_, cid, _, c) =>
-      struct(distTo(c).as("dist"), lit(cid).as("center_id"))
-    }
-    val best = array_min(array(cells.toIndexedSeq: _*))
+    val best = IntVectors.nearest(
+      sel.map(r => (r.getAs[Long]("id"), IntVectors.vectorOf(r))))
     q.select(col("id"),
-      best.getField("center_id").as("center_id"),
+      best.getField("id").as("center_id"),
       best.getField("dist").as("dist"))
   }
 }

@@ -39,7 +39,7 @@ object KCore {
     */
   def peel(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, "need k >= 1 and rounds >= 0")
-    import org.apache.spark.sql.graft.Bridge.{checkpointRows, persistRows}
+    import org.apache.spark.sql.graft.Bridge.{persistRound, persistRows}
 
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node"))
@@ -53,10 +53,9 @@ object KCore {
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select("a", "b")
-      // RDD-chain truncation at a fixed cadence — a real peel runs to
-      // a data-dependent fixpoint, so the chain must not scale with
-      // round count (Bridge.checkpointRows doc; round-12 verdict #3)
-      edges = if (r % 6 == 0) checkpointRows(next) else persistRows(next)
+      // a real peel runs to a data-dependent fixpoint, so the chain
+      // must not scale with round count
+      edges = persistRound(next, r)
     }
     degrees(edges)
   }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.{LongDot, LongVecDot}
-
 /** Integer-exact Lloyd k-means over an embedding corpus, and the
   * SemDeDup-style semantic near-duplicate pruning built on top of it.
   *
@@ -21,18 +19,18 @@ import graft.functions.{LongDot, LongVecDot}
   *
   * Float Lloyd iterations are not oracle-gateable (FP sums are
   * accumulation-ordered, argmin ties flip with them). This variant
-  * keeps every quantity integral, the [[PowerIteration]] /
-  * [[BinaryEmbed]] recipe applied to the clustering recursion:
+  * keeps every quantity integral, the [[IntVectors]] format applied
+  * to the clustering recursion:
   *
   *   qᵢⱼ   = ⌊xᵢⱼ·s + ½⌋                       (one-time quantization)
   *   c⁰ⱼ   = q of the j-th lowest id            (deterministic seeds)
   *   assignᵢ = argminⱼ Σₖ (qᵢₖ − cⱼₖ)²          (ties → lowest j)
   *   c'ⱼₖ  = sgn(Σᵢ qᵢₖ) · (|Σᵢ qᵢₖ| div nⱼ)    (empty cluster keeps cⱼ)
   *
-  * Distances expand to nᵢ − 2·qᵢ·cⱼ + n(cⱼ) with exact 64-bit dots
-  * ([[LongVecDot]], centroid as a reference object so the generated
-  * code is identical across rounds — one janino compile for the whole
-  * loop); integer sums are order-free; `div` on non-negative operands
+  * Distances are [[IntVectors.nearest]]'s exact expansion with the
+  * centroids as reference objects, so the generated code is identical
+  * across rounds — one janino compile for the whole loop; integer
+  * sums are order-free; `div` on non-negative operands
   * floors identically in Spark and DuckDB (signs handled explicitly
   * because the engines disagree on negative integral division). The
   * result is bit-identical on any partitioning and fully reproducible
@@ -51,10 +49,9 @@ import graft.functions.{LongDot, LongVecDot}
   * [[BucketPairs.boundedPairs]] on the cluster key, so a degenerate
   * mega-cluster salts across tasks instead of exploding one reducer.
   *
-  * Overflow contract (caller holds it, like [[PowerIteration]]):
-  * |x| ≤ 1 ⇒ |q| ≤ s, so dots are ≤ dim·s² (2⁶² for dim·s² bounds
-  * both nᵢ and qᵢ·cⱼ: centroid entries are means of q entries, so
-  * |c| ≤ s too); per-dimension centroid sums live in DECIMAL(38,0).
+  * Overflow contract: [[IntVectors]]'s; centroid entries are means of
+  * q entries, so |c| ≤ s too, and per-dimension centroid sums live in
+  * DECIMAL(38,0).
   */
 object KMeans {
 
@@ -71,15 +68,16 @@ object KMeans {
     * with a lower id whose exact integer cosine is ≥ tPct/100. One row
     * per surviving vector, columns (`id`, `cluster`).
     *
-    * The verdict is the [[BinaryEmbed.intCosineNearDupPairs]]
-    * predicate — num > 0 and 10⁴·num² ≥ tPct²·nₐ·nᵦ in exact
-    * DECIMAL — over pairs generated per cluster through the
+    * The verdict is [[IntVectors.cosineAtLeast]], the
+    * [[BinaryEmbed.intCosineNearDupPairs]] predicate, over pairs
+    * generated per cluster through the
     * skew-bounded [[BucketPairs]] join, never all-pairs.
     */
   def semanticDedup(emb: DataFrame, id: Column, vec: Column,
       k: Int = 8, rounds: Int = 2, tPct: Int = 60, s: Long = 1000L,
       bucketCap: Int = 1000): DataFrame = {
-    require(tPct >= 1 && tPct <= 99, "tPct is an integer percent")
+    val nearDup = IntVectors.cosineAtLeast(
+      IntVectors.dot(col("q_a"), col("q_b")), col("nq_a"), col("nq_b"), tPct)
     val a = Bridge.persistRows(
       assigned(emb, id, vec, k, rounds, s)._1
         .select(col("id"), col("cluster"), col("q"), col("nq")))
@@ -87,21 +85,10 @@ object KMeans {
       a.select(col("cluster"), col("id"), col("q"), col("nq")),
       keys = Seq("cluster"), id = "id", payload = Seq("q", "nq"),
       cap = bucketCap)
-    val num = longDot(col("q_a"), col("q_b"))
-    val t2 = lit(tPct.toLong * tPct)
-    val dropped = pairs
-      .filter(num > 0 &&
-        (lit(10000L) * num.cast(DecimalType(38, 0)) * num) >=
-          (t2 * col("nq_a").cast(DecimalType(38, 0)) * col("nq_b")))
+    val dropped = pairs.filter(nearDup)
       .select(col("id_b").as("id")).distinct()
     a.join(dropped, Seq("id"), "left_anti").select("id", "cluster")
   }
-
-  private def longDot(a: Column, b: Column): Column =
-    Bridge.column(LongDot(Bridge.expression(a), Bridge.expression(b)))
-
-  private def refDot(q: Column, c: Array[Long]): Column =
-    Bridge.column(LongVecDot(Bridge.expression(q), c.toSeq))
 
   /** IVF ANN top-k over the integer k-means coarse quantizer — the
     * hash-gateable twin of [[Similarity.ivfTopK]]: each query probes
@@ -131,28 +118,21 @@ object KMeans {
     // the final centroids, computed row-side against the
     // driver-resident matrix (same reference-object discipline as the
     // assignment scan)
-    val cells = cs.zipWithIndex.map { case (c, j) =>
-      val nc = c.map(x => x * x).sum
-      struct(
-        (col("nq") - lit(2L) * refDot(col("q"), c) + lit(nc)).as("dist"),
-        lit(j.toLong).as("cluster"))
-    }
     val probed = a.filter(col("id").isin(queryIds: _*))
       .select(col("id").as("query_id"), col("q").as("_qq"),
         col("nq").as("_qna"),
-        slice(array_sort(array(cells.toIndexedSeq: _*)), 1, nprobe)
+        slice(array_sort(IntVectors.centerDists(cells(cs))), 1, nprobe)
           .as("_probe"))
       .select(col("query_id"), col("_qq"), col("_qna"),
         explode(col("_probe")).as("_cell"))
       .select(col("query_id"), col("_qq"), col("_qna"),
-        col("_cell.cluster").as("cluster"))
+        col("_cell.id").as("cluster"))
     val cands = a.join(broadcast(probed), Seq("cluster"))
       .filter(col("id") =!= col("query_id"))
     val scored = cands
-      .withColumn("num", longDot(col("_qq"), col("q")))
+      .withColumn("num", IntVectors.dot(col("_qq"), col("q")))
       .withColumn("cosine",
-        col("num").cast("double") /
-          sqrt((col("_qna") * col("nq")).cast("double")))
+        IntVectors.cosine(col("num"), col("_qna"), col("nq")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("id"))
     scored.withColumn("rank", row_number().over(w))
@@ -168,36 +148,22 @@ object KMeans {
   private def assigned(emb: DataFrame, id: Column, vec: Column,
       k: Int, rounds: Int, s: Long): (DataFrame, Array[Array[Long]]) = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    require(s >= 1L, "scale must be positive")
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.as("id"),
-        transform(vec, x => floor(x.cast("double") * s + lit(0.5))
-          .cast("long")).as("q"))
-      .withColumn("nq", longDot(col("q"), col("q"))))
+    val q = Bridge.persistRows(IntVectors.quantize(emb, vec, s, id.as("id")))
     val dim = q.select(size(col("q"))).head().getInt(0)
-    require(dim.toLong * s * s < (1L << 62),
-      "dim * s^2 too large for exact 64-bit dots")
+    IntVectors.requireExact(dim, s)
 
     // deterministic seeds: the k lowest ids, cluster index = id rank.
     // k rows × dim longs of driver metadata (the IVF-build contract).
     var cs: Array[Array[Long]] = q.orderBy(col("id")).limit(k)
       .select(col("q")).collect()
-      .map(_.getSeq[Long](0).toArray)
+      .map(IntVectors.vectorOf)
     require(cs.length == k, s"need at least $k vectors to seed $k clusters")
 
     def assignOnce(): DataFrame = {
-      // argmin over k exact distances: lexicographic struct min gives
-      // (smallest dist, then lowest cluster) — the pinned tie-break
-      val cells = cs.zipWithIndex.map { case (c, j) =>
-        val nc = c.map(x => x * x).sum
-        struct(
-          (col("nq") - lit(2L) * refDot(col("q"), c) + lit(nc)).as("dist"),
-          lit(j.toLong).as("cluster"))
-      }
-      val best = array_min(array(cells.toIndexedSeq: _*))
+      // argmin over k exact distances, ties to the lowest cluster
+      val best = IntVectors.nearest(cells(cs))
       q.select(col("id"), col("q"), col("nq"),
-        best.getField("cluster").as("cluster"),
+        best.getField("id").as("cluster"),
         best.getField("dist").as("dist"))
     }
 
@@ -224,4 +190,8 @@ object KMeans {
     }
     (a, cs)
   }
+
+  /** The centroid matrix as (cluster id, centroid) centers. */
+  private def cells(cs: Array[Array[Long]]): Seq[(Long, Array[Long])] =
+    cs.toSeq.zipWithIndex.map { case (c, j) => (j.toLong, c) }
 }

@@ -42,7 +42,7 @@ object LabelProp {
     */
   def propagate(edges0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
-    import org.apache.spark.sql.graft.Bridge.{checkpointRows, persistRows}
+    import org.apache.spark.sql.graft.Bridge.{persistRound, persistRows}
 
     val edges = persistRows(
       edges0.select(col("a"), col("b"))
@@ -66,10 +66,7 @@ object LabelProp {
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("label")))
           .as("_b"))
         .select(col("node"), col("_b.label").as("label"))
-      // plan depth is already bounded (per-round persistRows), but
-      // the RDD chain grows one hop per round — sever it at a fixed
-      // cadence (Bridge.checkpointRows doc; round-12 verdict #3)
-      labels = if (r % 6 == 0) checkpointRows(next) else persistRows(next)
+      labels = persistRound(next, r)
     }
     labels
   }

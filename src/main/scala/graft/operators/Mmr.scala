@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.functions.LongVecDot
-
 /** Maximal Marginal Relevance diverse top-k (Carbonell & Goldstein,
   * SIGIR 1998): iteratively select the candidate maximizing
   * λ·relevance − (1−λ)·max-similarity-to-already-selected — the
@@ -17,12 +15,13 @@ import graft.functions.LongVecDot
   * λ is fixed at 1/2, which makes the argmax objective the INTEGER
   * rel − redundancy (the common 2·score scaling): relevance is the
   * exact quantized dot with the query vector and redundancy the exact
-  * max dot to the selected set — the [[KMeans]]/[[Coreset]] integer
-  * recipe, so the whole traversal is bit-identical on any
-  * partitioning and the DuckDB oracle unrolls it as MATERIALIZED CTE
-  * rounds (argmax ties → lowest id).
+  * max dot to the selected set — the [[IntVectors]] format, so the
+  * whole traversal is bit-identical on any partitioning and the
+  * DuckDB oracle unrolls it as MATERIALIZED CTE rounds (argmax ties →
+  * lowest id).
   *
-  * Scale shape ([[Coreset]]'s): the quantized pool is persisted once;
+  * Scale shape ([[Coreset]]'s, through the same
+  * [[IntVectors.greedy]] loop): the quantized pool is persisted once;
   * each of the k rounds is ONE narrow scan (a codegen'd t×dim dot
   * block computing the running max-redundancy) ending in a
   * distributed top-1 (TakeOrdered — no global sort); selected vectors
@@ -30,7 +29,7 @@ import graft.functions.LongVecDot
   * small-k tool; corpus-scale diverse sampling is [[Coreset]] /
   * cluster-stratified sampling.
   *
-  * Overflow contract: |x| ≤ 1 ⇒ |dot| ≤ dim·s², enforced < 2⁶².
+  * Overflow contract: [[IntVectors]]'s.
   */
 object Mmr {
 
@@ -43,52 +42,26 @@ object Mmr {
     */
   def diverseTopK(emb: DataFrame, id: Column, vec: Column, queryId: Long,
       k: Int, s: Long = 1000L): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    require(s >= 1L, "scale must be positive")
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.cast("long").as("id"),
-        transform(vec, x => floor(x.cast("double") * s + lit(0.5))
-          .cast("long")).as("q")))
+    val q = Bridge.persistRows(
+      IntVectors.quantize(emb, vec, s, id.cast("long").as("id")))
     val qRow = q.filter(col("id") === queryId).limit(1).collect()
     require(qRow.nonEmpty, s"query vector $queryId not found")
-    val qv = qRow.head.getSeq[Long](1).toArray
-    require(qv.length.toLong * s * s < (1L << 62),
-      "dim * s^2 too large for exact 64-bit dots")
-
-    def dotTo(c: Array[Long]): Column = Bridge.column(
-      LongVecDot(Bridge.expression(col("q")), c.toSeq))
-
+    val qv = IntVectors.vectorOf(qRow.head)
+    IntVectors.requireExact(qv.length, s)
     val pool = q.filter(col("id") =!= queryId)
-      .withColumn("rel", dotTo(qv))
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long, Long)]
-    var selected = List.empty[Array[Long]]
-    var selIds = Set.empty[Long]
-    var t = 1
-    var exhausted = false
-    while (t <= k && !exhausted) {
+      .withColumn("rel", IntVectors.dot(col("q"), qv))
+    // score = mmr = rel − red, so red is recovered as rel − score
+    val sel = IntVectors.greedy(pool, k, s) { selected =>
       val red =
         if (selected.isEmpty) lit(0L)
-        else selected.map(dotTo).reduce(greatest(_, _))
-      val win = pool.filter(!col("id").isInCollection(selIds + queryId))
-        .select(col("id"), col("q"), col("rel"), red.as("red"))
-        .orderBy((col("rel") - col("red")).desc, col("id")).limit(1)
-        .collect()
-      if (win.isEmpty) exhausted = true
-      else {
-        val w = win.head
-        out += ((t.toLong, w.getLong(0), w.getAs[Long]("rel"),
-          w.getAs[Long]("red")))
-        selected = w.getSeq[Long](1).toArray :: selected
-        selIds += w.getLong(0)
-        t += 1
-      }
+        else selected.map(IntVectors.dot(col("q"), _)).reduce(greatest(_, _))
+      col("rel") - red
     }
     val spark = emb.sparkSession
     spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq.map {
-        case (r, i, rel, red) => Row(r, i, rel, red, rel - red)
+      spark.sparkContext.parallelize(sel.zipWithIndex.map { case (r, i) =>
+        val (rel, mmr) = (r.getAs[Long]("rel"), r.getAs[Long]("score"))
+        Row(i + 1L, r.getAs[Long]("id"), rel, rel - mmr, mmr)
       }, 1),
       StructType(Seq(
         StructField("sel_rank", LongType, nullable = false),

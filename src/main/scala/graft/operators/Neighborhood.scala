@@ -114,12 +114,7 @@ object Neighborhood {
         .agg(laneMaxes.head, laneMaxes.tail: _*)
         .select(col("node") +: repacked: _*)
       if (round < rounds) {
-        // RDD-chain truncation at a fixed cadence (the count() below
-        // materializes the round, which is when the local checkpoint
-        // severs the chain — Bridge.checkpointRows doc; round-12
-        // verdict #3); unpersistRows skips checkpointed prevs by design
-        regs = if (round % 6 == 0) Bridge.checkpointRows(step)
-          else Bridge.persistRows(step)
+        regs = Bridge.persistRound(step, round)
         // superstep discipline: materialize round r, THEN free round
         // r−1's registers — at HyperBall round counts the dead rounds
         // would otherwise pile onto the storage budget until a full GC

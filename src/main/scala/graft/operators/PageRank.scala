@@ -84,16 +84,9 @@ object PageRank {
       // the RDD chain once the segment first materializes; planning
       // total stays linear (iters/cadence segments × O(cadence) each).
       // Not on the last round — the caller composes the returned plan.
-      if (i % LineageEvery == 0 && i < iters)
+      if (i % Bridge.CheckpointEvery == 0 && i < iters)
         r = Bridge.checkpointRows(r)
     }
     r
   }
-
-  /** Truncation cadence: segments of 6 rounds keep the per-segment
-    * Catalyst tree trivially small while paying at most iters/6
-    * materialization boundaries; any small constant works — what
-    * matters is that plan/lineage depth is O(cadence), not O(iters).
-    */
-  private val LineageEvery = 6
 }

@@ -31,9 +31,10 @@ import org.apache.spark.sql.types.DecimalType
   * quantization perturbs each step by ≤ dim/S₂ relative — far below
   * the gap on any corpus with a dominant direction.
   *
-  * Overflow contract (the caller holds it, like [[PageRank]]):
-  * |x| ≤ 1 and dim·S₁·S₂ < 2⁶² keeps dᵢ ≤ dim·S₁·S₂ and each product
-  * qᵢⱼ·dᵢ ≤ dim·S₁²·S₂ < 2⁶³ in range; the Σᵢ lives in DECIMAL(38,0).
+  * Overflow contract: [[IntVectors]]'s at scales (S₁, S₂), which keeps
+  * dᵢ ≤ dim·S₁·S₂ in range; each product qᵢⱼ·dᵢ ≤ dim·S₁²·S₂ is a
+  * Spark long multiply (< 2⁶³ at the default scales for dim ≤ 92),
+  * and the Σᵢ lives in DECIMAL(38,0).
   *
   * Scale shape: the quantized vectors are persisted once and each
   * round is ONE narrow scan — dᵢ is a codegen'd 64-term integer dot,
@@ -64,36 +65,21 @@ object PowerIteration {
   def project(emb: DataFrame, id: Column, vec: Column,
       iters: Int = 6, s1: Long = 1000000L, s2: Long = 100000L): DataFrame = {
     val (q, v) = iterate(emb, id, vec, iters, s1, s2)
-    q.select(col("id"), dot(v).as("score"))
+    q.select(col("id"), IntVectors.dot(col("q"), v).as("score"))
   }
-
-  /** Codegen'd exact dot of the quantized vector column against a
-    * driver-resident integer iterate. The iterate rides as a reference
-    * object, not `dim` literals, so the generated source is identical
-    * across rounds — one janino compile for the whole loop instead of
-    * one per round (see [[graft.functions.LongVecDot]]; the per-round
-    * recompiles were the measured dominant cost at sf0.1).
-    */
-  private def dot(v: Array[Long]): Column =
-    Bridge.column(graft.functions.LongVecDot(
-      Bridge.expression(col("q")), v.toSeq))
 
   private def iterate(emb: DataFrame, id: Column, vec: Column,
       iters: Int, s1: Long, s2: Long): (DataFrame, Array[Long]) = {
     require(iters >= 1, "iters must be >= 1")
-    require(s1 >= 1L && s2 >= 1L, "scales must be positive")
-    val q = Bridge.persistRows(emb
-      .filter(vec.isNotNull)
-      .select(id.as("id"),
-        transform(vec, x => floor(x.cast("double") * s1 + lit(0.5))
-          .cast("long")).as("q")))
+    val q = Bridge.persistRows(IntVectors.quantize(emb, vec, s1, id.as("id")))
     val dim = q.select(size(col("q"))).head().getInt(0)
-    require(dim.toLong * s1 * s2 < (1L << 62),
-      "dim * s1 * s2 too large for exact 64-bit dots")
+    IntVectors.requireExact(dim, s1, s2)
     var v = Array.fill(dim)(s2)
     for (_ <- 1 to iters) {
-      // one scan: d is a projection, the w_j are dim partial-agg sums
-      val row = q.select(col("q"), dot(v).as("d"))
+      // one scan: d is a projection (the iterate as a reference
+      // object, so every round compiles to the same code), the w_j
+      // are dim partial-agg sums
+      val row = q.select(col("q"), IntVectors.dot(col("q"), v).as("d"))
         .agg(
           sum((element_at(col("q"), 1) * col("d")).cast(DecimalType(38, 0)))
             .as("w0"),

@@ -80,17 +80,6 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Deterministic unit-free hyperplanes from a fixed seed — the SAME
-    * Gaussian stream, in the same (table, bit, component) order, that
-    * [[graft.functions.SignLshBuckets]] regenerates internally (kept
-    * for tests/diagnostics that want the planes as data).
-    */
-  private[graft] def hyperplanes(dim: Int, bits: Int, tables: Int,
-      seed: Long): Seq[Seq[Array[Double]]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(tables)(Seq.fill(bits)(Array.fill(dim)(rnd.nextGaussian())))
-  }
-
   /** All T sign-LSH bucket keys of `v` in one pass (array<long>). */
   private def lshKeys(v: Column, dim: Int, bits: Int, tables: Int,
       seed: Long): Column =

@@ -81,6 +81,26 @@ object Bridge {
     ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
   }
 
+  /** Rounds between lineage cuts in the iterative loops. Segments of 6
+    * rounds keep the per-segment Catalyst tree and RDD chain trivially
+    * small while paying at most rounds/6 checkpoint boundaries; any
+    * small constant works — what matters is that plan and lineage
+    * depth are O(cadence), not O(rounds) (LineageSpec).
+    */
+  val CheckpointEvery: Int = 6
+
+  /** Round `round` (1-based) of an iterative loop, persisted:
+    * [[checkpointRows]] every [[CheckpointEvery]]-th round, else
+    * [[persistRows]]. Each round's relation references the previous
+    * round's RDD, so without the cut a loop drags an O(rounds)
+    * dependency graph through every job. The cut happens when the
+    * round first materializes; [[unpersistRows]] skips checkpointed
+    * frames by design.
+    */
+  def persistRound(df: org.apache.spark.sql.DataFrame,
+      round: Int): org.apache.spark.sql.DataFrame =
+    if (round % CheckpointEvery == 0) checkpointRows(df) else persistRows(df)
+
   /** Eagerly free the blocks behind a [[persistRows]] frame.
     *
     * `Dataset.unpersist` consults only the CacheManager, so on a

@@ -108,9 +108,9 @@ class BpeSpec extends AnyFunSuite {
     assert(split(texts) === hof)
     assert(split(texts)(3) === Seq("𝕏", "𝕐", " ", "a", "𝄞", "b"))
     // empty word → empty array (the HOF form's sequence(1,0) DESCENDS
-    // and yields ["",""] — a latent quirk both charSymbols and
-    // encodePacked mask by filtering empty words before the split;
-    // the kernel does the sane thing)
+    // and yields ["",""] — a latent quirk charSymbols masks by
+    // filtering empty words before the split; the kernel does the
+    // sane thing)
     assert(split(Seq("")) === Seq(Seq.empty[String]))
   }
 
@@ -213,10 +213,10 @@ class BpeSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS graft_bpe_art")
   }
 
-  test("encodePacked == window-form encode == sequential, per " +
+  test("window-form encode == sequential and == kernel, per " +
       "(doc, word, position)") {
-    // includes the l == r chain cases where the run-parity rule and
-    // the fold must agree occurrence-for-occurrence
+    // includes the l == r chain cases where the run-parity rule must
+    // agree occurrence-for-occurrence
     val texts = Seq("the cat sat on the mat", "aaa aaaa aaaaa banana",
       "abab ababab xyxyx", "low lower lowest newest")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
@@ -228,14 +228,11 @@ class BpeSpec extends AnyFunSuite {
         .groupBy(t => (t._1, t._2))
         .map { case (k, v) => k -> v.sortBy(_._3).map(_._4).toSeq }
         .toSeq.sortBy(_._1)
-    val packed = tokens(
-      Bpe.encodePacked(df, col("doc_id"), col("text"), merges))
     val window = tokens(
       Bpe.encodeWindowed(df, col("doc_id"), col("text"), merges))
-    assert(packed === window)
     assert(tokens(Bpe.encode(df, col("doc_id"), col("text"), merges))
       === window) // round-17 kernel form agrees too
-    val flat = packed.flatMap(_._2).groupBy(identity)
+    val flat = window.flatMap(_._2).groupBy(identity)
       .map { case (t, xs) => t -> xs.size.toLong }
     assert(flat === refEncode(texts, merges))
   }
