@@ -1,573 +1,398 @@
 package graft
 
-/** Benchmark main: runs every SparkEntry query against
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
+/** Benchmark main: runs every SparkEntry query (or the queries named as
+  * arguments) against `SPARK_GRAFT_SF_DIR` on a `Sessions.fromEnv()`
+  * session, prints ONE JSON line and writes the complete record to
+  * `BENCH.json`. Those two variables are its only inputs: the protocol
+  * below is fixed in code, so every record made under one `protocol` tag
+  * was measured the same way.
   *
-  * A query that throws is reported in an `errors` map (name → message)
-  * and EXCLUDED from `queries`/`value` — a failure must never masquerade
-  * as a timing (round-1 verdict finding #3).
+  * What is timed: `fn(spark, sfDir)` plus a write to Spark's `noop`
+  * sink, which executes the full plan and consumes every output column.
+  * `count()` would let Catalyst prune unread projections, windows and
+  * sorts and time a bare scan instead (BenchPlanSpec pins this). The row
+  * count is taken once after the timed runs, where its pruning is what
+  * makes it cheap. A query that throws goes to `errors` and is excluded
+  * from every total: a failure must never read as a timing.
   *
-  * Robustness (round-2 verdict finding #4):
-  *  - each query runs up to `SPARK_GRAFT_BENCH_REPS` timed reps
-  *    (default 3) and reports the MEDIAN — single-shot numbers on a
-  *    noisy box varied 28–85s across identical code, making
-  *    regressions undetectable;
-  *  - the COMPLETE record (all per-query medians, row counts, per-rep
-  *    seconds+loadavg) is written to `BENCH.json`; stdout carries a
-  *    length-capped headline line sized to survive the driver's
-  *    2000-char tail capture (see the layout comment below).
+  * Per query (`protocol: "warm1_shed_min2"`):
+  *  - run 1 is warmup (codegen, JIT). Further runs stay warmup while each
+  *    improves on its predecessor by more than [[WarmRatio]], up to
+  *    [[MaxWarmups]]; iterative RDD-persist queries warm for 2–3 runs.
+  *    The first run that does not improve is timed rep 1: a discarded
+  *    stable run carries the same information as a rep.
+  *  - when the last warmup and rep 1 agree within [[WarmRatio]] the query
+  *    runs 2 timed reps, otherwise [[Reps]]: a third rep of a stable
+  *    query is noise, and instability is when reps matter. Single runs
+  *    of identical code varied 28–85 s on a noisy host. The committed
+  *    value is the lower median, so of 2 reps their min: they agree by
+  *    construction, and contamination only ever inflates a run.
+  *  - past 65% of [[BudgetSecs]] a query gets at most 2 warmups and 2
+  *    reps, past 85% 1 and 1. The whole invocation runs under a ~3600 s
+  *    timeout, so the bench must fit by construction, not by luck.
+  *    `n_shed` counts queries that ran fewer than [[Reps]] timed reps and
+  *    `wall_secs` the achieved wall.
   *
-  * Materialization (round-4 verdict finding #1): timing `df.count()`
-  * lets Catalyst rewrite the plan under `count(1)` — unreferenced
-  * projections, windows, and sorts are pruned, so a rank-window query
-  * collapses to a bare parquet scan count and the timing measures scan
-  * speed, not the declared work. Each rep therefore writes to Spark's
-  * built-in `noop` sink, which executes the full plan and serializes
-  * every output column while discarding rows at zero output cost —
-  * the same full-materialization semantics Verify's parquet write has.
-  * BenchPlanSpec pins this: the plan executed under the noop write
-  * retains its Window/Sort nodes where the count() plan drops them.
+  * Contamination and the fresh-JVM re-measure: a sweep in one JVM can
+  * carry JIT, code-cache and GC pressure from earlier queries and load
+  * from other processes into a query's reps (one committed number read
+  * 13.78 s where a standalone run gave 0.91 s). So:
+  *  - [[flagged]] marks a query whose timed reps disagree, or disagree
+  *    mildly while the host's 1-min loadavg jumped or was high.
+  *  - after the sweep, with this JVM's session stopped, flagged queries of
+  *    at least [[RemeasureFloor]] s are re-measured in fresh child JVMs
+  *    (`java -cp <same classpath> graft.Bench --child <queries>`), the
+  *    standalone rerun automated, [[ChildChunk]] per child. The child
+  *    reports its best timed rep; the parent commits [[adjudicated]].
+  *  - no child is spawned past [[BudgetSecs]]: its queries record
+  *    `remeasured: -1`, keep their median and count in `n_rm_skipped`.
   *
-  * Cross-round comparability (round-6 verdict finding #3): per-query
-  * output-row counts (`rows`) and the host's 1-minute loadavg at run
-  * start (`loadavg_start`) are recorded alongside the timings, so a
-  * future round can normalize to rows/s and discount runs on a busy
-  * box instead of misreading load noise as regressions. The row count
-  * is taken ONCE after the timed reps (count() lets Catalyst prune the
-  * plan, so it is cheap and never contaminates the noop-sink timings).
-  *
-  * Self-adjudication (round-13; round-12 verdict "What's wrong" #1 +
-  * next-round #2): three rounds running, the driver's committed
-  * headline numbers needed MANUAL standalone reruns to separate
-  * in-suite contamination (single-JVM JIT/code-cache/GC pressure,
-  * ambient load spikes) from real regressions — r12 committed
-  * q_json_fns at 13.78 s where the truth was 0.91 s. The bench now
-  * defends itself:
-  *  - a query is FLAGGED as contaminated when its timed reps disagree
-  *    with each other (spread threshold) or when the 1-min loadavg
-  *    JUMPS between its own reps (an external process landed
-  *    mid-measurement; the suite's own load is ~constant across one
-  *    query's reps);
-  *  - after the sweep (and after this JVM's session stops), flagged
-  *    queries are re-measured in FRESH CHILD JVMs — `java -cp <same
-  *    classpath> graft.Bench <queries>` — the manual standalone-rerun
-  *    recipe SCALE.md prescribes, automated; the child's best timed
-  *    rep adjudicates (min with the committed median), its median
-  *    rides along as the spread diagnostic;
-  *  - `SPARK_GRAFT_BENCH_CHILD=1` marks the child: it never recurses
-  *    into its own re-measure and never touches BENCH.json (the
-  *    parent's record would be clobbered).
-  *
-  * Adjudication coverage (round-15) and `value` = adjudicated total
-  * (round-16) are unchanged; see git history for the full lineage.
-  *
-  * WALL BUDGET (round-17; round-16 verdict "What's wrong" #1 — the
-  * driver's BENCH_r16 record is `rc: 124, parsed: null`): the driver
-  * wraps the whole sbt invocation in a ~3600 s timeout, r15 finished
-  * at 3558 s (1% margin), and round 16's six new queries blew through
-  * it — a bench that only fits when nothing is added fails every
-  * future round by construction. The harness now fits its cap by
-  * construction instead of by luck:
-  *  - MERGED warmup/rep stream: the first execution is always warmup
-  *    (one-time janino codegen); each further run that IMPROVES >20%
-  *    on its predecessor marks the stream still-warming (adaptive,
-  *    cap 4 — the round-10 rule, kept: iterative RDD-persist queries
-  *    warm for 2-3 executions); the FIRST STABLE run is counted as
-  *    timed rep 1 instead of being discarded. Previously min 2
-  *    warmups were always discarded; a stable query now costs 3
-  *    executions (warmup + 2 reps) instead of 5 — a ~40% sweep cut
-  *    with no loss: the discarded second warmup carried the same
-  *    information as a timed rep and was thrown away.
-  *  - REP SHEDDING on agreement: when the warmup and timed rep 1
-  *    agree within the 1.2× warm-variance threshold, the query runs
-  *    2 timed reps, not 3 (the third rep of a twice-stable query is
-  *    noise, not signal). Queries whose samples disagree keep the
-  *    full rep count — instability is exactly when reps matter. The
-  *    median of 2 reps is their MIN (lower median): the two agree
-  *    within 20% by construction, and contamination only ever
-  *    inflates, so the lower bound is the better estimate (the same
-  *    rule the child-best adjudication already applies).
-  *  - GLOBAL WALL BUDGET `SPARK_GRAFT_BENCH_BUDGET` (seconds,
-  *    default 2250, measured from main() entry): past 65% the sweep
-  *    caps every query at 2 warmups + 2 reps; past 85% at 1 + 1.
-  *    `n_shed` in the record counts queries that ran fewer timed
-  *    reps than configured; `wall_secs` records the achieved wall so
-  *    the margin is auditable in the committed record itself.
-  *  - BOUNDED RE-MEASURE TAIL: chunks grow 4 → 6 queries per child
-  *    JVM (fewer ~15 s session startups), the per-chunk quiesce wait
-  *    is 45 s hard (nanoTime-accounted — the old loop counted 5 s
-  *    per iteration but the || short-circuit skipped cpuBusy()'s 1 s
-  *    sleep, so a 120 s cap could spin ~96 real seconds; round-16
-  *    ADVICE), and no chunk is SPAWNED past the wall budget —
-  *    skipped flagged queries record `remeasured: -1` (committed
-  *    median stands, `n_rm_skipped` carries the count). A child's
-  *    waitFor is clamped to the remaining budget.
-  *  - ANCHORED child-output parsing (round-16 ADVICE): the child's
-  *    best/median values are extracted from the `"queries":{...}`
-  *    and `"queries_median":{...}` objects specifically, not
-  *    positionally from the whole stdout — a stray line can no
-  *    longer shift the median into the adjudication slot.
-  *  Children are exempt from pressure tiers (a re-measure must
-  *  measure exactly); they inherit the merged-warmup scheme.
+  * The loadavg and CPU-busy figures at start and per rep, and the output
+  * row counts, are recorded so a reader can discount a run on a busy
+  * host or normalize to rows/s instead of reading load noise as a
+  * regression. `value` is the adjudicated total, so a reader who takes
+  * `value` gets the meaningful number; `value_raw` is the sum of the
+  * committed medians, and `value_adjudicated` repeats `value` for
+  * tooling that reads that key.
   */
 object Bench {
+
+  /** Tag of this measurement protocol. `tools/bench_ratio.py` refuses to
+    * compare records across tags: this protocol commits min-of-2 for most
+    * queries where the earlier one (`median3`, untagged) committed
+    * median-of-3, a mild downward bias across the boundary.
+    */
+  val Protocol = "warm1_shed_min2"
+  val Reps = 3
+  val WarmRatio = 1.2
+  val MaxWarmups = 4
+  /** Wall budget in seconds from `main` entry, inside that timeout. */
+  val BudgetSecs = 2250.0
+
+  /** Startup quiesce: wait up to [[QuiesceWaitSecs]] for the 1-min
+    * loadavg and the CPU-busy fraction to settle, so a sweep does not
+    * start on a busy host. A permanently busy host still gets a record,
+    * annotated by its `loadavg_start`/`cpu_busy_start`.
+    */
+  val QuiesceLoad = 1.5
+  val QuiesceBusy = 0.25
+  val QuiesceWaitSecs = 240.0
+  /** Before each child: right after the sweep the host still drains the
+    * suite's own load (a child once re-measured a query at 2.8× its true
+    * cost for this reason), so wait up to 45 s of real time.
+    */
+  val RequiesceLoad = 3.0
+  val RequiesceWaitSecs = 45.0
+
+  /** Flag when the timed reps spread more than 1.5×: identical code on
+    * identical data does not vary that much warm (a 3× threshold let a
+    * 2.08× spread through). Loadavg alone is not contamination: the
+    * suite's own 1-min loadavg ramps for minutes at start, and a ramp
+    * inflates no rep when the reps agree. So a loadavg above
+    * [[LoadBusy]] at some timed rep flags only with a spread above
+    * [[MildSpread]]. That also covers a loadavg jump between reps: any
+    * jump of more than 2.0 ends above [[LoadBusy]].
+    */
+  val SpreadMax = 1.5
+  val MildSpread = 1.25
+  val LoadBusy = 1.0
+  /** Medians below this are JIT/GC-noise dominated and too small to
+    * distort a total (an sf0.001 smoke flagged 18 of them without it).
+    */
+  val MinSec = 0.5
+
+  /** Every flagged query at or above the floor is re-measured; below 1 s
+    * contamination cannot move the total materially. The cap is a runaway
+    * backstop, not the budget.
+    */
+  val RemeasureFloor = 1.0
+  val RemeasureCap = 48
+  /** Queries per child JVM, so its ~15 s session start-up amortizes. */
+  val ChildChunk = 6
+  val ChildWaitSecs = 900L
+
+  /** The bench's caller keeps only the last 2000 chars of the run's
+    * output and parses the JSON line out of that tail, so the whole
+    * line, sbt's success banner after it included, must fit: it carries
+    * the total, the slowest queries that fit [[LineBudget]], and the
+    * contamination lists capped at [[ListCap]] (48 re-measure entries
+    * alone are ~1.2 KB). BENCH.json carries everything.
+    */
+  val LineBudget = 1400
+  val ListCap = 12
+
+  /** First argument of a child run. A child re-measures exactly what it
+    * is given: no quiesce, no budget tiers, no re-measure of its own, and
+    * no BENCH.json (it would clobber the parent's record).
+    */
+  val ChildFlag = "--child"
+
+  /** Whether a query's timed reps (seconds, loadavg at rep start) are
+    * contaminated. `committed` is the query's committed value; the
+    * loadavg window is the timed reps only, since warmups see the
+    * suite's own loadavg ramp.
+    */
+  def flagged(committed: Double, timed: Seq[(Double, Double)]): Boolean =
+    committed >= MinSec && timed.nonEmpty && {
+      val secs = timed.map(_._1)
+      val spread = secs.max / math.max(secs.min, 1e-9)
+      spread > SpreadMax ||
+        spread > MildSpread && timed.exists(_._2 > LoadBusy)
+    }
+
+  /** The committed value of a query: both numbers are real runs of the
+    * same code and contamination only inflates, so the lower one; a
+    * child's −1 (failed or skipped) keeps the median. A fresh child can
+    * also carry residual cold start, which is why it is not taken alone.
+    */
+  def adjudicated(median: Double, childBest: Double): Double =
+    if (childBest > 0.0) math.min(median, childBest) else median
+
+  /** `(name, seconds)` slowest first, as many as fit in `room` chars when
+    * each is rendered `"name":s.sss` after a comma.
+    */
+  def headline(timings: Seq[(String, Double)], room: Int): Seq[(String, Double)] = {
+    var left = room
+    timings.sortBy(-_._2).filter { case (k, v) =>
+      val len = entry(k, r3(v)).length + 1
+      (len <= left) && { left -= len; true }
+    }
+  }
+
+  /** A child's `(best, median)` for each name, read from the
+    * `"queries":{...}` and `"queries_median":{...}` objects of its last
+    * line, −1 where missing. Anchoring on the objects keeps a stray line
+    * from shifting a median into the best slot; neither object nests.
+    */
+  def childValues(out: String, names: Seq[String]): Seq[(String, Double, Double)] = {
+    def objectOf(key: String): String = {
+      val anchor = Verify.jstr(key) + ":{"
+      val i = out.lastIndexOf(anchor)
+      val end = if (i < 0) -1 else out.indexOf('}', i)
+      if (end < 0) "" else out.substring(i + anchor.length - 1, end + 1)
+    }
+    val (best, median) = (objectOf("queries"), objectOf("queries_median"))
+    def valueIn(obj: String, name: String): Double =
+      (java.util.regex.Pattern.quote(Verify.jstr(name)) + ":(-?[0-9]+\\.[0-9]+)").r
+        .findFirstMatchIn(obj).map(_.group(1).toDouble).getOrElse(-1.0)
+    names.map(n => (n, valueIn(best, n), valueIn(median, n)))
+  }
+
+  /** What one run measured; [[record]] and [[line]] render it. */
+  final case class Run(
+      sfDir: String,
+      loadavgStart: Double,
+      cpuBusyStart: Double,
+      wallSecs: Double,
+      nShed: Int,
+      nRmSkipped: Int,
+      /** committed value per query: the median, a child's best rep */
+      timings: Seq[(String, Double)],
+      medians: Seq[(String, Double)],
+      rows: Seq[(String, Long)],
+      errors: Seq[(String, String)],
+      /** every run of each query: (seconds, loadavg at its start) */
+      reps: Seq[(String, Seq[(Double, Double)])],
+      contaminated: Seq[String],
+      remeasured: Seq[(String, Double)],
+      remeasuredMedian: Seq[(String, Double)]) {
+    def valueRaw: Double = timings.map(_._2).sum
+    def value: Double = {
+      val child = remeasured.toMap
+      timings.map { case (k, v) => adjudicated(v, child.getOrElse(k, -1.0)) }.sum
+    }
+  }
+
+  /** The complete record, written to BENCH.json. */
+  def record(r: Run): String = json(fields(r) ++ flags(r.contaminated, r.remeasured) ++ Seq(
+    "remeasured_median" -> secs(r.remeasuredMedian),
+    "value_adjudicated" -> r3(r.value),
+    "rows" -> json(r.rows.map { case (k, v) => k -> v.toString }),
+    "rep_secs_loadavg" -> json(r.reps.map { case (k, v) =>
+      k -> v.map { case (s, la) => s"[${r3(s)},$la]" }.mkString("[", ",", "]")
+    }),
+    "queries" -> secs(r.timings),
+    "value_raw" -> r3(r.valueRaw),
+    "value" -> r3(r.value)))
+
+  /** The stdout line: the shared fields with capped lists, the true list
+    * sizes, the headline queries, and for a child its medians, which the
+    * parent records next to the best reps: a min over few reps is biased
+    * low, and the median shows by how much.
+    */
+  def line(r: Run, child: Boolean): String = {
+    val head = fields(r) ++ Seq("n_contaminated" -> r.contaminated.size.toString,
+      "n_remeasured" -> r.remeasured.size.toString) ++
+      flags(r.contaminated.take(ListCap), r.remeasured.take(ListCap)) ++
+      Seq("value_adjudicated" -> r3(r.value), "n_queries" -> r.timings.size.toString)
+    val tail = (if (child) Seq("queries_median" -> secs(r.medians)) else Nil) ++
+      Seq("queries_full" -> Verify.jstr("BENCH.json"), "value_raw" -> r3(r.valueRaw),
+        "value" -> r3(r.value))
+    val room = LineBudget - json(head ++ Seq("queries" -> "{}") ++ tail).length
+    json(head ++ Seq("queries" -> secs(headline(r.timings, room))) ++ tail)
+  }
+
+  /** The fields the record and the line share, leading both. */
+  private def fields(r: Run): Seq[(String, String)] = Seq(
+    "metric" -> Verify.jstr("total"), "unit" -> Verify.jstr("sec"),
+    "reps" -> Reps.toString, "protocol" -> Verify.jstr(Protocol),
+    "loadavg_start" -> r.loadavgStart.toString,
+    "cpu_busy_start" -> r3(r.cpuBusyStart), "wall_secs" -> r3(r.wallSecs),
+    "budget" -> r3(BudgetSecs), "n_shed" -> r.nShed.toString,
+    "n_rm_skipped" -> r.nRmSkipped.toString, "sf" -> Verify.jstr(r.sfDir),
+    "errors" -> json(r.errors.map { case (k, v) => k -> Verify.jstr(v) }))
+
+  private def flags(contaminated: Seq[String],
+      remeasured: Seq[(String, Double)]): Seq[(String, String)] = Seq(
+    "contaminated" -> contaminated.map(Verify.jstr).mkString("[", ",", "]"),
+    "remeasured" -> secs(remeasured))
+
+  private def r3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def entry(k: String, v: String): String = s"${Verify.jstr(k)}:$v"
+  private def json(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => entry(k, v) }.mkString("{", ",", "}")
+  private def secs(m: Seq[(String, Double)]): String =
+    json(m.map { case (k, v) => k -> r3(v) })
+
+  private def loadavg(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** Whole-host CPU busy fraction over 1 s from /proc/stat (idle + iowait
+    * count as idle). This JVM sleeps while sampling, so it reads external
+    * load, and it clears within seconds of the host going quiet, where
+    * the 1-min loadavg right after launch is still dominated by the
+    * sbt/JVM start-up itself.
+    */
+  private def cpuBusy(): Double = {
+    def snap(): Array[Long] =
+      try scala.io.Source.fromFile("/proc/stat").getLines().next()
+        .trim.split("\\s+").drop(1).map(_.toLong)
+      catch { case _: Throwable => Array.empty[Long] }
+    val a = snap(); Thread.sleep(1000); val b = snap()
+    val d = b.zip(a).map { case (x, y) => x - y }
+    if (d.length < 5 || d.sum <= 0) -1.0
+    else 1.0 - (d(3) + d(4)).toDouble / d.sum
+  }
+
+  /** Waits until the host is quiet or `capSecs` of real time passed. */
+  private def quiesce(maxLoad: Double, capSecs: Double): Unit = {
+    val t0 = System.nanoTime()
+    while ((loadavg() > maxLoad || cpuBusy() > QuiesceBusy) &&
+        (System.nanoTime() - t0) / 1e9 < capSecs) Thread.sleep(3000)
+  }
+
+  /** Child re-measure of `chunk`: `(name, best, median)`, −1 on failure. */
+  private def remeasure(chunk: Seq[String], waitSecs: Long): Seq[(String, Double, Double)] =
+    try {
+      quiesce(RequiesceLoad, RequiesceWaitSecs)
+      // the parent's --add-opens (Spark on JDK 17 needs them) and -D
+      // flags; sbt passes "--add-opens" and its value as two arguments,
+      // other launchers the joined "--add-opens=..." form
+      val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.toArray(Array.empty[String]).toSeq
+      val opens = Seq("--add-opens", "--add-exports")
+      val inherited = jvm.indices.collect { case i
+        if jvm(i).startsWith("-D") || opens.exists(jvm(i).startsWith) ||
+          i > 0 && opens.contains(jvm(i - 1)) => jvm(i) }
+      val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++
+        inherited ++ Seq("-cp", System.getProperty("java.class.path"),
+          "graft.Bench", ChildFlag) ++ chunk
+      // Spark floods stderr; stdout is the one JSON line
+      val p = new ProcessBuilder(cmd: _*)
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      // wait before reading: the ~1.4 KB line fits the pipe buffer, and
+      // reading first would hang forever on a hung child
+      if (!p.waitFor(waitSecs, java.util.concurrent.TimeUnit.SECONDS))
+        p.destroyForcibly()
+      childValues(new String(p.getInputStream.readAllBytes(), "UTF-8"), chunk)
+    } catch { case _: Throwable => chunk.map(n => (n, -1.0, -1.0)) }
+
   def main(args: Array[String]): Unit = {
-    val benchT0 = System.nanoTime()
-    def elapsed(): Double = (System.nanoTime() - benchT0) / 1e9
+    val t0 = System.nanoTime()
+    def elapsed(): Double = (System.nanoTime() - t0) / 1e9
+    val child = args.headOption.contains(ChildFlag)
+    val only = args.toSet - ChildFlag
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val budget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2250").toDouble
-    // optional trailing query names restrict the run (local iteration);
-    // the driver's no-arg invocation benches everything
-    val only = args.toSet
     val spark = Sessions.fromEnv()
-
-    import Verify.jstr
-
-    // absorb JIT/codegen/session warmup so the first timed query isn't
-    // charged ~4s of one-time cost
+    // one-time JIT/codegen/session warmup, not charged to the first query
     spark.range(1000000L).selectExpr("sum(id)").collect()
+    if (!child) quiesce(QuiesceLoad, QuiesceWaitSecs)
+    val loadavgStart = loadavg()
+    val cpuBusyStart = cpuBusy()
 
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-
-    // Instantaneous whole-box CPU busy fraction over a 1 s window
-    // (/proc/stat deltas; idle = idle + iowait). Round-16, closing the
-    // round-15 sweep item: the 1-min LOADAVG floor right after launch
-    // is dominated by sbt/JVM startup itself (both r15 runs exited
-    // quiesce at la ≈ 1.4 against a 1.5 threshold — the gate barely
-    // gated), and la decays on a 1-min time constant no sleep loop
-    // should wait out. This JVM is asleep while sampling, so the busy
-    // fraction reads EXTERNAL load directly and clears within seconds
-    // of the box actually going quiet.
-    def cpuBusy(): Double = {
-      def snap(): Array[Long] =
-        try scala.io.Source.fromFile("/proc/stat").getLines().next()
-          .trim.split("\\s+").drop(1).map(_.toLong)
-        catch { case _: Throwable => Array.empty[Long] }
-      val a = snap(); Thread.sleep(1000); val b = snap()
-      if (a.length < 5 || b.length < 5) -1.0
-      else {
-        val d = b.zip(a).map { case (x, y) => x - y }
-        val tot = d.sum.toDouble
-        if (tot <= 0) -1.0 else 1.0 - (d(3) + d(4)) / tot
-      }
-    }
-
-    // Wait until the box is quiet or `capSecs` of REAL time passed
-    // (nanoTime-accounted — round-16 ADVICE: the old fixed +5 per
-    // iteration over-counted when loadavg() alone short-circuited the
-    // || and cpuBusy()'s 1 s sleep never ran).
-    def quiesce(laMax: Double, busyMax: Double, capSecs: Double): Unit = {
-      val t0 = System.nanoTime()
-      while ((loadavg() > laMax || cpuBusy() > busyMax) &&
-          (System.nanoTime() - t0) / 1e9 < capSecs) {
-        Thread.sleep(3000)
-      }
-    }
-
-    // Startup quiesce (round-15; round-14 verdict "What's wrong" #1):
-    // the r14 driver run STARTED at loadavg 2.27 and flagged 52/230
-    // queries — the flagger was right, but a sweep that begins on a
-    // busy box bakes contamination into every early number. Wait for
-    // BOTH the 1-min la (external sustained load) and the instant CPU
-    // busy fraction (the signal sbt's own startup can't pin — see
-    // cpuBusy) to settle, capped so a permanently-busy box still
-    // produces a record (the record then carries the elevated
-    // loadavg_start/cpu_busy_start as its own annotation).
-    // Children skip this: the parent already quiesces before spawning.
-    val childMode = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
-    val quiesceLa =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIESCE", "1.5").toDouble
-    val quiesceBusy =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIESCE_BUSY", "0.25").toDouble
-    val quiesceCap =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIESCE_WAIT", "240").toInt
-    if (!childMode) quiesce(quiesceLa, quiesceBusy, quiesceCap.toDouble)
-
-    val loadavgStart: Double = loadavg()
-    val cpuBusyStart: Double = cpuBusy()
-
-    val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // the median of the timed reps, recorded even in child mode (where
-    // `timings` carries the best rep) so a re-measure's SPREAD is
-    // visible next to the best it adjudicates with (round-15 ADVICE:
-    // a min over few reps is downward-biased — readers need the median
-    // alongside to see by how much)
-    val medians = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val rowCounts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // per-rep (seconds, loadavg-at-rep-start) — lets a later round
-    // separate warmup/JIT and background-load artifacts from real
-    // regressions instead of guessing from a single median
-    // (round-7 verdict task #7)
-    val repDetail =
-      scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Double, Double)]]
-    // timed-rep count per query (varies under agreement/pressure
-    // shedding — the contamination flagger below must window exactly
-    // the timed reps)
-    val timedN = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val timings, medians = Seq.newBuilder[(String, Double)]
+    val rows = Seq.newBuilder[(String, Long)]
+    val errors = Seq.newBuilder[(String, String)]
+    val reps = Seq.newBuilder[(String, Seq[(Double, Double)])]
+    val contaminated = Seq.newBuilder[(String, Double)]
     var nShed = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    for ((name, fn) <- SparkEntry.queries if only.isEmpty || only(name)) try {
       val all = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-      try {
-        def runOnce(): Unit = {
-          val la = loadavg()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          all += (((System.nanoTime() - t0) / 1e9, la))
-        }
-        // pressure tier (parent only — a child must measure exactly
-        // what it was asked, under the parent's configured reps)
-        val frac =
-          if (childMode || budget <= 0) 0.0 else elapsed() / budget
-        val (warmCap, repCap) =
-          if (frac > 0.85) (1, 1)
-          else if (frac > 0.65) (2, 2)
-          else (4, reps)
-        // merged warmup/rep stream (round-17, see header): run 1 is
-        // always warmup; keep running while the latest run improved
-        // >20% on its predecessor (still warming, each such
-        // predecessor is a warmup), cap `warmCap` warmups; the first
-        // NON-improving run is timed rep 1.
+      def runOnce(): Unit = {
+        val la = loadavg()
+        val t = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        all += (((System.nanoTime() - t) / 1e9, la))
+      }
+      val frac = if (child) 0.0 else elapsed() / BudgetSecs
+      val (warmCap, repCap) =
+        if (frac > 0.85) (1, 1) else if (frac > 0.65) (2, 2) else (MaxWarmups, Reps)
+      runOnce()
+      var stable = false
+      while (!stable && all.size <= warmCap) {
         runOnce()
-        var stable = false
-        while (!stable && all.size <= warmCap) {
-          runOnce()
-          stable = all(all.size - 2)._1 / all.last._1 <= 1.2
-        }
-        val warmN = all.size - 1
-        // agreement shedding: warmup and rep 1 agree within 1.2× both
-        // ways → 2 timed reps suffice; disagreement keeps full reps
-        val a0 = all(warmN - 1)._1; val b0 = all(warmN)._1
-        val agree =
-          math.max(a0, b0) / math.max(math.min(a0, b0), 1e-9) <= 1.2
-        val target = math.max(1, math.min(repCap,
-          if (agree) math.min(reps, 2) else reps))
-        while (all.size - warmN < target) runOnce()
-        if (target < reps) nShed += 1
-        val samples = all.drop(warmN)
-        val sorted = samples.map(_._1).sorted
-        // A CHILD re-measure exists to bound a flagged query's true
-        // cost from below — contamination only ever inflates a rep,
-        // never deflates it, and a fresh child JVM can carry residual
-        // cold-start the adaptive warmup missed on iterative
-        // multi-job queries (r14: q_pagerank re-measured at 2.1× its
-        // committed median, adjudicating nothing). The child therefore
-        // reports its BEST timed rep; the parent's committed value for
-        // a flagged query is min(parent median, child best) — see the
-        // adjudication block below. Parents keep the (lower) median.
-        val median = sorted((sorted.size - 1) / 2)
-        timings(name) = if (childMode) sorted.head else median
-        medians(name) = median
-        repDetail(name) = all.toSeq
-        timedN(name) = samples.size
-        rowCounts(name) = fn(spark, sfDir).count()
-      } catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
+        stable = all(all.size - 2)._1 / all.last._1 <= WarmRatio
       }
+      val warmN = all.size - 1
+      val (a, b) = (all(warmN - 1)._1, all(warmN)._1)
+      val agree = math.max(a, b) / math.max(math.min(a, b), 1e-9) <= WarmRatio
+      val target = math.min(repCap, if (agree) 2 else Reps)
+      while (all.size - warmN < target) runOnce()
+      if (target < Reps) nShed += 1
+      val timed = all.drop(warmN).toSeq
+      val sorted = timed.map(_._1).sorted
+      val median = sorted((sorted.size - 1) / 2)
+      val committed = if (child) sorted.head else median
+      timings += name -> committed
+      medians += name -> median
+      reps += name -> all.toSeq
+      if (flagged(committed, timed)) contaminated += name -> committed
+      rows += name -> fn(spark, sfDir).count()
+    } catch {
+      case e: Throwable =>
+        errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
     }
-    // stdout line layout (round-11; supersedes the round-8 attempt):
-    // the driver archives only the LAST 2000 chars of the run's output
-    // and then tries to parse a JSON line out of that tail — every
-    // BENCH_r{1..10}.json shows `parsed: null` because even with
-    // queries-last ordering the 173-query line is ~3.6 KB, so its
-    // opening brace never survives the tail cut. The stdout line must
-    // therefore FIT ENTIRELY inside the tail (with headroom for sbt's
-    // trailing "[success] Total time" line): print the total plus the
-    // slowest headline queries, length-capped, and nothing else on
-    // stdout. The complete per-query record (all medians, row counts,
-    // per-rep seconds+loadavg) goes to the BENCH.json file, which the
-    // quiesced BENCH_LOCAL_r{N} snapshots are committed from.
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-    // ---- contamination flags + fresh-JVM re-measure (round-13) ----
-    // overridable thresholds so the re-measure machinery is testable
-    // end-to-end (set SPREAD to 1.0 and everything flags)
-    // round-14 tightening (round-13 verdict "What's wrong" #2): the 3×
-    // spread threshold let q_fuzzy_join sail through with reps
-    // [4.08..8.46] (2.08× spread, committed 6.97 s vs true ~4 s).
-    // Identical code on identical data does not vary 1.5× warm — flag
-    // at >1.5× spread, and additionally when ambient load was high
-    // (any rep's la > 1.0) while the reps still mildly disagree
-    // (>1.25×). Pure la level with TIGHT reps stays unflagged: the
-    // suite's own la ramp inflates nothing when reps agree.
-    val spreadMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPREAD", "1.5").toDouble
-    val laJumpMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_LAJUMP", "2.0").toDouble
-    val laBusy = sys.env.getOrElse("SPARK_GRAFT_BENCH_LABUSY", "1.0").toDouble
-    // sub-half-second medians are JIT/GC-noise-dominated (an sf0.001
-    // smoke flags 24 queries without this floor, 18 of them sub-0.5 s
-    // — none of which can distort the record they appear in)
-    val minSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_MINSEC", "0.5").toDouble
-    val contaminated: Seq[String] = repDetail.flatMap { case (name, rl) =>
-      if (timings.getOrElse(name, 0.0) < minSec) None else {
-      val timedPairs = rl.takeRight(timedN.getOrElse(name, reps))
-      val timed = timedPairs.map(_._1)
-      // loadavg window = the TIMED reps only (round-15; round-14
-      // ADVICE): warmup reps naturally see the suite's own la ramp,
-      // and a busy rule fed warmup las fires on near-constant shared-
-      // host load + ordinary 1.25× JIT variance — r14 flagged 52/230,
-      // far past what the re-measure budget could adjudicate. The
-      // spread and la windows must cover the SAME reps.
-      val las = timedPairs.map(_._2).filter(_ >= 0.0)
-      val spreadRatio =
-        if (timed.isEmpty) 1.0 else timed.max / math.max(timed.min, 1e-9)
-      val spread = spreadRatio > spreadMax
-      // loadavg movement alone is NOT contamination — the suite's own
-      // 1-min la ramps for minutes at run start and decays after heavy
-      // queries, so a la signal only counts when the timed reps ALSO
-      // disagree (external interference inflates some reps, ramp
-      // inflates none) — first full-sweep learning, round 13
-      val laJump = las.nonEmpty && las.max - las.min > laJumpMax &&
-        spreadRatio > 1.25
-      val busy = las.nonEmpty && las.max > laBusy && spreadRatio > 1.25
-      if (spread || laJump || busy) Some(name) else None
-      }
-    }.toSeq
-    val remeasured = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val remeasuredMedian =
-      scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val flaggedQs = contaminated.result()
+    val worst = flaggedQs.filter(_._2 >= RemeasureFloor).sortBy(-_._2)
+      .take(RemeasureCap).map(_._1)
+    val remeasured = Seq.newBuilder[(String, Double, Double)]
     var nRmSkipped = 0
-    if (!childMode && contaminated.nonEmpty) {
-      // session down FIRST: the child JVM allocates its own executor
-      // threads/heap, and the whole point is a quiet fresh process
-      spark.stop()
-      // Coverage (round-15; round-14 verdict "What's wrong" #1): the
-      // r14 record carried 46 flagged-but-unremeasured numbers because
-      // the cap (6) was far below the flag count (52). Every flagged
-      // query whose committed median ≥ the floor (default 1 s — below
-      // that, contamination cannot distort the total materially) is
-      // re-adjudicated; the cap is a runaway backstop, not the
-      // budget. Children are CHUNKED (6 queries per child JVM,
-      // round-17: was 4) so the ~15 s session startup amortizes
-      // across the chunk — each chunk still runs in a fresh process.
-      val remeasureCap =
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REMEASURE_CAP", "48").toInt
-      val remeasureFloor =
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REMEASURE_FLOOR", "1.0").toDouble
-      val worst = contaminated
-        .filter(n => timings.getOrElse(n, 0.0) >= remeasureFloor)
-        .sortBy(n => -timings.getOrElse(n, 0.0))
-        .take(remeasureCap)
-      worst.grouped(6).foreach { chunk =>
-        // wall budget is a hard deadline for SPAWNING (round-17): a
-        // skipped re-measure costs nothing — the committed median
-        // stands, flagged — but a re-measure tail that overruns the
-        // driver's timeout costs the whole round's perf record
-        if (budget > 0 && elapsed() > budget) {
+    if (!child && worst.nonEmpty) {
+      spark.stop() // the child must have the host to itself
+      worst.grouped(ChildChunk).foreach { chunk =>
+        // spawning stops at the budget: a skipped re-measure costs
+        // nothing, a tail past the timeout costs the whole record
+        if (elapsed() > BudgetSecs) {
           nRmSkipped += chunk.size
-          chunk.foreach { name =>
-            remeasured(name) = -1.0; remeasuredMedian(name) = -1.0
-          }
-        } else try {
-          // quiesce first: the whole point is a QUIET re-measure, and
-          // right after the sweep the box is still draining the
-          // suite's own load (first full-sweep run re-measured
-          // q_bpe_encode at 2.8× its true cost for exactly this
-          // reason) — wait for the 1-min la to settle, capped at 45 s
-          // of real time
-          quiesce(3.0, quiesceBusy, 45.0)
-          val javaBin = System.getProperty("java.home") + "/bin/java"
-          val cp = System.getProperty("java.class.path")
-          // inherit the parent's module-opens and -D flags (Spark on
-          // JDK 17 needs the --add-opens set; a child without them
-          // would fail on any query touching the restricted APIs)
-          val raw = java.lang.management.ManagementFactory
-            .getRuntimeMXBean.getInputArguments
-            .toArray(Array.empty[String])
-          // sbt passes "--add-opens" and its value as TWO args; other
-          // launchers use the joined "--add-opens=..." form — keep both
-          val inherited = scala.collection.mutable.ArrayBuffer.empty[String]
-          var ai = 0
-          while (ai < raw.length) {
-            val a = raw(ai)
-            if ((a == "--add-opens" || a == "--add-exports") &&
-                ai + 1 < raw.length) {
-              inherited += a += raw(ai + 1); ai += 2
-            } else if (a.startsWith("--add-opens") ||
-                a.startsWith("--add-exports") || a.startsWith("-D")) {
-              inherited += a; ai += 1
-            } else ai += 1
-          }
-          val cmd = (Seq(javaBin) ++ inherited ++
-            Seq("-cp", cp, "graft.Bench") ++ chunk)
-          val pb = new ProcessBuilder(cmd: _*)
-          pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
-          pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-          // re-adjudicate under the PARENT'S settings: a parent run
-          // with non-default reps/thresholds must not re-measure its
-          // flagged queries under different ones (round-13 ADVICE)
-          Seq("SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_SPREAD",
-            "SPARK_GRAFT_BENCH_LAJUMP", "SPARK_GRAFT_BENCH_LABUSY")
-            .foreach { k =>
-              sys.env.get(k).foreach(v => pb.environment().put(k, v))
-            }
-          // Spark floods stderr; stdout is the one JSON line we want
-          pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-          val p = pb.start()
-          // waitFor BEFORE reading: the child's stdout is one ~1.4 KB
-          // line (fits the pipe buffer, so the child can't block on
-          // it), and reading first would hang forever on a hung child.
-          // The wait is clamped to the remaining wall budget (+60 s
-          // grace for a chunk already in flight at the deadline).
-          val waitSecs =
-            if (budget <= 0) 900L
-            else math.min(900L, math.max(60L, (budget - elapsed()).toLong + 60L))
-          val exited =
-            p.waitFor(waitSecs, java.util.concurrent.TimeUnit.SECONDS)
-          if (!exited) p.destroyForcibly()
-          val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-          // anchored parse (round-16 ADVICE): pull the child's
-          // `"queries":{...}` (best reps — adjudication values) and
-          // `"queries_median":{...}` (spread diagnostics) objects out
-          // of the line FIRST, then match names inside each — a stray
-          // stdout line can no longer shift the median into the
-          // adjudication slot. Neither map nests braces.
-          def mapOf(key: String): String = {
-            val anchor = "\"" + key + "\":{"
-            val i = out.indexOf(anchor)
-            if (i < 0) "" else {
-              val start = i + anchor.length - 1
-              val end = out.indexOf('}', start)
-              if (end < 0) "" else out.substring(start, end + 1)
-            }
-          }
-          val bestMap = mapOf("queries")
-          val medMap = mapOf("queries_median")
-          chunk.foreach { name =>
-            def valIn(m: String): Double = {
-              val re = ("\"" + java.util.regex.Pattern.quote(name) +
-                "\":(-?[0-9]+\\.[0-9]+)").r
-              re.findFirstMatchIn(m).map(_.group(1).toDouble).getOrElse(-1.0)
-            }
-            remeasured(name) = valIn(bestMap)
-            remeasuredMedian(name) = valIn(medMap)
-          }
-        } catch { case _: Throwable =>
-          chunk.foreach { name =>
-            remeasured(name) = -1.0; remeasuredMedian(name) = -1.0
-          }
-        }
+          remeasured ++= chunk.map(n => (n, -1.0, -1.0))
+        } else remeasured ++= remeasure(chunk, math.min(ChildWaitSecs,
+          math.max(60L, (BudgetSecs - elapsed()).toLong + 60L)))
       }
     }
-    val cs = contaminated.map(jstr).mkString("[", ",", "]")
-    val rms = remeasured.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }
-      .mkString("{", ",", "}")
-    val rmsMed = remeasuredMedian.map { case (k, v) =>
-      s"${jstr(k)}:${r3(v)}"
-    }.mkString("{", ",", "}")
-
-    val qs = timings.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }
-      .mkString("{", ",", "}")
-    val rs = rowCounts.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val reph = repDetail.map { case (k, v) =>
-      s"${jstr(k)}:" + v.map { case (sec, la) => s"[${r3(sec)},$la]" }
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = timings.values.sum
-    // Authoritative value for a flagged query with a successful
-    // fresh-JVM re-measure: min(committed median, child best rep).
-    // Both are real executions of identical code and contamination
-    // only ever INFLATES a timing, so the lower bound is the better
-    // estimate of true cost; `value_adjudicated` is the headline
-    // total under that rule (equals `value` when nothing was flagged
-    // or every re-measure failed). Round-15, closing r14 "What's
-    // wrong" #1/#2: the committed record now adjudicates itself.
-    val totalAdj = timings.map { case (k, v) =>
-      remeasured.get(k).filter(_ > 0.0).map(math.min(v, _)).getOrElse(v)
-    }.sum
-    val wallSecs = elapsed()
-    // `value` IS the adjudicated total (round-16; round-15 verdict
-    // "What's wrong" #2: any consumer that grabs `value` by habit must
-    // get the meaningful number, not the contaminated raw sum). The
-    // raw Σ medians moves to `value_raw`; `value_adjudicated` stays as
-    // an alias so r13–r15 cross-round tooling keeps reading.
-    // Protocol tag (round-18; r17 verdict #8): the r17 harness rebuild
-    // changed the per-query statistic — merged warmup + rep shedding
-    // means most queries commit min-of-2 instead of the old
-    // median-of-3, a mild downward bias that silently flatters any
-    // cross-protocol total. The record now declares its protocol so
-    // bench_ratio.py can refuse mixed comparisons instead of feeding
-    // on them (records without the tag predate it: r17 ran this same
-    // protocol untagged, r16 and earlier ran median3).
-    val protocol = "warm1_shed_min2"
-    val head = s""""metric":"total","unit":"sec","reps":$reps,""" +
-      s""""protocol":${jstr(protocol)},""" +
-      s""""loadavg_start":$loadavgStart,"cpu_busy_start":${r3(cpuBusyStart)},""" +
-      s""""wall_secs":${r3(wallSecs)},"budget":${r3(budget)},""" +
-      s""""n_shed":$nShed,"n_rm_skipped":$nRmSkipped,""" +
-      s""""sf":${jstr(sfDir)},"errors":$es,""" +
-      s""""contaminated":$cs,"remeasured":$rms,""" +
-      s""""remeasured_median":$rmsMed,""" +
-      s""""value_adjudicated":${r3(totalAdj)}"""
-    val full = s"""{$head,"rows":$rs,"rep_secs_loadavg":$reph,""" +
-      s""""queries":$qs,"value_raw":${r3(total)},"value":${r3(totalAdj)}}"""
-    // stdout-line variants of the contamination lists, capped so the
-    // line survives the driver's 2000-char tail capture even on a
-    // worst-case run (48 remeasured entries ≈ 1.2 KB would sink it);
-    // n_contaminated/n_remeasured carry the true counts, BENCH.json
-    // the complete lists.
-    val csLine =
-      if (contaminated.size <= 12) cs
-      else contaminated.take(12).map(jstr).mkString("[", ",", "]")
-    val rmsLine =
-      if (remeasured.size <= 12) rms
-      else remeasured.take(12).map { case (k, v) =>
-        s"${jstr(k)}:${r3(v)}"
-      }.mkString("{", ",", "}")
-    val headLine = s""""metric":"total","unit":"sec","reps":$reps,""" +
-      s""""protocol":${jstr(protocol)},""" +
-      s""""loadavg_start":$loadavgStart,"cpu_busy_start":${r3(cpuBusyStart)},""" +
-      s""""wall_secs":${r3(wallSecs)},"budget":${r3(budget)},""" +
-      s""""n_shed":$nShed,"n_rm_skipped":$nRmSkipped,""" +
-      s""""sf":${jstr(sfDir)},"errors":$es,""" +
-      s""""n_contaminated":${contaminated.size},""" +
-      s""""n_remeasured":${remeasured.size},""" +
-      s""""contaminated":$csLine,"remeasured":$rmsLine,""" +
-      s""""value_adjudicated":${r3(totalAdj)}"""
-    // Headline subset for the stdout line: slowest-first (the queries a
-    // perf reader wants), greedily packed under a 1400-char budget for
-    // the whole line — comfortably inside the 2000-char tail even after
-    // sbt appends its success banner.
-    val lineBudget = 1400
-    val headlineEntries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val fixedOverhead = headLine.length + 120 // braces, keys, value, n_queries
-    var used = fixedOverhead
-    timings.toSeq.sortBy(-_._2).foreach { case (k, v) =>
-      val ent = s"${jstr(k)}:${r3(v)}"
-      if (used + ent.length + 1 <= lineBudget) {
-        headlineEntries += ent; used += ent.length + 1
-      }
-    }
-    // a child's line additionally carries the timed-rep MEDIANS so the
-    // parent can record the re-measure's spread next to the best it
-    // adjudicates with (parsed by object anchor: best from `queries`,
-    // median from `queries_median`)
-    val qmLine = if (childMode)
-      s""""queries_median":${medians.map { case (k, v) =>
-        s"${jstr(k)}:${r3(v)}"
-      }.mkString("{", ",", "}")},"""
-    else ""
-    val line = s"""{$headLine,"n_queries":${timings.size},""" +
-      s""""queries":${headlineEntries.mkString("{", ",", "}")},$qmLine""" +
-      s""""queries_full":"BENCH.json","value_raw":${r3(total)},""" +
-      s""""value":${r3(totalAdj)}}"""
-    println(line)
-    if (!childMode) { // a child writing BENCH.json would clobber the
-      try {           // parent's full record
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
-          (full + "\n").getBytes("UTF-8"))
-      } catch { case _: Throwable => () } // stdout line is authoritative
-    }
-    spark.stop() // idempotent when the re-measure path stopped it already
-    if (errors.nonEmpty) sys.exit(1)
+    val rm = remeasured.result()
+    val run = Run(sfDir, loadavgStart, cpuBusyStart, elapsed(), nShed,
+      nRmSkipped, timings.result(), medians.result(), rows.result(),
+      errors.result(), reps.result(), flaggedQs.map(_._1),
+      rm.map(x => x._1 -> x._2), rm.map(x => x._1 -> x._3))
+    println(line(run, child))
+    if (!child)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
+        (record(run) + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () } // the stdout line is authoritative
+    spark.stop() // idempotent when the re-measure stopped it already
+    if (run.errors.nonEmpty) sys.exit(1)
   }
 }

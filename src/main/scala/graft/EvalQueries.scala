@@ -375,7 +375,7 @@ object EvalQueries {
          |  UNION ALL
          |  SELECT id_b, id_a, num, nb, na FROM cospairs),
          |posc AS (SELECT anchor, partner, num,
-         |  CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cosine
+         |  CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) AS cosine
          |  FROM posed),
          |bestp AS (
          |  SELECT anchor, partner AS pos_id, num AS pos_num,

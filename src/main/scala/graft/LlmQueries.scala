@@ -2312,7 +2312,7 @@ object LlmQueries {
     "q_cos_near_dup" ->
       s"""WITH $cosPairsCte
         |SELECT id_a, id_b, num,
-        |  CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cosine
+        |  CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) AS cosine
         |FROM cospairs
         |ORDER BY id_a, id_b""".stripMargin,
     "q_semantic_clusters" ->
@@ -3205,10 +3205,10 @@ object LlmQueries {
         |  JOIN w wa ON wa.id = c.query_id
         |  JOIN w wb ON wb.id = c.neighbor_id)
         |SELECT query_id, neighbor_id, num,
-        |  CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cosine,
+        |  CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) AS cosine,
         |  rank
         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE))
+        |        ORDER BY CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
         |          DESC, neighbor_id) AS rank
         |      FROM scored)
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
@@ -3255,10 +3255,10 @@ object LlmQueries {
         |  JOIN w wb ON wb.id = c.neighbor_id
         |)
         |SELECT query_id, neighbor_id, num,
-        |  CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cosine,
+        |  CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) AS cosine,
         |  rank
         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY CAST(num AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE))
+        |        ORDER BY CAST(num AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
         |          DESC, neighbor_id) AS rank
         |      FROM scored)
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,

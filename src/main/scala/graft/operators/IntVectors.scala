@@ -21,9 +21,14 @@ import graft.functions.{LongDot, LongVecDot}
   * in DECIMAL(38,0) — so no result depends on operand order or
   * partitioning, and the DuckDB oracles replay each step exactly.
   *
-  * Overflow contract: |x| ≤ 1 ⇒ |q| ≤ s, so a dot of vectors quantized
-  * at s₁ and s₂ is at most dim·s₁·s₂. [[requireExact]] is the one guard:
-  * s ≥ 1 and dim·s₁·s₂ < 2⁶², computed in `BigInt` so it cannot wrap.
+  * Overflow contract: |x| ≤ 1 ⇒ |q| ≤ s, so with m = dim·max(s₁, s₂)²
+  * every dot and norm is at most m, a squared distance
+  * nq − 2·q·c + n(c) at most 4m, and the cosine test's products
+  * 10⁴·num² and tPct²·nₐ·nᵦ below 10⁴·m². [[requireExact]] is the one
+  * guard: s ≥ 1 and m < 10¹⁷, computed in `BigInt` so it cannot wrap.
+  * That keeps distances in a signed 64-bit long (4m < 2⁶³) and the
+  * cosine test in DECIMAL(38,0) (10⁴·m² < 10³⁸). [[cosine]] multiplies
+  * nₐ·nᵦ (up to m²) in double, where it cannot overflow.
   *
   * Driver-side vectors (centers, the query, the selected set) enter a
   * scan as [[LongVecDot]] reference objects, not `dim` literals, so a
@@ -35,19 +40,20 @@ import graft.functions.{LongDot, LongVecDot}
   */
 object IntVectors {
 
-  private val DotBound = BigInt(1) << 62
+  private val Bound = BigInt(10).pow(17)
 
   private def requireScale(s: Long): Unit =
     require(s >= 1L, s"scale must be >= 1, got $s")
 
-  /** Every exact dot of a dim-`dim` vector quantized at `s1` with one
-    * quantized at `s2` fits in a signed 64-bit long.
+  /** Every quantity this module computes over dim-`dim` vectors quantized
+    * at `s1` and `s2` is exact: dim·max(s1, s2)² < 10¹⁷.
     */
   def requireExact(dim: Int, s1: Long, s2: Long): Unit = {
     requireScale(s1)
     requireScale(s2)
-    require(BigInt(dim) * s1 * s2 < DotBound,
-      s"dim * scale^2 = $dim * $s1 * $s2 is too large for exact 64-bit dots")
+    val s = s1 max s2
+    require(BigInt(dim) * s * s < Bound,
+      s"dim * scale^2 = $dim * $s^2 is too large for exact integer arithmetic")
   }
 
   def requireExact(dim: Int, s: Long): Unit = requireExact(dim, s, s)
@@ -103,11 +109,12 @@ object IntVectors {
       lit(tPct.toLong * tPct) * na.cast(dec) * nb
   }
 
-  /** num/√(nₐ·nᵦ) as a double: correctly rounded in both engines while
-    * nₐ·nᵦ < 2⁵³, so it ranks identically in the oracle.
+  /** num/√(nₐ·nᵦ) in double, the product of the norms included: each
+    * step is one correctly rounded IEEE operation in both engines, so it
+    * ranks identically in the oracle.
     */
   def cosine(num: Column, na: Column, nb: Column): Column =
-    num.cast("double") / sqrt((na * nb).cast("double"))
+    num.cast("double") / sqrt(na.cast("double") * nb.cast("double"))
 
   /** Greedy top-1 selection over `pool` (an `id`, `q` relation), at most
     * `k` rounds. Each round is ONE scan: drop the selected ids, score

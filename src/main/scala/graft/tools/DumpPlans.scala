@@ -10,7 +10,8 @@ import graft._
   * `.explain("formatted")` evidence behind SCALE.md's plan-shape
   * claims, reviewable without running anything. Each query is
   * EXECUTED first (noop-equivalent full materialization) at the bench
-  * scale (sf0.1 by default, `SPARK_GRAFT_SF_DIR` to override), so the
+  * scale (sf0.1 by default, `SPARK_GRAFT_SF_DIR` to override) on the
+  * `Sessions.fromEnv()` session Bench and Verify use, so the
   * dumped shapes are the AQE FINAL plans the bench actually runs —
   * runtime bloom filters, broadcast demotions, and skew splits
   * included — not the pre-execution initial plans. Regenerate after
@@ -59,7 +60,7 @@ object DumpPlans {
     "q_resample_interp" -> "grid interpolation — one key exchange, frames both directions, bounded grid")
 
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.fromEnv()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf = dir.split('/').last
     val sb = new StringBuilder

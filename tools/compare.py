@@ -1,12 +1,38 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL
 from outDir/oracle_sql.json in DuckDB over the sfDir parquet tables and
-compare to the Spark parquet dumps (exact, column-name-sorted).
+compare to the Spark parquet dumps (exact, column-name-sorted, row by row,
+NaN == NaN and null == null, arrays and structs element by element).
 
 Usage: compare.py <sfDir> <outDir> [query ...]
 """
 import json, sys, glob, os
 import duckdb
+import numpy as np
+import pandas as pd
+
+
+def same(x, y):
+    """Exact equality of two cells, recursing into lists and structs."""
+    if isinstance(x, np.ndarray):
+        x = x.tolist()
+    if isinstance(y, np.ndarray):
+        y = y.tolist()
+    if isinstance(x, (list, tuple)) or isinstance(y, (list, tuple)):
+        return (isinstance(x, (list, tuple)) and isinstance(y, (list, tuple))
+                and len(x) == len(y) and all(map(same, x, y)))
+    if isinstance(x, dict) or isinstance(y, dict):
+        return (isinstance(x, dict) and isinstance(y, dict)
+                and x.keys() == y.keys() and all(same(x[k], y[k]) for k in x))
+    if pd.isna(x) or pd.isna(y):
+        return bool(pd.isna(x) and pd.isna(y))
+    return bool(x == y)
+
+
+def mismatches(a, b):
+    """Row positions where columns a and b differ."""
+    return [i for i, (x, y) in enumerate(zip(a, b)) if not same(x, y)]
+
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
@@ -39,27 +65,11 @@ for name, sql in sorted(oracle.items()):
     if len(odf) != len(sdf):
         print(f"{name}: ROWS MISMATCH spark={len(sdf)} oracle={len(odf)}"); fail += 1; continue
     odf = odf.reset_index(drop=True); sdf = sdf.reset_index(drop=True)
-    neq = []
-    import numpy as np
-    for c in odf.columns:
-        a, b = odf[c], sdf[c]
-        is_arr = any(isinstance(x, (list, tuple, np.ndarray))
-                     for x in list(a.head(5)) + list(b.head(5)))
-        if is_arr:
-            # list/array cells: pandas == raises; compare stringified
-            ok = [str(x) for x in a] == [str(x) for x in b]
-        else:
-            # scalar columns must compare exactly — any error here is a
-            # real mismatch (e.g. incompatible dtypes), not a fallback case
-            eq = (a == b) | (a.isna() & b.isna())
-            ok = bool(eq.all())
-        if not ok:
-            neq.append(c)
-    if neq:
-        print(f"{name}: VALUE MISMATCH in cols {neq}")
-        c = neq[0]
-        bad = (~((odf[c] == sdf[c]) | (odf[c].isna() & sdf[c].isna()))).idxmax()
-        print(f"  first diff row {bad}: oracle={odf.iloc[bad].to_dict()} spark={sdf.iloc[bad].to_dict()}")
+    bad = {c: rows for c in odf.columns if (rows := mismatches(odf[c], sdf[c]))}
+    if bad:
+        print(f"{name}: VALUE MISMATCH in cols {list(bad)}")
+        row = next(iter(bad.values()))[0]
+        print(f"  first diff row {row}: oracle={odf.iloc[row].to_dict()} spark={sdf.iloc[row].to_dict()}")
         fail += 1
     else:
         print(f"{name}: OK ({len(sdf)} rows)")
