@@ -33,280 +33,13 @@ object EvalQueries {
         .select(col("doc_id").as("id"), (col("lang") === "en").as("_y")),
         "id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val catalogue: Seq[(String, Query)] = Seq(
     // Tie-aware ROC AUC of the class-0 classifier score predicting
     // lang='en' — exact Mann-Whitney numerator/denominator BIGINTs
     // via the two-phase prefix scan, one trailing division.
-    "q_auc" -> ((s, d) =>
-      Eval.rocAuc(scoredDocs(s, d), col("score"), col("_y"))),
-
-    // Reliability table: 10 equal-width score bins, per-bin count /
-    // positives / positive rate — the calibration audit next to AUC.
-    "q_calibration" -> ((s, d) =>
-      Eval.calibrationBins(scoredDocs(s, d), col("score"), col("_y"),
-          bins = 10)
-        .orderBy("bin")),
-
-    // Two-sample Kolmogorov-Smirnov drift statistic between the
-    // content-addressed train and val splits on order value (exact
-    // cents) — the binning-free distribution-shift test; both CDFs
-    // ride ONE packed two-phase prefix scan.
-    "q_ks_test" -> ((s, d) => {
-      val o = Sampling.splitAssign(
-          Tables.orders(s, d).select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("v")),
-          col("o_orderkey"),
-          Seq(("train", 80), ("val", 10), ("test", 10)))
-        .filter(col("split") =!= "test")
-      Eval.ksTest(o, col("v"), col("split") === "train")
-    }),
-
-    // Multiclass confusion matrix of the k-NN probe eval — same
-    // probe/vote/majority machinery as q_knn_eval, finer aggregation:
-    // WHICH labels get confused, not just how often.
-    "q_knn_confusion" -> ((s, d) =>
-      BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
-          col("embedding"), col("label"), probeMod = 10, k = 5)
-        .orderBy("label_true", "label_pred")),
-
-    // Contrastive triplet assembly: best cosine near-dup as the
-    // positive, nearest different-label LSH bucket-mate as the hard
-    // negative — the metric-learning training-pair producer, composed
-    // from the same verified pair relations the dedup queries gate.
-    "q_triplets" -> ((s, d) =>
-      BinaryEmbed.contrastiveTriplets(Tables.embeddings(s, d),
-          col("vec_id"), col("embedding"), col("label"), tPct = 30)
-        .orderBy("anchor_id")),
-
-    // Precision-recall curve: per-distinct-score threshold
-    // (tp, fp, fn, precision, recall) — the imbalance-honest
-    // companion surface to ROC (quality gates are heavily imbalanced;
-    // ROC AUC alone overstates them).
-    "q_pr_curve" -> ((s, d) =>
-      Eval.prCurve(scoredDocs(s, d), col("score"), col("_y"))
-        .orderBy("threshold")),
-
-    // Average precision (PR-AUC) as one row — per-threshold terms
-    // quantized to fixed point with half-up integer rounding so the
-    // sum is order-free and hash-gates exactly (see
-    // Eval.averagePrecision's quantization contract).
-    "q_pr_auc" -> ((s, d) =>
-      Eval.averagePrecision(scoredDocs(s, d), col("score"), col("_y"))),
-
-    // Precision/recall at top-k under the explicit (score DESC,
-    // doc_id ASC) tie-break — the "how good are the first k
-    // retrievals" eval at three operating points.
-    "q_precision_at_k" -> ((s, d) =>
-      Eval.precisionAtK(scoredDocs(s, d), col("score"), col("id"),
-          col("_y"), Seq(10, 50, 100))
-        .orderBy("k")),
-
-    // Chi-square homogeneity between the train and val splits over
-    // $1000 price bands — the categorical drift gate next to
-    // q_ks_test (same splits, binned-value domain).
-    "q_chi2_drift" -> ((s, d) => {
-      val o = Sampling.splitAssign(
-          Tables.orders(s, d).select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("cents")),
-          col("o_orderkey"),
-          Seq(("train", 80), ("val", 10), ("test", 10)))
-        .filter(col("split") =!= "test")
-      Eval.chiSquareDrift(o, expr("cents DIV 100000"),
-        col("split") === "train")
-    }),
-
-    // Top label-discriminative terms for lang='en' by per-term
-    // chi-square — log-free, so even the double statistic hash-gates.
-    "q_chi2_terms" -> ((s, d) =>
-      graft.operators.TermStats.discriminativeTerms(
-          Tables.documents(s, d), col("doc_id"), col("text"),
-          col("lang") === "en", k = 25)
-        .orderBy("rank")),
-
-    // Per-label precision/recall/F1 derived from the k-NN confusion
-    // matrix — every ratio ONE division of exact marginal integers
-    // (f1 = 2tp/(2tp+fp+fn) avoids the float harmonic mean).
-    "q_knn_f1" -> ((s, d) =>
-      Eval.confusionF1(
-          BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
-            col("embedding"), col("label"), probeMod = 10, k = 5),
-          col("label_true"), col("label_pred"), col("n"))
-        .orderBy("label")),
-
-    // Cohen's kappa over the same matrix — chance-corrected agreement
-    // with exact BIGINT numerator/denominator.
-    "q_kappa" -> ((s, d) =>
-      Eval.cohensKappa(
-        BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
-          col("embedding"), col("label"), probeMod = 10, k = 5),
-        col("label_true"), col("label_pred"), col("n"))),
-
-    // Mean reciprocal rank of the first same-label neighbor —
-    // reciprocal ranks quantized by exact integer division so the
-    // scalar hash-gates (averagePrecision's fixed-point recipe).
-    "q_mrr" -> ((s, d) =>
-      BinaryEmbed.knnMrr(Tables.embeddings(s, d), col("vec_id"),
-        col("embedding"), col("label"), probeMod = 10, k = 5)),
-
-    // Mean binary nDCG@5 of the probe k-NN lists — the
-    // position-sensitive retrieval eval; log₂ discounts enter only as
-    // frozen exact-rational-rounded integer constants, each probe's
-    // ratio fixed-point-quantized before the order-free sum.
-    "q_ndcg" -> ((s, d) =>
-      BinaryEmbed.knnNdcg(Tables.embeddings(s, d), col("vec_id"),
-        col("embedding"), col("label"), probeMod = 10, k = 5)),
-
-    // Gate-threshold survival curve over the classifier score with
-    // token mass as the weight — "where do I set the gate" as a
-    // relation: per candidate threshold, surviving docs AND tokens.
-    "q_gate_tradeoff" -> ((s, d) =>
-      Eval.survivalByThreshold(
-          scoredDocs(s, d).join(Tables.documents(s, d)
-            .select(col("doc_id").as("id"),
-              size(split(col("text"), TextStats.WsRegex)).cast("long").as("w")),
-            "id"),
-          col("score"), col("w"))
-        .orderBy("threshold")),
-
-    // Split conformal calibration of the classifier score: exact
-    // integer conformal rank k = ceil((n_cal+1)·0.9), threshold as a
-    // distributed order statistic, coverage audited on the held-out
-    // half — the distribution-free guarantee machinery.
-    "q_conformal" -> ((s, d) =>
-      Eval.conformalCalibrate(scoredDocs(s, d), col("id"), col("score"),
-        alphaNum = 1, alphaDen = 10)),
-
-    // Per-source ROC AUC — the fairness/segment audit: does the gate
-    // rank en-docs above others equally well in EVERY source, or is
-    // one slice at coin-flip? One exchange on the group key.
-    "q_auc_by_group" -> ((s, d) =>
-      Eval.rocAucByGroup(
-          scoredDocs(s, d).join(Tables.documents(s, d)
-            .select(col("doc_id").as("id"), col("source")), "id"),
-          col("source"), col("score"), col("_y"))
-        .orderBy("grp")),
-
-    // One-pass Poisson-bootstrap error bars on the corpus mean doc
-    // length: 32 deterministic hash-derived Poisson(1) replicates,
-    // every replicate's totals exact BIGINTs.
-    "q_bootstrap_ci" -> ((s, d) =>
-      Eval.poissonBootstrap(Tables.documents(s, d), col("doc_id"),
-          length(col("text")), reps = 32)
-        .orderBy("rep")),
-
-    // Equal-MASS reliability bins (the quantile companion to
-    // q_calibration's equal-width ones): each bin holds ~1/10 of the
-    // observations up to score ties — the binning practitioners use
-    // when the score distribution is skewed.
-    "q_calibration_quantile" -> ((s, d) =>
-      Eval.calibrationQuantileBins(scoredDocs(s, d), col("score"),
-          col("_y"), bins = 10)
-        .orderBy("bin")),
-
-    // Gini coefficient of the per-document token mass — the corpus
-    // concentration audit ("does 1% of documents hold 50% of the
-    // tokens?"); exact rational via the distinct-value prefix scan,
-    // no sort.
-    // text.isNotNull mirrors the oracle's WHERE: size(NULL array) is
-    // -1 under Spark's legacy sizeOfNull, which would fire gini's
-    // negative-value guard instead of dropping the row
-    "q_gini" -> ((s, d) =>
-      Eval.gini(Tables.documents(s, d).filter(col("text").isNotNull),
-        size(split(col("text"), TextStats.WsRegex)).cast("long"))),
-
-    // Herfindahl-Hirschman concentration of character mass across
-    // sources — the data-mixing audit next to q_gini: "how many
-    // effective sources does this corpus really have?" One combinable
-    // group-by, one metadata aggregate, exact BIGINT num/den.
-    "q_source_hhi" -> ((s, d) =>
-      Eval.hhi(Tables.documents(s, d), col("source"), col("n_chars"))),
-
-    // Fleiss' kappa over a deterministic 3-rater annotation panel
-    // (votes are the hashBucket chain on doc_id and rater — the
-    // machinery is what's under test; real annotations would arrive
-    // as the same (item, category) relation). Exact cleared-fraction
-    // BIGINTs, one trailing division.
-    "q_fleiss_kappa" -> ((s, d) => {
-      val ratings = Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(sequence(lit(0L), lit(2L))).as("rater"))
-        .withColumn("vote",
-          Sampling.hashBucket(col("doc_id") * 5 + col("rater"), 4))
-      Eval.fleissKappa(ratings, col("doc_id"), col("vote"))
-    }),
-  )
-
-  /** Shared DuckDB CTE chain: class-0 hashed-classifier scores (the
-    * replay of Classifier.hashNgramScore's kernel — identical gram,
-    * bucket, and weight arithmetic to the q_hash_classifier oracle)
-    * joined with the lang='en' label.
-    */
-  private val scoredCte =
-    """grams AS (
-      |  SELECT doc_id,
-      |    unnest([substr(lower(text), i, 3)
-      |            for i in range(1, length(text) - 1)]) AS g
-      |  FROM documents WHERE text IS NOT NULL AND length(text) >= 3
-      |),
-      |feats AS (
-      |  SELECT doc_id,
-      |    ('0x' || substr(md5(g), 1, 15))::BIGINT % 64 AS b,
-      |    count(*) AS cnt
-      |  FROM grams GROUP BY doc_id, b
-      |),
-      |w0 AS (
-      |  SELECT b.b,
-      |    ('0x' || substr(md5('w:0:' || b.b::VARCHAR), 1, 15))::BIGINT
-      |      % 7 - 3 AS w
-      |  FROM range(0, 64) b(b)
-      |),
-      |lab AS (
-      |  SELECT f.doc_id, CAST(sum(w0.w * f.cnt) AS BIGINT) AS score,
-      |    CASE WHEN max(d.lang) = 'en' THEN 1 ELSE 0 END AS y
-      |  FROM feats f JOIN w0 ON w0.b = f.b
-      |  JOIN documents d ON d.doc_id = f.doc_id
-      |  GROUP BY f.doc_id
-      |)""".stripMargin
-
-  /** The q_knn_eval oracle's probe-prediction CTE chain, terminal
-    * relation `pred(query_id, q_lab, pred_lab)`.
-    */
-  private val knnPredCte =
-    """s AS (SELECT vec_id, label,
-      |  CAST(list_sum([CASE WHEN embedding[i] > 0
-      |      THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE CAST(0 AS BIGINT) END
-      |    for i in range(1, 33)]) AS BIGINT) AS sig_lo,
-      |  CAST(list_sum([CASE WHEN embedding[i] > 0
-      |      THEN (CAST(1 AS BIGINT) << (i - 33)) ELSE CAST(0 AS BIGINT) END
-      |    for i in range(33, 65)]) AS BIGINT) AS sig_hi
-      |  FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, label AS q_lab,
-      |             sig_lo AS q_lo, sig_hi AS q_hi
-      |      FROM s
-      |      WHERE (((((vec_id % 1000000007) * 2654435761) % 1000000007)
-      |              + 40503) * 2654435761) % 1000000007 % 10 = 0),
-      |d AS (SELECT q.query_id, q.q_lab, s.vec_id AS nid,
-      |  s.label AS n_lab,
-      |  CAST(bit_count(xor(q.q_lo, s.sig_lo))
-      |     + bit_count(xor(q.q_hi, s.sig_hi)) AS BIGINT) AS hamming
-      |  FROM q JOIN s ON s.vec_id <> q.query_id),
-      |topk AS (
-      |  SELECT * FROM (SELECT *, row_number() OVER
-      |    (PARTITION BY query_id ORDER BY hamming, nid) AS rnk FROM d)
-      |  WHERE rnk <= 5),
-      |votes AS (
-      |  SELECT query_id, q_lab, n_lab, count(*) AS v
-      |  FROM topk GROUP BY query_id, q_lab, n_lab),
-      |pred AS (
-      |  SELECT query_id, q_lab, n_lab AS pred_lab FROM (
-      |    SELECT *, row_number() OVER
-      |      (PARTITION BY query_id ORDER BY v DESC, n_lab) AS pr
-      |    FROM votes)
-      |  WHERE pr = 1)""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "q_auc" ->
-      s"""WITH $scoredCte,
+    "q_auc" -> Query((s, d) =>
+      Eval.rocAuc(scoredDocs(s, d), col("score"), col("_y")),
+      Oracle(s"""WITH $scoredCte,
          |g AS (SELECT score, CAST(sum(y) AS BIGINT) AS pos,
          |  CAST(count(*) - sum(y) AS BIGINT) AS neg FROM lab GROUP BY score),
          |c AS (SELECT score, pos, neg,
@@ -321,9 +54,15 @@ object EvalQueries {
          |  CASE WHEN sum(pos) = 0 OR sum(neg) = 0 THEN NULL
          |       ELSE CAST(sum(pos * (2 * neg_below + neg)) AS DOUBLE)
          |         / CAST(2 * sum(pos) * sum(neg) AS DOUBLE) END AS auc
-         |FROM c""".stripMargin,
-    "q_calibration" ->
-      s"""WITH $scoredCte,
+         |FROM c""".stripMargin)),
+
+    // Reliability table: 10 equal-width score bins, per-bin count /
+    // positives / positive rate — the calibration audit next to AUC.
+    "q_calibration" -> Query((s, d) =>
+      Eval.calibrationBins(scoredDocs(s, d), col("score"), col("_y"),
+          bins = 10)
+        .orderBy("bin"),
+      Oracle(s"""WITH $scoredCte,
          |mm AS (SELECT min(score) AS mn, max(score) AS mx FROM lab)
          |SELECT CAST((score - mn) * 10 // (mx - mn + 1) AS BIGINT) AS bin,
          |  CAST(min(score) AS BIGINT) AS score_lo,
@@ -331,9 +70,22 @@ object EvalQueries {
          |  CAST(count(*) AS BIGINT) AS n,
          |  CAST(sum(y) AS BIGINT) AS n_pos,
          |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
-         |FROM lab, mm GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q_ks_test" ->
-      """WITH sp AS (
+         |FROM lab, mm GROUP BY 1 ORDER BY bin""".stripMargin)),
+
+    // Two-sample Kolmogorov-Smirnov drift statistic between the
+    // content-addressed train and val splits on order value (exact
+    // cents) — the binning-free distribution-shift test; both CDFs
+    // ride ONE packed two-phase prefix scan.
+    "q_ks_test" -> Query((s, d) => {
+      val o = Sampling.splitAssign(
+          Tables.orders(s, d).select(col("o_orderkey"),
+            round(col("o_totalprice") * 100).cast("long").as("v")),
+          col("o_orderkey"),
+          Seq(("train", 80), ("val", 10), ("test", 10)))
+        .filter(col("split") =!= "test")
+      Eval.ksTest(o, col("v"), col("split") === "train")
+    },
+      Oracle("""WITH sp AS (
         |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
         |    (((((o_orderkey % 1000000007) * 2654435761) % 1000000007)
         |       + 40503) * 2654435761) % 1000000007 % 100 AS b
@@ -354,14 +106,29 @@ object EvalQueries {
         |  CASE WHEN t.n_a = 0 OR t.n_b = 0 THEN NULL
         |       ELSE CAST(max(abs(c.cum_a * t.n_b - c.cum_b * t.n_a))
         |           AS DOUBLE) / CAST(t.n_a * t.n_b AS DOUBLE) END AS ks
-        |FROM c, t GROUP BY t.n_a, t.n_b""".stripMargin,
-    "q_knn_confusion" ->
-      s"""WITH $knnPredCte
+        |FROM c, t GROUP BY t.n_a, t.n_b""".stripMargin)),
+
+    // Multiclass confusion matrix of the k-NN probe eval — same
+    // probe/vote/majority machinery as q_knn_eval, finer aggregation:
+    // WHICH labels get confused, not just how often.
+    "q_knn_confusion" -> Query((s, d) =>
+      BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
+          col("embedding"), col("label"), probeMod = 10, k = 5)
+        .orderBy("label_true", "label_pred"),
+      Oracle(s"""WITH $knnPredCte
          |SELECT q_lab AS label_true, pred_lab AS label_pred,
          |  CAST(count(*) AS BIGINT) AS n
-         |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_triplets" ->
-      s"""WITH ${LlmQueries.cosPairsCte},
+         |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+
+    // Contrastive triplet assembly: best cosine near-dup as the
+    // positive, nearest different-label LSH bucket-mate as the hard
+    // negative — the metric-learning training-pair producer, composed
+    // from the same verified pair relations the dedup queries gate.
+    "q_triplets" -> Query((s, d) =>
+      BinaryEmbed.contrastiveTriplets(Tables.embeddings(s, d),
+          col("vec_id"), col("embedding"), col("label"), tPct = 30)
+        .orderBy("anchor_id"),
+      Oracle(s"""WITH ${LlmQueries.cosPairsCte},
          |sg AS (SELECT vec_id AS id, label,
          |  CAST(list_sum([CASE WHEN embedding[i] > 0
          |      THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE CAST(0 AS BIGINT) END
@@ -405,9 +172,16 @@ object EvalQueries {
          |SELECT p.anchor AS anchor_id, p.pos_id, p.pos_num, p.pos_cosine,
          |  b.neg_id, b.neg_label, b.neg_hamming
          |FROM bestp p JOIN bestn b ON b.anchor = p.anchor
-         |ORDER BY anchor_id""".stripMargin,
-    "q_pr_curve" ->
-      s"""WITH $scoredCte,
+         |ORDER BY anchor_id""".stripMargin)),
+
+    // Precision-recall curve: per-distinct-score threshold
+    // (tp, fp, fn, precision, recall) — the imbalance-honest
+    // companion surface to ROC (quality gates are heavily imbalanced;
+    // ROC AUC alone overstates them).
+    "q_pr_curve" -> Query((s, d) =>
+      Eval.prCurve(scoredDocs(s, d), col("score"), col("_y"))
+        .orderBy("threshold"),
+      Oracle(s"""WITH $scoredCte,
          |g AS (SELECT score, CAST(sum(y) AS BIGINT) AS pos,
          |  CAST(count(*) - sum(y) AS BIGINT) AS neg FROM lab GROUP BY score),
          |c AS (SELECT score, pos, neg,
@@ -422,9 +196,15 @@ object EvalQueries {
          |  CASE WHEN t.n_pos = 0 THEN NULL
          |       ELSE CAST(c.tp AS DOUBLE) / CAST(t.n_pos AS DOUBLE) END
          |    AS recall
-         |FROM c, t ORDER BY threshold""".stripMargin,
-    "q_pr_auc" ->
-      s"""WITH $scoredCte,
+         |FROM c, t ORDER BY threshold""".stripMargin)),
+
+    // Average precision (PR-AUC) as one row — per-threshold terms
+    // quantized to fixed point with half-up integer rounding so the
+    // sum is order-free and hash-gates exactly (see
+    // Eval.averagePrecision's quantization contract).
+    "q_pr_auc" -> Query((s, d) =>
+      Eval.averagePrecision(scoredDocs(s, d), col("score"), col("_y")),
+      Oracle(s"""WITH $scoredCte,
          |g AS (SELECT score, CAST(sum(y) AS BIGINT) AS pos,
          |  CAST(count(*) - sum(y) AS BIGINT) AS neg FROM lab GROUP BY score),
          |c AS (SELECT score, pos,
@@ -440,9 +220,16 @@ object EvalQueries {
          |       ELSE CAST(sum((2 * c.pos * c.tp * 1000000000 + c.den)
          |           // (2 * c.den)) AS DOUBLE)
          |         / CAST(t.n_pos * 1000000000 AS DOUBLE) END AS ap
-         |FROM c, t GROUP BY t.n_pos""".stripMargin,
-    "q_precision_at_k" ->
-      s"""WITH $scoredCte,
+         |FROM c, t GROUP BY t.n_pos""".stripMargin)),
+
+    // Precision/recall at top-k under the explicit (score DESC,
+    // doc_id ASC) tie-break — the "how good are the first k
+    // retrievals" eval at three operating points.
+    "q_precision_at_k" -> Query((s, d) =>
+      Eval.precisionAtK(scoredDocs(s, d), col("score"), col("id"),
+          col("_y"), Seq(10, 50, 100))
+        .orderBy("k"),
+      Oracle(s"""WITH $scoredCte,
          |r AS (SELECT doc_id, y,
          |  row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
          |  FROM lab),
@@ -454,9 +241,22 @@ object EvalQueries {
          |       ELSE CAST(sum(r.y) AS DOUBLE) / CAST(t.n_pos AS DOUBLE) END
          |    AS recall
          |FROM kk JOIN r ON r.rnk <= kk.k, t
-         |GROUP BY kk.k, t.n_pos ORDER BY k""".stripMargin,
-    "q_chi2_drift" ->
-      """WITH sp AS (
+         |GROUP BY kk.k, t.n_pos ORDER BY k""".stripMargin)),
+
+    // Chi-square homogeneity between the train and val splits over
+    // $1000 price bands — the categorical drift gate next to
+    // q_ks_test (same splits, binned-value domain).
+    "q_chi2_drift" -> Query((s, d) => {
+      val o = Sampling.splitAssign(
+          Tables.orders(s, d).select(col("o_orderkey"),
+            round(col("o_totalprice") * 100).cast("long").as("cents")),
+          col("o_orderkey"),
+          Seq(("train", 80), ("val", 10), ("test", 10)))
+        .filter(col("split") =!= "test")
+      Eval.chiSquareDrift(o, expr("cents DIV 100000"),
+        col("split") === "train")
+    },
+      Oracle("""WITH sp AS (
         |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
         |    (((((o_orderkey % 1000000007) * 2654435761) % 1000000007)
         |       + 40503) * 2654435761) % 1000000007 % 100 AS b
@@ -480,9 +280,16 @@ object EvalQueries {
         |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
         |       ELSE CAST(sum(tt) AS DOUBLE)
         |         / CAST(n_a * n_b AS DOUBLE) END AS chi2
-        |FROM s GROUP BY n_a, n_b""".stripMargin,
-    "q_chi2_terms" ->
-      """WITH t AS (SELECT doc_id,
+        |FROM s GROUP BY n_a, n_b""".stripMargin)),
+
+    // Top label-discriminative terms for lang='en' by per-term
+    // chi-square — log-free, so even the double statistic hash-gates.
+    "q_chi2_terms" -> Query((s, d) =>
+      graft.operators.TermStats.discriminativeTerms(
+          Tables.documents(s, d), col("doc_id"), col("text"),
+          col("lang") === "en", k = 25)
+        .orderBy("rank"),
+      Oracle("""WITH t AS (SELECT doc_id,
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
         |    unnest(list_distinct(string_split_regex(lower(text), '[ \t\n\r\f]+')))
         |      AS term
@@ -505,9 +312,18 @@ object EvalQueries {
         |SELECT term, n_pos_docs, n_neg_docs, chi2, rank FROM (
         |  SELECT *, row_number() OVER (ORDER BY chi2 DESC, term) AS rank
         |  FROM s)
-        |WHERE rank <= 25 ORDER BY rank""".stripMargin,
-    "q_knn_f1" ->
-      s"""WITH $knnPredCte,
+        |WHERE rank <= 25 ORDER BY rank""".stripMargin)),
+
+    // Per-label precision/recall/F1 derived from the k-NN confusion
+    // matrix — every ratio ONE division of exact marginal integers
+    // (f1 = 2tp/(2tp+fp+fn) avoids the float harmonic mean).
+    "q_knn_f1" -> Query((s, d) =>
+      Eval.confusionF1(
+          BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
+            col("embedding"), col("label"), probeMod = 10, k = 5),
+          col("label_true"), col("label_pred"), col("n"))
+        .orderBy("label"),
+      Oracle(s"""WITH $knnPredCte,
          |cm AS (SELECT q_lab AS t, pred_lab AS p,
          |  CAST(count(*) AS BIGINT) AS n FROM pred GROUP BY 1, 2),
          |rt AS (SELECT t AS label, CAST(sum(n) AS BIGINT) AS r
@@ -532,9 +348,16 @@ object EvalQueries {
          |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
          |       ELSE CAST(2 * tp AS DOUBLE)
          |         / CAST(2 * tp + fp + fn AS DOUBLE) END AS f1
-         |FROM j ORDER BY label""".stripMargin,
-    "q_kappa" ->
-      s"""WITH $knnPredCte,
+         |FROM j ORDER BY label""".stripMargin)),
+
+    // Cohen's kappa over the same matrix — chance-corrected agreement
+    // with exact BIGINT numerator/denominator.
+    "q_kappa" -> Query((s, d) =>
+      Eval.cohensKappa(
+        BinaryEmbed.knnConfusion(Tables.embeddings(s, d), col("vec_id"),
+          col("embedding"), col("label"), probeMod = 10, k = 5),
+        col("label_true"), col("label_pred"), col("n")),
+      Oracle(s"""WITH $knnPredCte,
          |cm AS (SELECT q_lab AS t, pred_lab AS p,
          |  CAST(count(*) AS BIGINT) AS n FROM pred GROUP BY 1, 2),
          |rt AS (SELECT t AS label, CAST(sum(n) AS BIGINT) AS r
@@ -553,9 +376,15 @@ object EvalQueries {
          |  CASE WHEN t2.n * t2.n - m.rc = 0 THEN NULL
          |       ELSE CAST(t2.n * t2.agree - m.rc AS DOUBLE)
          |         / CAST(t2.n * t2.n - m.rc AS DOUBLE) END AS kappa
-         |FROM t2, m""".stripMargin,
-    "q_mrr" ->
-      s"""WITH $knnPredCte,
+         |FROM t2, m""".stripMargin)),
+
+    // Mean reciprocal rank of the first same-label neighbor —
+    // reciprocal ranks quantized by exact integer division so the
+    // scalar hash-gates (averagePrecision's fixed-point recipe).
+    "q_mrr" -> Query((s, d) =>
+      BinaryEmbed.knnMrr(Tables.embeddings(s, d), col("vec_id"),
+        col("embedding"), col("label"), probeMod = 10, k = 5),
+      Oracle(s"""WITH $knnPredCte,
          |tq AS (SELECT CAST(count(DISTINCT query_id) AS BIGINT)
          |  AS n_queries FROM topk),
          |h AS (SELECT query_id, min(rnk) AS r FROM topk
@@ -568,53 +397,16 @@ object EvalQueries {
          |  CASE WHEN tq.n_queries = 0 THEN NULL
          |       ELSE CAST(hh.mrr_num AS DOUBLE)
          |         / CAST(tq.n_queries * 1000000000 AS DOUBLE) END AS mrr
-         |FROM tq, hh""".stripMargin,
-    "q_gate_tradeoff" ->
-      s"""WITH $scoredCte,
-         |w AS (SELECT l.doc_id, l.score,
-         |  CAST(len(string_split_regex(d.text, '[ \\t\\n\\r\\f]+')) AS BIGINT) AS w
-         |  FROM lab l JOIN documents d ON d.doc_id = l.doc_id),
-         |g AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt,
-         |  CAST(sum(w) AS BIGINT) AS ws FROM w GROUP BY score),
-         |c AS (SELECT score,
-         |  CAST(sum(cnt) OVER (ORDER BY score DESC) AS BIGINT) AS n_kept,
-         |  CAST(sum(ws) OVER (ORDER BY score DESC) AS BIGINT) AS w_kept
-         |  FROM g),
-         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
-         |  CAST(sum(ws) AS BIGINT) AS wt FROM g)
-         |SELECT c.score AS threshold, c.n_kept, c.w_kept AS weight_kept,
-         |  CASE WHEN t.n = 0 THEN NULL
-         |       ELSE CAST(c.n_kept AS DOUBLE) / CAST(t.n AS DOUBLE) END
-         |    AS frac_rows,
-         |  CASE WHEN t.wt = 0 THEN NULL
-         |       ELSE CAST(c.w_kept AS DOUBLE) / CAST(t.wt AS DOUBLE) END
-         |    AS frac_weight
-         |FROM c, t ORDER BY threshold""".stripMargin,
-    "q_conformal" ->
-      s"""WITH $scoredCte,
-         |o AS (SELECT doc_id, score,
-         |  (((((doc_id % 1000000007) * 2654435761) % 1000000007 + 40503)
-         |    * 2654435761) % 1000000007) % 2 = 0 AS cal
-         |  FROM lab),
-         |c AS (SELECT score FROM o WHERE cal),
-         |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
-         |  CAST(((count(*) + 1) * 9 + 9) // 10 AS BIGINT) AS k FROM c),
-         |g AS (SELECT score, count(*) AS cnt FROM c GROUP BY score),
-         |cm AS (SELECT score,
-         |  CAST(sum(cnt) OVER (ORDER BY score) AS BIGINT) AS cum FROM g),
-         |th AS (SELECT CAST(min(cm.score) AS BIGINT) AS threshold
-         |  FROM cm, nk WHERE cm.cum >= nk.k),
-         |tv AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
-         |  CAST(coalesce(sum(CASE WHEN o.score <= th.threshold
-         |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_covered
-         |  FROM o, th WHERE NOT cal)
-         |SELECT nk.n_cal, nk.k, th.threshold, tv.n_test, tv.n_covered,
-         |  CASE WHEN th.threshold IS NULL OR tv.n_test = 0 THEN NULL
-         |       ELSE CAST(tv.n_covered AS DOUBLE)
-         |         / CAST(tv.n_test AS DOUBLE) END AS coverage
-         |FROM nk, th, tv""".stripMargin,
-    "q_ndcg" ->
-      s"""WITH $knnPredCte,
+         |FROM tq, hh""".stripMargin)),
+
+    // Mean binary nDCG@5 of the probe k-NN lists — the
+    // position-sensitive retrieval eval; log₂ discounts enter only as
+    // frozen exact-rational-rounded integer constants, each probe's
+    // ratio fixed-point-quantized before the order-free sum.
+    "q_ndcg" -> Query((s, d) =>
+      BinaryEmbed.knnNdcg(Tables.embeddings(s, d), col("vec_id"),
+        col("embedding"), col("label"), probeMod = 10, k = 5),
+      Oracle(s"""WITH $knnPredCte,
          |per AS (SELECT query_id,
          |  CAST(sum(CASE WHEN n_lab = q_lab
          |    THEN list_extract([1000000000, 630929754, 500000000,
@@ -641,9 +433,80 @@ object EvalQueries {
          |  CASE WHEN count(*) = 0 THEN NULL
          |       ELSE CAST(sum(term) AS DOUBLE)
          |         / CAST(count(*) * 1000000 AS DOUBLE) END AS ndcg
-         |FROM s2""".stripMargin,
-    "q_auc_by_group" ->
-      s"""WITH $scoredCte,
+         |FROM s2""".stripMargin)),
+
+    // Gate-threshold survival curve over the classifier score with
+    // token mass as the weight — "where do I set the gate" as a
+    // relation: per candidate threshold, surviving docs AND tokens.
+    "q_gate_tradeoff" -> Query((s, d) =>
+      Eval.survivalByThreshold(
+          scoredDocs(s, d).join(Tables.documents(s, d)
+            .select(col("doc_id").as("id"),
+              size(split(col("text"), TextStats.WsRegex)).cast("long").as("w")),
+            "id"),
+          col("score"), col("w"))
+        .orderBy("threshold"),
+      Oracle(s"""WITH $scoredCte,
+         |w AS (SELECT l.doc_id, l.score,
+         |  CAST(len(string_split_regex(d.text, '[ \\t\\n\\r\\f]+')) AS BIGINT) AS w
+         |  FROM lab l JOIN documents d ON d.doc_id = l.doc_id),
+         |g AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt,
+         |  CAST(sum(w) AS BIGINT) AS ws FROM w GROUP BY score),
+         |c AS (SELECT score,
+         |  CAST(sum(cnt) OVER (ORDER BY score DESC) AS BIGINT) AS n_kept,
+         |  CAST(sum(ws) OVER (ORDER BY score DESC) AS BIGINT) AS w_kept
+         |  FROM g),
+         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
+         |  CAST(sum(ws) AS BIGINT) AS wt FROM g)
+         |SELECT c.score AS threshold, c.n_kept, c.w_kept AS weight_kept,
+         |  CASE WHEN t.n = 0 THEN NULL
+         |       ELSE CAST(c.n_kept AS DOUBLE) / CAST(t.n AS DOUBLE) END
+         |    AS frac_rows,
+         |  CASE WHEN t.wt = 0 THEN NULL
+         |       ELSE CAST(c.w_kept AS DOUBLE) / CAST(t.wt AS DOUBLE) END
+         |    AS frac_weight
+         |FROM c, t ORDER BY threshold""".stripMargin)),
+
+    // Split conformal calibration of the classifier score: exact
+    // integer conformal rank k = ceil((n_cal+1)·0.9), threshold as a
+    // distributed order statistic, coverage audited on the held-out
+    // half — the distribution-free guarantee machinery.
+    "q_conformal" -> Query((s, d) =>
+      Eval.conformalCalibrate(scoredDocs(s, d), col("id"), col("score"),
+        alphaNum = 1, alphaDen = 10),
+      Oracle(s"""WITH $scoredCte,
+         |o AS (SELECT doc_id, score,
+         |  (((((doc_id % 1000000007) * 2654435761) % 1000000007 + 40503)
+         |    * 2654435761) % 1000000007) % 2 = 0 AS cal
+         |  FROM lab),
+         |c AS (SELECT score FROM o WHERE cal),
+         |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
+         |  CAST(((count(*) + 1) * 9 + 9) // 10 AS BIGINT) AS k FROM c),
+         |g AS (SELECT score, count(*) AS cnt FROM c GROUP BY score),
+         |cm AS (SELECT score,
+         |  CAST(sum(cnt) OVER (ORDER BY score) AS BIGINT) AS cum FROM g),
+         |th AS (SELECT CAST(min(cm.score) AS BIGINT) AS threshold
+         |  FROM cm, nk WHERE cm.cum >= nk.k),
+         |tv AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
+         |  CAST(coalesce(sum(CASE WHEN o.score <= th.threshold
+         |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_covered
+         |  FROM o, th WHERE NOT cal)
+         |SELECT nk.n_cal, nk.k, th.threshold, tv.n_test, tv.n_covered,
+         |  CASE WHEN th.threshold IS NULL OR tv.n_test = 0 THEN NULL
+         |       ELSE CAST(tv.n_covered AS DOUBLE)
+         |         / CAST(tv.n_test AS DOUBLE) END AS coverage
+         |FROM nk, th, tv""".stripMargin)),
+
+    // Per-source ROC AUC — the fairness/segment audit: does the gate
+    // rank en-docs above others equally well in EVERY source, or is
+    // one slice at coin-flip? One exchange on the group key.
+    "q_auc_by_group" -> Query((s, d) =>
+      Eval.rocAucByGroup(
+          scoredDocs(s, d).join(Tables.documents(s, d)
+            .select(col("doc_id").as("id"), col("source")), "id"),
+          col("source"), col("score"), col("_y"))
+        .orderBy("grp"),
+      Oracle(s"""WITH $scoredCte,
          |lab2 AS (SELECT l.doc_id, l.score, l.y, d.source
          |  FROM lab l JOIN documents d ON d.doc_id = l.doc_id),
          |g AS (SELECT source, score, CAST(sum(y) AS BIGINT) AS pos,
@@ -661,9 +524,16 @@ object EvalQueries {
          |  CASE WHEN sum(pos) = 0 OR sum(neg) = 0 THEN NULL
          |       ELSE CAST(sum(pos * (2 * neg_below + neg)) AS DOUBLE)
          |         / CAST(2 * sum(pos) * sum(neg) AS DOUBLE) END AS auc
-         |FROM c GROUP BY source ORDER BY grp""".stripMargin,
-    "q_bootstrap_ci" ->
-      """WITH r AS (SELECT unnest(range(1, 33)) AS rep),
+         |FROM c GROUP BY source ORDER BY grp""".stripMargin)),
+
+    // One-pass Poisson-bootstrap error bars on the corpus mean doc
+    // length: 32 deterministic hash-derived Poisson(1) replicates,
+    // every replicate's totals exact BIGINTs.
+    "q_bootstrap_ci" -> Query((s, d) =>
+      Eval.poissonBootstrap(Tables.documents(s, d), col("doc_id"),
+          length(col("text")), reps = 32)
+        .orderBy("rep"),
+      Oracle("""WITH r AS (SELECT unnest(range(1, 33)) AS rep),
         |o AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS v
         |  FROM documents WHERE text IS NOT NULL),
         |u AS (SELECT r.rep, o.v,
@@ -691,9 +561,17 @@ object EvalQueries {
         |  CASE WHEN sum(wt) = 0 THEN NULL
         |       ELSE CAST(sum(wt * v) AS DOUBLE)
         |         / CAST(sum(wt) AS DOUBLE) END AS mean
-        |FROM w GROUP BY rep ORDER BY rep""".stripMargin,
-    "q_calibration_quantile" ->
-      s"""WITH $scoredCte,
+        |FROM w GROUP BY rep ORDER BY rep""".stripMargin)),
+
+    // Equal-MASS reliability bins (the quantile companion to
+    // q_calibration's equal-width ones): each bin holds ~1/10 of the
+    // observations up to score ties — the binning practitioners use
+    // when the score distribution is skewed.
+    "q_calibration_quantile" -> Query((s, d) =>
+      Eval.calibrationQuantileBins(scoredDocs(s, d), col("score"),
+          col("_y"), bins = 10)
+        .orderBy("bin"),
+      Oracle(s"""WITH $scoredCte,
          |g AS (SELECT score, CAST(count(*) AS BIGINT) AS n,
          |  CAST(sum(y) AS BIGINT) AS pos FROM lab GROUP BY score),
          |c AS (SELECT score, n, pos,
@@ -709,9 +587,19 @@ object EvalQueries {
          |  CAST(sum(c.pos) AS BIGINT) AS n_pos,
          |  CAST(sum(c.pos) AS DOUBLE) / CAST(sum(c.n) AS DOUBLE)
          |    AS pos_rate
-         |FROM c, t GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q_gini" ->
-      """WITH w AS (SELECT CAST(len(string_split_regex(text,
+         |FROM c, t GROUP BY 1 ORDER BY bin""".stripMargin)),
+
+    // Gini coefficient of the per-document token mass — the corpus
+    // concentration audit ("does 1% of documents hold 50% of the
+    // tokens?"); exact rational via the distinct-value prefix scan,
+    // no sort.
+    // text.isNotNull mirrors the oracle's WHERE: size(NULL array) is
+    // -1 under Spark's legacy sizeOfNull, which would fire gini's
+    // negative-value guard instead of dropping the row
+    "q_gini" -> Query((s, d) =>
+      Eval.gini(Tables.documents(s, d).filter(col("text").isNotNull),
+        size(split(col("text"), TextStats.WsRegex)).cast("long")),
+      Oracle("""WITH w AS (SELECT CAST(len(string_split_regex(text,
         |    '[ \t\n\r\f]+')) AS BIGINT) AS v
         |  FROM documents WHERE text IS NOT NULL),
         |g AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY v),
@@ -730,9 +618,15 @@ object EvalQueries {
         |       ELSE CAST(sum(cu.v * cu.c * (2 * cu.below + cu.c + 1))
         |           - (t.n + 1) * t.total AS DOUBLE)
         |         / CAST(t.n * t.total AS DOUBLE) END AS gini
-        |FROM cu, t GROUP BY t.n, t.total""".stripMargin,
-    "q_source_hhi" ->
-      """WITH g AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS c
+        |FROM cu, t GROUP BY t.n, t.total""".stripMargin)),
+
+    // Herfindahl-Hirschman concentration of character mass across
+    // sources — the data-mixing audit next to q_gini: "how many
+    // effective sources does this corpus really have?" One combinable
+    // group-by, one metadata aggregate, exact BIGINT num/den.
+    "q_source_hhi" -> Query((s, d) =>
+      Eval.hhi(Tables.documents(s, d), col("source"), col("n_chars")),
+      Oracle("""WITH g AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS c
         |  FROM documents
         |  WHERE source IS NOT NULL AND n_chars IS NOT NULL
         |  GROUP BY source)
@@ -746,9 +640,22 @@ object EvalQueries {
         |  CASE WHEN sum(c * c) = 0 THEN NULL
         |       ELSE CAST(sum(c) * sum(c) AS DOUBLE)
         |         / CAST(sum(c * c) AS DOUBLE) END AS eff_groups
-        |FROM g HAVING count(*) > 0""".stripMargin,
-    "q_fleiss_kappa" ->
-      """WITH r AS (SELECT doc_id, unnest([0, 1, 2]) AS rater
+        |FROM g HAVING count(*) > 0""".stripMargin)),
+
+    // Fleiss' kappa over a deterministic 3-rater annotation panel
+    // (votes are the hashBucket chain on doc_id and rater — the
+    // machinery is what's under test; real annotations would arrive
+    // as the same (item, category) relation). Exact cleared-fraction
+    // BIGINTs, one trailing division.
+    "q_fleiss_kappa" -> Query((s, d) => {
+      val ratings = Tables.documents(s, d)
+        .select(col("doc_id"),
+          explode(sequence(lit(0L), lit(2L))).as("rater"))
+        .withColumn("vote",
+          Sampling.hashBucket(col("doc_id") * 5 + col("rater"), 4))
+      Eval.fleissKappa(ratings, col("doc_id"), col("vote"))
+    },
+      Oracle("""WITH r AS (SELECT doc_id, unnest([0, 1, 2]) AS rater
         |  FROM documents),
         |v AS (SELECT doc_id,
         |  (((((doc_id * 5 + rater) % 1000000007) * 2654435761)
@@ -778,6 +685,74 @@ object EvalQueries {
         |         / CAST((t.n_raters - 1) * ((t.n_items * t.n_raters)
         |           * (t.n_items * t.n_raters) - kc.c2) AS DOUBLE)
         |  END AS kappa
-        |FROM t, kc""".stripMargin,
+        |FROM t, kc""".stripMargin)),
   )
+
+  /** Shared DuckDB CTE chain: class-0 hashed-classifier scores (the
+    * replay of Classifier.hashNgramScore's kernel — identical gram,
+    * bucket, and weight arithmetic to the q_hash_classifier oracle)
+    * joined with the lang='en' label.
+    */
+  private def scoredCte =
+    """grams AS (
+      |  SELECT doc_id,
+      |    unnest([substr(lower(text), i, 3)
+      |            for i in range(1, length(text) - 1)]) AS g
+      |  FROM documents WHERE text IS NOT NULL AND length(text) >= 3
+      |),
+      |feats AS (
+      |  SELECT doc_id,
+      |    ('0x' || substr(md5(g), 1, 15))::BIGINT % 64 AS b,
+      |    count(*) AS cnt
+      |  FROM grams GROUP BY doc_id, b
+      |),
+      |w0 AS (
+      |  SELECT b.b,
+      |    ('0x' || substr(md5('w:0:' || b.b::VARCHAR), 1, 15))::BIGINT
+      |      % 7 - 3 AS w
+      |  FROM range(0, 64) b(b)
+      |),
+      |lab AS (
+      |  SELECT f.doc_id, CAST(sum(w0.w * f.cnt) AS BIGINT) AS score,
+      |    CASE WHEN max(d.lang) = 'en' THEN 1 ELSE 0 END AS y
+      |  FROM feats f JOIN w0 ON w0.b = f.b
+      |  JOIN documents d ON d.doc_id = f.doc_id
+      |  GROUP BY f.doc_id
+      |)""".stripMargin
+
+  /** The q_knn_eval oracle's probe-prediction CTE chain, terminal
+    * relation `pred(query_id, q_lab, pred_lab)`.
+    */
+  private def knnPredCte =
+    """s AS (SELECT vec_id, label,
+      |  CAST(list_sum([CASE WHEN embedding[i] > 0
+      |      THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE CAST(0 AS BIGINT) END
+      |    for i in range(1, 33)]) AS BIGINT) AS sig_lo,
+      |  CAST(list_sum([CASE WHEN embedding[i] > 0
+      |      THEN (CAST(1 AS BIGINT) << (i - 33)) ELSE CAST(0 AS BIGINT) END
+      |    for i in range(33, 65)]) AS BIGINT) AS sig_hi
+      |  FROM embeddings),
+      |q AS (SELECT vec_id AS query_id, label AS q_lab,
+      |             sig_lo AS q_lo, sig_hi AS q_hi
+      |      FROM s
+      |      WHERE (((((vec_id % 1000000007) * 2654435761) % 1000000007)
+      |              + 40503) * 2654435761) % 1000000007 % 10 = 0),
+      |d AS (SELECT q.query_id, q.q_lab, s.vec_id AS nid,
+      |  s.label AS n_lab,
+      |  CAST(bit_count(xor(q.q_lo, s.sig_lo))
+      |     + bit_count(xor(q.q_hi, s.sig_hi)) AS BIGINT) AS hamming
+      |  FROM q JOIN s ON s.vec_id <> q.query_id),
+      |topk AS (
+      |  SELECT * FROM (SELECT *, row_number() OVER
+      |    (PARTITION BY query_id ORDER BY hamming, nid) AS rnk FROM d)
+      |  WHERE rnk <= 5),
+      |votes AS (
+      |  SELECT query_id, q_lab, n_lab, count(*) AS v
+      |  FROM topk GROUP BY query_id, q_lab, n_lab),
+      |pred AS (
+      |  SELECT query_id, q_lab, n_lab AS pred_lab FROM (
+      |    SELECT *, row_number() OVER
+      |      (PARTITION BY query_id ORDER BY v DESC, n_lab) AS pr
+      |    FROM votes)
+      |  WHERE pr = 1)""".stripMargin
 }

@@ -1,18 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Indicators
+import graft.streaming.{Bar, EnrichedBar, StatefulIndicators}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One catalogue record: how to build the query's result on
+  * (session, sfDir), and how the driver checks it.
+  */
+final case class Query(build: (SparkSession, String) => DataFrame,
+    check: Check)
+
+/** A query's check. There is no default: a record must declare one. */
+sealed trait Check
+
+/** Equivalent DuckDB SQL over the same parquet tables; the driver
+  * hash-compares its result with the query's.
+  */
+final case class Oracle(sql: String) extends Check
+
+/** No exact oracle exists, for `reason`; the driver checks only that
+  * the query returns rows.
+  */
+final case class NoOracle(reason: String) extends Check
+
+/** Driver contract (SURVEY.md §7).
   *
-  * Each `queries` entry is one operator from SURVEY.md §2 (or an
-  * LLM-pipeline extension), expressed Spark-first; each `oracleSql`
-  * entry is the equivalent ANSI SQL the driver runs in DuckDB over the
-  * same parquet tables. Column names and FP operation order are kept
-  * identical on both sides (see OracleGen) so the driver's hash compare
-  * is exact.
+  * Each [[SparkEntry.catalogue]] record is one operator from SURVEY.md
+  * §2 (or an LLM-pipeline extension), expressed Spark-first, with its
+  * check written next to its build. An [[Oracle]] is the equivalent
+  * ANSI SQL the driver runs in DuckDB over the same parquet tables.
+  * Column names and FP operation order are kept identical on both
+  * sides (see OracleGen) so the driver's hash compare is exact. The
+  * driver reads two views derived from the catalogue: `queries` (every
+  * build) and `oracleSql` (every Oracle's SQL).
   */
 object SparkEntry {
 
@@ -58,6 +80,24 @@ object SparkEntry {
   private def macdOnly(s: SparkSession, dir: String): DataFrame =
     Indicators.addMacd(bars(s, dir), col("symbol"), Seq(col("ts")), col("close"))
 
+  /** [[bars]] through the stateful streaming engine run in batch mode
+    * (`enrich` is its flatMapGroupsWithState fold or its sorted-scan
+    * path), projected onto q_ind_full's columns.
+    */
+  private def statefulIndicators(s: SparkSession, dir: String,
+      enrich: Dataset[Bar] => Dataset[EnrichedBar]): DataFrame = {
+    val ds = bars(s, dir)
+      .select(col("symbol").cast("string").as("symbol"), col("ts"),
+        col("close"))
+      .as[Bar](StatefulIndicators.barEnc)
+    enrich(ds).toDF()
+      .select(col("symbol").cast("long").as("symbol"), col("ts"),
+        col("close"), col("ma5"), col("ma20"), col("rsi"),
+        col("macd_line"), col("macd_signal"), col("macd_histogram"),
+        col("suggestion"), col("reason"))
+      .orderBy("symbol", "ts")
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's whole analytical surface in one statement:
     * per-symbol ordered MA5/MA20, RSI-14, MACD(12,26,9), suggestion.
@@ -65,140 +105,131 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     enriched(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val indicator: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query with its check: the flagship indicator records below,
+    * then [[BatchQueries]], [[LlmQueries]] and [[EvalQueries]].
+    */
+  val catalogue: Seq[(String, Query)] = assemble(Seq(
     // --- flagship indicator pipeline (SURVEY §2.4-2.5, A4-A6, W1-W4) ---
-    "q_ind_ma" -> ((s, dir) => {
+    "q_ind_ma" -> Query((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("symbol")).orderBy(col("ts"))
       bars(s, dir)
         .withColumn("ma5", Indicators.rollingMean(col("close"), 5, w))
         .withColumn("ma20", Indicators.rollingMean(col("close"), 20, w))
         .orderBy("symbol", "ts")
-    }),
-    "q_ind_rsi" -> ((s, dir) =>
+    },
+      Oracle(OracleGen.qIndMa)),
+    "q_ind_rsi" -> Query((s, dir) =>
       rsiOnly(s, dir).select("symbol", "ts", "close", "rsi")
-        .orderBy("symbol", "ts")),
-    "q_ind_macd" -> ((s, dir) =>
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qIndRsi)),
+    "q_ind_macd" -> Query((s, dir) =>
       macdOnly(s, dir)
         .select("symbol", "ts", "macd_line", "macd_signal", "macd_histogram")
-        .orderBy("symbol", "ts")),
-    "q_ind_full" -> ((s, dir) =>
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qIndMacd)),
+    "q_ind_full" -> Query((s, dir) =>
       enriched(s, dir)
         .select("symbol", "ts", "close", "ma5", "ma20", "rsi",
           "macd_line", "macd_signal", "macd_histogram", "suggestion", "reason")
-        .orderBy("symbol", "ts")),
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qIndFull)),
 
     // Bollinger bands BB(20, 2): the rolling stddev is the explicit
     // left-associated squared-deviation chain (see Indicators.
     // addBollinger's exactness contract), so the band columns are
     // hash-gateable doubles, not approximately-equal ones.
-    "q_ind_bbands" -> ((s, dir) =>
+    "q_ind_bbands" -> Query((s, dir) =>
       Indicators.addBollinger(bars(s, dir), col("symbol"), Seq(col("ts")),
           col("close"))
         .select("symbol", "ts", "close", "bb_mid", "bb_sd", "bb_upper",
           "bb_lower", "pct_b")
-        .orderBy("symbol", "ts")),
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qIndBbands)),
 
     // Stochastic oscillator %K(14)/%D(3), close-only variant —
     // comparison-only frame min/max plus one fixed arithmetic
     // expression; min_periods via the frame-count gate.
-    "q_ind_stoch" -> ((s, dir) =>
+    "q_ind_stoch" -> Query((s, dir) =>
       Indicators.addStochastic(bars(s, dir), col("symbol"), Seq(col("ts")),
           col("close"))
         .select("symbol", "ts", "close", "stoch_k", "stoch_d")
-        .orderBy("symbol", "ts")),
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qIndStoch)),
 
     // Per-symbol maximum drawdown: running peak is comparison-only,
     // the dip ratio one fixed expression — fully hash-gateable.
-    "q_drawdown" -> ((s, dir) =>
+    "q_drawdown" -> Query((s, dir) =>
       graft.operators.Finance.drawdownProfile(bars(s, dir), col("symbol"),
           col("ts"), col("close"))
         .withColumnRenamed("_sym", "symbol")
-        .orderBy("symbol")),
+        .orderBy("symbol"),
+      Oracle(OracleGen.qDrawdown)),
 
     // Interval-weighted TWAP with decimal-exact accumulation — see
     // Finance.twap's exactness contract.
-    "q_twap" -> ((s, dir) =>
+    "q_twap" -> Query((s, dir) =>
       graft.operators.Finance.twap(bars(s, dir), col("symbol"),
           col("ts"), col("close"))
         .withColumnRenamed("_sym", "symbol")
-        .orderBy("symbol")),
+        .orderBy("symbol"),
+      Oracle(OracleGen.qTwap)),
 
     // Tick→bar downsampling: hourly OHLCV per symbol. Prices are
     // comparison-selected (min_by/max_by/min/max on the exact integer
     // µs key), volume an exact BIGINT sum — see Finance.ohlcResample.
-    "q_resample_ohlc" -> ((s, dir) =>
+    "q_resample_ohlc" -> Query((s, dir) =>
       graft.operators.Finance.ohlcResample(ticks(s, dir), col("symbol"),
           col("tsu"), col("close"), col("vol"), 3600000000L)
         .withColumnRenamed("_sym", "symbol")
-        .orderBy("symbol", "bucket_ts")),
+        .orderBy("symbol", "bucket_ts"),
+      Oracle(OracleGen.qResampleOhlc)),
 
     // Daily volume-weighted average price — TWAP's sibling with the
     // props.k volume as the weight; DECIMAL-accumulated fixed-point
     // units, one trailing double division (Finance.vwap).
-    "q_vwap" -> ((s, dir) =>
+    "q_vwap" -> Query((s, dir) =>
       graft.operators.Finance.vwap(ticks(s, dir), col("symbol"),
           col("tsu"), col("close"), col("vol"), 86400000000L)
         .withColumnRenamed("_sym", "symbol")
-        .orderBy("symbol", "bucket_ts")),
+        .orderBy("symbol", "bucket_ts"),
+      Oracle(OracleGen.qVwap)),
 
     // Two-sided CUSUM mean-drift chart (Page 1954) against each
     // symbol's own exact fixed-point mean; the clamped recursion runs
     // in the same AggregateWindowFunction machinery as EMA — see
     // Finance.cusumChart / functions.Cusum.
-    "q_cusum" -> ((s, dir) =>
+    "q_cusum" -> Query((s, dir) =>
       graft.operators.Finance.cusumChart(bars(s, dir), col("symbol"),
           col("ts"), col("close"), h = 100.0)
         .withColumnRenamed("_sym", "symbol")
         .withColumnRenamed("_ts", "ts")
-        .orderBy("symbol", "ts")),
+        .orderBy("symbol", "ts"),
+      Oracle(OracleGen.qCusum)),
 
     // Day-of-week seasonality profile — pure integer calendar
     // arithmetic + fixed-point means, see Finance.seasonalProfile.
-    "q_seasonal" -> ((s, dir) =>
+    "q_seasonal" -> Query((s, dir) =>
       graft.operators.Finance.seasonalProfile(bars(s, dir), col("symbol"),
           col("ts"), col("close"))
         .withColumnRenamed("_sym", "symbol")
-        .orderBy("symbol", "dow")),
+        .orderBy("symbol", "dow"),
+      Oracle(OracleGen.qSeasonal)),
 
     // The stateful streaming engine run in batch mode — MUST match the
     // same oracle as q_ind_full (the flatMapGroupsWithState fold and
     // the window pipeline are FP-bit-equal by construction), which
     // puts the streaming state machine under the DuckDB gate too.
-    "q_ind_stateful" -> ((s, dir) => {
-      import graft.streaming.{Bar, StatefulIndicators}
-      import StatefulIndicators._
-      val ds = bars(s, dir)
-        .select(col("symbol").cast("string").as("symbol"), col("ts"),
-          col("close"))
-        .as[Bar](barEnc)
-      StatefulIndicators.enrich(ds).toDF()
-        .select(col("symbol").cast("long").as("symbol"), col("ts"),
-          col("close"), col("ma5"), col("ma20"), col("rsi"),
-          col("macd_line"), col("macd_signal"), col("macd_histogram"),
-          col("suggestion"), col("reason"))
-        .orderBy("symbol", "ts")
-    }),
+    "q_ind_stateful" -> Query(
+      (s, dir) => statefulIndicators(s, dir, StatefulIndicators.enrich),
+      Oracle(OracleGen.qIndFull)),
 
     // The zero-buffering full-history scan path (secondary sort +
     // lazy per-partition state machine) under the same oracle — see
     // StatefulIndicators.enrichSortedScan.
-    "q_ind_scan" -> ((s, dir) => {
-      import graft.streaming.{Bar, StatefulIndicators}
-      import StatefulIndicators._
-      val ds = bars(s, dir)
-        .select(col("symbol").cast("string").as("symbol"), col("ts"),
-          col("close"))
-        .as[Bar](barEnc)
-      StatefulIndicators.enrichSortedScan(ds).toDF()
-        .select(col("symbol").cast("long").as("symbol"), col("ts"),
-          col("close"), col("ma5"), col("ma20"), col("rsi"),
-          col("macd_line"), col("macd_signal"), col("macd_histogram"),
-          col("suggestion"), col("reason"))
-        .orderBy("symbol", "ts")
-    }),
+    "q_ind_scan" -> Query(
+      (s, dir) => statefulIndicators(s, dir, StatefulIndicators.enrichSortedScan),
+      Oracle(OracleGen.qIndFull)),
 
     // The dashboard's composed read path as ONE query (app.py:89-131
     // poll→group→sort-by-date, 363-428 latest-row suggestion panel):
@@ -209,7 +240,7 @@ object SparkEntry {
     // symbol — the rank-desc sort reuses the enrichment's symbol
     // exchange, and the rk <= 5 filter prunes before the aggregation,
     // so the serving query adds no shuffle beyond the pipeline's own.
-    "q_dashboard_feed" -> ((s, dir) => {
+    "q_dashboard_feed" -> Query((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // round-17 A/B note: deriving the rank inside the pipeline's own
       // (symbol, ts ASC) sort as count(*) over symbol − row_number + 1
@@ -260,31 +291,28 @@ object SparkEntry {
           .otherwise(lit("inverse")).as("macd_delta_color"),
         col("close_t1"), col("close_t2"), col("close_t3"), col("close_t4"))
         .orderBy("symbol")
-    }),
-    )
-    indicator ++ BatchQueries.queries ++ LlmQueries.queries ++
-      EvalQueries.queries
+    },
+      Oracle(OracleGen.qDashboardFeed)),
+  ), BatchQueries.catalogue, LlmQueries.catalogue, EvalQueries.catalogue)
+
+  /** The catalogue parts in order; a name declared twice fails here,
+    * where a map would silently keep one of the builds.
+    */
+  private[graft] def assemble(parts: Seq[(String, Query)]*): Seq[(String, Query)] = {
+    val all = parts.flatten
+    val twice = all.groupBy(_._1).collect { case (n, rs) if rs.size > 1 => n }
+    require(twice.isEmpty,
+      s"query names declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    all
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** The driver's view of [[catalogue]]: every query's build. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalogue.map { case (name, q) => name -> q.build }.toMap
+
+  /** The driver's view of [[catalogue]]: the DuckDB SQL of every
+    * [[Oracle]]-checked query, run over the same parquet tables.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q_ind_ma" -> OracleGen.qIndMa,
-    "q_ind_rsi" -> OracleGen.qIndRsi,
-    "q_ind_macd" -> OracleGen.qIndMacd,
-    "q_ind_full" -> OracleGen.qIndFull,
-    "q_ind_bbands" -> OracleGen.qIndBbands,
-    "q_ind_stoch" -> OracleGen.qIndStoch,
-    "q_drawdown" -> OracleGen.qDrawdown,
-    "q_twap" -> OracleGen.qTwap,
-    "q_resample_ohlc" -> OracleGen.qResampleOhlc,
-    "q_vwap" -> OracleGen.qVwap,
-    "q_cusum" -> OracleGen.qCusum,
-    "q_seasonal" -> OracleGen.qSeasonal,
-    "q_ind_stateful" -> OracleGen.qIndFull,
-    "q_ind_scan" -> OracleGen.qIndFull,
-    "q_dashboard_feed" -> OracleGen.qDashboardFeed,
-  ) ++ BatchQueries.oracleSql ++ LlmQueries.oracleSql ++
-    EvalQueries.oracleSql
+  val oracleSql: Map[String, String] =
+    catalogue.collect { case (name, Query(_, Oracle(sql))) => name -> sql }.toMap
 }

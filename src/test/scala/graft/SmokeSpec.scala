@@ -23,8 +23,23 @@ class SmokeSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracle entries without queries: $unknown")
+  test("exactly the four declared rows-only queries lack an oracle") {
+    val rowsOnly = SparkEntry.catalogue.collect {
+      case (name, Query(_, NoOracle(_))) => name
+    }
+    assert(rowsOnly.sorted ==
+      Seq("q_approx_stats", "q_random_split", "q_sim_ivf", "q_sim_lsh"))
+    assert(SparkEntry.queries.size == 241)
+    assert(SparkEntry.oracleSql.size == 237)
+  }
+
+  test("a query name declared twice fails catalogue assembly") {
+    val q = Query((s, _) => s.range(1).toDF(), Oracle("SELECT 0 AS id"))
+    assert(SparkEntry.assemble(Seq("q_a" -> q), Seq("q_b" -> q)).size == 2)
+    val across = intercept[IllegalArgumentException](
+      SparkEntry.assemble(Seq("q_a" -> q), Seq("q_b" -> q, "q_a" -> q)))
+    assert(across.getMessage.contains("q_a"))
+    intercept[IllegalArgumentException](
+      SparkEntry.assemble(Seq("q_a" -> q, "q_a" -> q)))
   }
 }

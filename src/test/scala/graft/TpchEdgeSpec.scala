@@ -28,7 +28,7 @@ class TpchEdgeSpec extends AnyFunSuite {
 
   test("Q14 shape on an EMPTY month slice: one row, NULL revenues, " +
       "NULL share") {
-    val s = BatchQueries.queries("q_promo_share") // shape sanity only
+    val s = SparkEntry.queries("q_promo_share") // shape sanity only
     assert(s != null)
     val empty = Tables.lineitem(spark, dir).filter(lit(false))
       .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
