@@ -8,9 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** BPE apply-side kernels (round-17; guide §1.2 step 2 — per-task
   * work). A trained merge list is O(rounds) driver metadata, and
   * applying it to one word is a purely word-local, sequential
-  * greedy scan — the relational window formulation (see
-  * [[graft.operators.Bpe.applyMerge]]) exists to PROVE the run-parity
-  * rule and to train, but paying an exchange + R window passes over a
+  * greedy scan — the relational window formulation (BpeWindowed, in
+  * the test sources) exists to PROVE the run-parity rule, but paying an exchange + R window passes over a
   * per-character corpus relation to APPLY a known merge list is the
   * classic "shuffle to compute something row-local" anti-shape. These
   * kernels run the same greedy logic inside whole-stage codegen:

@@ -129,7 +129,7 @@ class BpeSpec extends AnyFunSuite {
         .toSeq.sortBy(_._1)
     val kernel = tokens(Bpe.encode(df, col("doc_id"), col("text"), merges))
     val windowed = tokens(
-      Bpe.encodeWindowed(df, col("doc_id"), col("text"), merges))
+      BpeWindowed.encode(df, col("doc_id"), col("text"), merges))
     assert(kernel === windowed && kernel.nonEmpty)
   }
 
@@ -229,7 +229,7 @@ class BpeSpec extends AnyFunSuite {
         .map { case (k, v) => k -> v.sortBy(_._3).map(_._4).toSeq }
         .toSeq.sortBy(_._1)
     val window = tokens(
-      Bpe.encodeWindowed(df, col("doc_id"), col("text"), merges))
+      BpeWindowed.encode(df, col("doc_id"), col("text"), merges))
     assert(tokens(Bpe.encode(df, col("doc_id"), col("text"), merges))
       === window) // round-17 kernel form agrees too
     val flat = window.flatMap(_._2).groupBy(identity)
