@@ -2,36 +2,45 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL
 from outDir/oracle_sql.json in DuckDB over the sfDir parquet tables and
 compare to the Spark parquet dumps (exact, column-name-sorted, row by row,
-NaN == NaN and null == null, arrays and structs element by element).
+NaN == NaN and null == null but null != NaN, arrays and structs element by
+element). Both sides are read through Arrow, which keeps NULL and NaN apart.
 
 Usage: compare.py <sfDir> <outDir> [query ...]
 """
-import json, sys, glob, os
+import json, sys, glob, math, os
 import duckdb
-import numpy as np
-import pandas as pd
+
+
+def isnan(v):
+    return isinstance(v, float) and math.isnan(v)
 
 
 def same(x, y):
-    """Exact equality of two cells, recursing into lists and structs."""
-    if isinstance(x, np.ndarray):
-        x = x.tolist()
-    if isinstance(y, np.ndarray):
-        y = y.tolist()
+    """Exact equality of two cells, recursing into lists and structs.
+    NULL equals only NULL and NaN only NaN."""
     if isinstance(x, (list, tuple)) or isinstance(y, (list, tuple)):
         return (isinstance(x, (list, tuple)) and isinstance(y, (list, tuple))
                 and len(x) == len(y) and all(map(same, x, y)))
     if isinstance(x, dict) or isinstance(y, dict):
         return (isinstance(x, dict) and isinstance(y, dict)
                 and x.keys() == y.keys() and all(same(x[k], y[k]) for k in x))
-    if pd.isna(x) or pd.isna(y):
-        return bool(pd.isna(x) and pd.isna(y))
+    if x is None or y is None:
+        return x is None and y is None
+    if isnan(x) or isnan(y):
+        return isnan(x) and isnan(y)
     return bool(x == y)
 
 
 def mismatches(a, b):
     """Row positions where columns a and b differ."""
     return [i for i, (x, y) in enumerate(zip(a, b)) if not same(x, y)]
+
+
+def columns(rel):
+    """A DuckDB result as {column name: Python values}, read through Arrow
+    so that a NULL stays None (pandas would turn a NULL double into NaN)."""
+    tbl = rel.fetch_arrow_table()
+    return {c: tbl.column(c).to_pylist() for c in tbl.column_names}
 
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
@@ -53,24 +62,23 @@ for name, sql in sorted(oracle.items()):
     if not files:
         print(f"{name}: NO SPARK OUTPUT"); fail += 1; continue
     try:
-        odf = con.execute(sql).fetchdf()
+        ocols = columns(con.execute(sql))
     except Exception as e:
         print(f"{name}: ORACLE SQL ERROR: {e}"); fail += 1; continue
-    sdf = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf()
+    scols = columns(con.execute(f"SELECT * FROM read_parquet({files!r})"))
     # driver sorts columns by name before hashing
-    odf = odf[sorted(odf.columns)]
-    sdf = sdf[sorted(sdf.columns)]
-    if list(odf.columns) != list(sdf.columns):
-        print(f"{name}: SCHEMA MISMATCH spark={list(sdf.columns)} oracle={list(odf.columns)}"); fail += 1; continue
-    if len(odf) != len(sdf):
-        print(f"{name}: ROWS MISMATCH spark={len(sdf)} oracle={len(odf)}"); fail += 1; continue
-    odf = odf.reset_index(drop=True); sdf = sdf.reset_index(drop=True)
-    bad = {c: rows for c in odf.columns if (rows := mismatches(odf[c], sdf[c]))}
+    if sorted(ocols) != sorted(scols):
+        print(f"{name}: SCHEMA MISMATCH spark={sorted(scols)} oracle={sorted(ocols)}"); fail += 1; continue
+    cols = sorted(ocols)
+    nrows = len(scols[cols[0]])
+    if len(ocols[cols[0]]) != nrows:
+        print(f"{name}: ROWS MISMATCH spark={nrows} oracle={len(ocols[cols[0]])}"); fail += 1; continue
+    bad = {c: rows for c in cols if (rows := mismatches(ocols[c], scols[c]))}
     if bad:
         print(f"{name}: VALUE MISMATCH in cols {list(bad)}")
         row = next(iter(bad.values()))[0]
-        print(f"  first diff row {row}: oracle={odf.iloc[row].to_dict()} spark={sdf.iloc[row].to_dict()}")
+        print(f"  first diff row {row}: oracle={ {c: ocols[c][row] for c in cols} } spark={ {c: scols[c][row] for c in cols} }")
         fail += 1
     else:
-        print(f"{name}: OK ({len(sdf)} rows)")
+        print(f"{name}: OK ({nrows} rows)")
 sys.exit(1 if fail else 0)
