@@ -1746,10 +1746,11 @@ object BatchQueries {
         .select(col("p_partkey"), col("value_bp"))
         .orderBy(col("value_bp").desc, col("p_partkey"))
     },
+      // CAST(SUM(...) AS BIGINT): same HUGEINT dtype artifact as q_skew_agg.
       Oracle("""WITH pv AS (
         |  SELECT l_partkey AS p_partkey,
-        |    SUM(CAST(round((l_extendedprice * (1.0 - l_discount))
-        |      * 10000) AS BIGINT)) AS value_bp
+        |    CAST(SUM(CAST(round((l_extendedprice * (1.0 - l_discount))
+        |      * 10000) AS BIGINT)) AS BIGINT) AS value_bp
         |  FROM lineitem GROUP BY 1),
         |tot AS (SELECT SUM(value_bp) AS total FROM pv)
         |SELECT p_partkey, value_bp FROM pv, tot

@@ -9,9 +9,14 @@ import org.apache.spark.sql.types._
   * `events` (time-series stand-in for the reference's OHLCV stream),
   * `documents` and `embeddings` (LLM-pipeline operator fixtures).
   *
-  * Plain `spark.read.parquet` keeps the scan fully Catalyst-managed:
+  * A `spark.read.parquet` scan keeps the load fully Catalyst-managed:
   * column pruning and predicate pushdown reach the parquet reader, and
   * partition sizing follows `spark.sql.files.maxPartitionBytes`.
+  * Inferring a parquet schema runs a Spark job, so each file's schema
+  * is inferred once and memoised, keyed by the path, length and
+  * modification time of every file under the table's path plus the
+  * session's parquet settings; later loads read with `.schema(memo)`.
+  * A rewritten file has a new key and is inferred again.
   *
   * DRIFT CONTRACT (round-8, after the round-7 events.ts ns→µs
   * regeneration cost most of a day): the driver regenerates fixtures
@@ -132,8 +137,36 @@ object Tables {
     df
   }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    assertContract(name, spark.read.parquet(s"$dir/$name.parquet"))
+  /** Every file under a table's path as (path, length, modification
+    * time), and the session's parquet settings.
+    */
+  private type Version = (Seq[(String, Long, Long)], Map[String, String])
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[Version, StructType]()
+
+  /** A reader of `path` with its memoised schema, inferred on the first
+    * load of this version of its files. A missing path gets a plain
+    * reader, so the load fails as Spark reports it.
+    */
+  private def reader(spark: SparkSession, path: String) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read
+    else {
+      val files = Iterator.unfold(fs.listFiles(p, true))(it =>
+        Option.when(it.hasNext)(it.next()).map(f => (f, it)))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+      val key = (files, spark.conf.getAll.filter(_._1.contains("parquet")))
+      spark.read.schema(
+        schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema))
+    }
+  }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    assertContract(name, reader(spark, path).parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

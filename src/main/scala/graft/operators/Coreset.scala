@@ -20,15 +20,20 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * and fully replayable as relational SQL (the DuckDB oracle unrolls
   * the k−1 argmax steps as MATERIALIZED CTEs).
   *
-  * Scale shape: the quantized corpus is persisted once; each of the
-  * k rounds is ONE narrow scan of [[IntVectors.greedy]] (a codegen'd
-  * t×dim dot block per row computing the running min-distance to the
-  * t selected centers) followed by a distributed top-1 (TakeOrdered —
-  * no global sort). The selected centers are O(k·dim) driver-resident
-  * metadata, the documented contract of [[KMeans]]'s centroid matrix
-  * and [[Similarity]]'s IVF build. Total work k²·dim·n/2 dots — choose
-  * k ≪ √(budget/n·dim); for corpus-scale k, switch to k-means++
-  * style sampling (this operator is the exact small-k tool).
+  * Scale shape: the quantized corpus is persisted once and traversed
+  * by [[IntVectors.greedy]]'s lazy greedy: a scan is ONE narrow pass (a
+  * codegen'd t×dim dot block per row computing the running
+  * min-distance to the t selected centers) followed by a distributed
+  * top-(4k+1) (TakeOrdered — no global sort), and the rounds after it
+  * rescore those kept rows on the driver, with no job, for as long as
+  * their best distance stays strictly above the scan's (4k+1)-th. The
+  * seed round's scores are all NULL, so the second round always scans
+  * unless the corpus is at most 4k rows.
+  * The selected centers are O(k·dim) driver-resident metadata, the
+  * documented contract of [[KMeans]]'s centroid matrix and
+  * [[Similarity]]'s IVF build. Worst case (every round rescans) k²·dim·n/2
+  * dots — choose k ≪ √(budget/n·dim); for corpus-scale k, switch to
+  * k-means++ style sampling (this operator is the exact small-k tool).
   *
   * Overflow contract: [[IntVectors]]'s.
   */

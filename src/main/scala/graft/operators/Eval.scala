@@ -448,12 +448,13 @@ object Eval {
     * keeps 40% of documents but 55% of tokens". One row per distinct
     * score: (threshold, n_kept, weight_kept, frac_rows, frac_weight).
     *
-    * Exactness/shape: one combinable group-by on the score, then TWO
-    * two-phase prefix scans over the |distinct scores| relation (row
-    * counts and weights scanned separately — no 2³¹ packing bound on
-    * the weight mass, unlike ksTest's carry-free trick), totals as a
-    * 1-row broadcast, fractions the trailing divisions. Descending
-    * semantics realized by scanning negated scores ascending.
+    * Exactness/shape: one combinable group-by on the score, then ONE
+    * two-phase prefix scan over the |distinct scores| relation that
+    * sums row counts and weights side by side (no 2³¹ packing bound on
+    * the weight mass, unlike ksTest's carry-free trick) and yields both
+    * grand totals from its offsets window; fractions are the trailing
+    * divisions. Descending semantics realized by scanning negated
+    * scores ascending.
     */
   def survivalByThreshold(df: DataFrame, score: Column,
       weight: Column): DataFrame = {
@@ -462,23 +463,19 @@ object Eval {
       .filter(col("_s").isNotNull && col("_w").isNotNull)
     val by = obs.groupBy("_s")
       .agg(count(lit(1)).as("_cnt"), sum(col("_w")).as("_ws"))
-    val c1 = Packing.withGlobalCumsum(by, (-col("_s")).as("_ns1"),
-      col("_cnt"), "_cnt_below")
-    val c2 = Packing.withGlobalCumsum(c1, (-col("_s")).as("_ns2"),
-      col("_ws"), "_ws_below")
-    // totals from the PERSISTED cumsum relation (one raw-data scan)
-    val tot = c2.agg(sum(col("_cnt")).as("_n"), sum(col("_ws")).as("_wt"))
-    c2.crossJoin(broadcast(tot))
-      .select(col("_s").as("threshold"),
+    val c = Packing.withGlobalCumsum(by, (-col("_s")).as("_ns"),
+      Seq(col("_cnt") -> "_cnt_below", col("_ws") -> "_ws_below"))
+    val (n, wt) = (col("_cnt_below_total"), col("_ws_below_total"))
+    c.select(col("_s").as("threshold"),
         (col("_cnt_below") + col("_cnt")).as("n_kept"),
         (col("_ws_below") + col("_ws")).as("weight_kept"),
-        when(coalesce(col("_n"), lit(0L)) === 0L, lit(null))
+        when(coalesce(n, lit(0L)) === 0L, lit(null))
           .otherwise((col("_cnt_below") + col("_cnt")).cast("double") /
-            col("_n").cast("double"))
+            n.cast("double"))
           .cast("double").as("frac_rows"),
-        when(coalesce(col("_wt"), lit(0L)) === 0L, lit(null))
+        when(coalesce(wt, lit(0L)) === 0L, lit(null))
           .otherwise((col("_ws_below") + col("_ws")).cast("double") /
-            col("_wt").cast("double"))
+            wt.cast("double"))
           .cast("double").as("frac_weight"))
   }
 

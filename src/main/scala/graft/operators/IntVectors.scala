@@ -116,32 +116,84 @@ object IntVectors {
   def cosine(num: Column, na: Column, nb: Column): Column =
     num.cast("double") / sqrt(na.cast("double") * nb.cast("double"))
 
+  /** A [[greedy]] scan keeps the top `KeptPerPick`·k + 1 rows. */
+  private val KeptPerPick = 4
+
   /** Greedy top-1 selection over `pool` (an `id`, `q` relation), at most
-    * `k` rounds. Each round is ONE scan: drop the selected ids, score
-    * every row with `score(selected vectors)`, keep the highest score
-    * with ties to the lowest id (a distributed top-1, no global sort).
-    * Returns the winning rows in selection order — the pool's columns
-    * plus `score` — fewer than `k` when the pool runs out. Each selected
-    * vector becomes a reference object in later rounds, so it is held to
+    * `k` rounds: each round picks the unselected row of highest `long`
+    * `score(selected vectors)`, ties to the lowest id. Returns the
+    * winning rows in selection order — the pool's columns plus `score` —
+    * fewer than `k` when the pool runs out. Each selected vector becomes
+    * a reference object in later rounds, so it is held to
     * [[requireExact]] at scale `s` before it is scored against.
+    *
+    * Lazy greedy, exact because a row's score never rises once something
+    * is selected: a k-center distance only shrinks as centers are added,
+    * and MMR's rel − red only falls as the max-dot redundancy grows. A
+    * scan is ONE narrow pass plus a distributed top-(M+1), M = 4·k (no
+    * global sort), and keeps those M+1 rows, not just the winner. Later
+    * rounds rescore the kept rows on the driver with the same `score`
+    * Column over a `LocalRelation` of them, which `ConvertToLocalRelation`
+    * folds, so it runs no job. Their best row is the pick if its score is
+    * strictly above the scan's (M+1)-th score: every row the scan did not
+    * keep scored at most that then, and scores no more now. The loop
+    * rescans when the best only ties that bound, when the bound is NULL
+    * (k-center's first round), when no kept row is left, and after a scan
+    * made with nothing selected (MMR's empty redundancy is 0, above a
+    * later negative max-dot, so those scores bound nothing). A scan that
+    * kept every unselected row needs no bound.
     */
   def greedy(pool: DataFrame, k: Int, s: Long)(
       score: Seq[Array[Long]] => Column): Seq[Row] = {
     require(k >= 1, "k must be >= 1")
+    val m = KeptPerPick * k
     val picks = scala.collection.mutable.ArrayBuffer.empty[Row]
     val selected = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    // the last scan's reusable rows; whether they are every unselected
+    // row, and if not, the scan's (M+1)-th score
+    var kept = Seq.empty[Row]
+    var complete = false
+    var bound = 0L
+    def scored(df: DataFrame) =
+      df.select(col("*"), score(selected.toSeq).as("score"))
+    def scoreOf(r: Row): Option[Long] =
+      if (r.isNullAt(r.length - 1)) None else Some(r.getLong(r.length - 1))
+    // the scan's order: score descending with NULLs last, then lowest id
+    def best(rows: Seq[Row]): Row = rows.minBy { r =>
+      val sc = scoreOf(r)
+      (sc.isEmpty, sc.fold(0L)(-_), r.getAs[Long]("id"))
+    }
+    def rescore(): Option[Row] =
+      Option.when(kept.nonEmpty)(best(scored(pool.sparkSession.createDataFrame(
+        java.util.Arrays.asList(kept.map(r => Row.fromSeq(r.toSeq.init)): _*),
+        pool.schema)).collect().toSeq))
+    def scan(): Option[Row] = {
+      val top = scored(pool
+          .filter(!col("id").isInCollection(picks.map(_.getAs[Long]("id")))))
+        .orderBy(col("score").desc, col("id")).limit(m + 1).collect().toSeq
+      complete = top.length <= m
+      kept =
+        if (complete) top.drop(1)
+        else top.lift(m).flatMap(scoreOf) match {
+          case Some(b) if selected.nonEmpty => bound = b; top.slice(1, m)
+          case _ => Nil
+        }
+      top.headOption
+    }
     var exhausted = false
     while (picks.size < k && !exhausted) {
-      val win = pool
-        .filter(!col("id").isInCollection(picks.map(_.getAs[Long]("id"))))
-        .select(col("*"), score(selected.toSeq).as("score"))
-        .orderBy(col("score").desc, col("id")).limit(1).collect()
-      if (win.isEmpty) exhausted = true
-      else {
-        val v = vectorOf(win.head)
-        requireExact(v.length, s)
-        picks += win.head
-        selected += v
+      val win =
+        if (complete) rescore()
+        else rescore().filter(w => scoreOf(w).exists(_ > bound)).orElse(scan())
+      win match {
+        case None => exhausted = true
+        case Some(w) =>
+          val v = vectorOf(w)
+          requireExact(v.length, s)
+          picks += w
+          selected += v
+          val id = w.getAs[Long]("id")
+          kept = kept.filterNot(_.getAs[Long]("id") == id)
       }
     }
     picks.toSeq

@@ -20,14 +20,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * DuckDB oracle unrolls it as MATERIALIZED CTE rounds (argmax ties →
   * lowest id).
   *
-  * Scale shape ([[Coreset]]'s, through the same
-  * [[IntVectors.greedy]] loop): the quantized pool is persisted once;
-  * each of the k rounds is ONE narrow scan (a codegen'd t×dim dot
-  * block computing the running max-redundancy) ending in a
-  * distributed top-1 (TakeOrdered — no global sort); selected vectors
-  * are O(k·dim) driver metadata. Total k²·dim·n/2 dots — the exact
-  * small-k tool; corpus-scale diverse sampling is [[Coreset]] /
-  * cluster-stratified sampling.
+  * Scale shape ([[Coreset]]'s, through the same lazy
+  * [[IntVectors.greedy]] loop): the quantized pool is persisted once; a
+  * scan is ONE narrow pass (a codegen'd t×dim dot block computing the
+  * running max-redundancy) ending in a distributed top-(4k+1)
+  * (TakeOrdered — no global sort), and later rounds pick from those
+  * kept rows on the driver, with no job, while the best rescored mmr
+  * stays strictly above the scan's (4k+1)-th. The first round (nothing
+  * selected, red = 0) bounds nothing, so the second round always scans
+  * unless the pool is at most 4k rows. Selected vectors are O(k·dim)
+  * driver metadata. Worst case (every round rescans) k²·dim·n/2 dots —
+  * the exact small-k tool; corpus-scale diverse sampling is [[Coreset]]
+  * / cluster-stratified sampling.
   *
   * Overflow contract: [[IntVectors]]'s.
   */

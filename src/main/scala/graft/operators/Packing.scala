@@ -20,11 +20,13 @@ import org.apache.spark.sql.functions._
   *  3. per-partition totals (one row per partition) get their own
   *     exclusive prefix sum — the only single-partition window, over
   *     ~numPartitions rows of index metadata — and join back as
-  *     offsets via a broadcast.
+  *     offsets via a broadcast. The same window, over the whole frame,
+  *     also yields each value's grand total.
   * The partition-id stamp rides on a [[org.apache.spark.sql.graft
   * .Bridge.persistRows]]-materialized relation so both consumers (rows
   * and totals) read the SAME physical rows — partition assignment can
-  * never diverge between them.
+  * never diverge between them. Several values share one scan: one
+  * persisted relation, one range partitioning, one offsets window.
   */
 object Packing {
 
@@ -33,24 +35,44 @@ object Packing {
     * deterministic result.
     */
   def withGlobalCumsum(df: DataFrame, orderCol: Column, value: Column,
-      out: String): DataFrame = {
+      out: String): DataFrame =
+    withGlobalCumsum(df, orderCol, Seq(value -> out)).drop(s"${out}_total")
+
+  /** For each `(value, out)` pair, adds `out` = exclusive prefix sum of
+    * `value` in `orderCol` order (0 for the first row) and
+    * `out_total` = the sum of `value` over all rows, from ONE two-phase
+    * scan. `orderCol` must be unique for a deterministic result.
+    */
+  def withGlobalCumsum(df: DataFrame, orderCol: Column,
+      sums: Seq[(Column, String)]): DataFrame = {
+    require(sums.nonEmpty, "need at least one (value, out) pair")
+    val vs = sums.indices.map(i => s"_psv$i")
     val ranged = org.apache.spark.sql.graft.Bridge.persistRows(
-      df.withColumn("_psv", value.cast("long"))
+      df.select(col("*") +: sums.zip(vs).map { case ((value, _), v) =>
+          value.cast("long").as(v) }: _*)
         .repartitionByRange(orderCol)
         .withColumn("_pid", spark_partition_id()))
     val wLocal = Window.partitionBy("_pid").orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.withColumn("_local_before",
-      coalesce(sum(col("_psv")).over(wLocal), lit(0L)))
+    val local = ranged.select(col("*") +: vs.map(v =>
+      coalesce(sum(col(v)).over(wLocal), lit(0L)).as(s"${v}_before")): _*)
+    // one Window operator: both frames share its order on _pid
     val wOff = Window.orderBy("_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
+    val wAll = Window.orderBy("_pid")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val offsets = ranged.groupBy("_pid")
-      .agg(sum(col("_psv")).as("_ptotal"))
-      .withColumn("_off", coalesce(sum(col("_ptotal")).over(wOff), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn(out, col("_off") + col("_local_before"))
-      .drop("_pid", "_psv", "_local_before", "_off")
+      .agg(sum(col(vs.head)).as(s"${vs.head}_p"),
+        vs.tail.map(v => sum(col(v)).as(s"${v}_p")): _*)
+      .select(col("_pid") +: vs.flatMap(v => Seq(
+        coalesce(sum(col(s"${v}_p")).over(wOff), lit(0L)).as(s"${v}_off"),
+        sum(col(s"${v}_p")).over(wAll).as(s"${v}_tot"))): _*)
+    sums.zip(vs).foldLeft(local.join(broadcast(offsets), "_pid")) {
+      case (d, ((_, out), v)) => d
+        .withColumn(out, col(s"${v}_off") + col(s"${v}_before"))
+        .withColumn(s"${out}_total", col(s"${v}_tot"))
+    }.drop("_pid" +: vs.flatMap(v =>
+      Seq(v, s"${v}_before", s"${v}_off", s"${v}_tot")): _*)
   }
 
   /** Adds `out` = EXCLUSIVE prefix max of `value` in `orderCol` order

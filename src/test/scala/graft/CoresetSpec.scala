@@ -118,4 +118,51 @@ class CoresetSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).toSeq === Seq(0L, 2L, 1L))
     assert(rows(2).getLong(2) === 0L) // the duplicate's radius
   }
+
+  private def kCenterRows(pts: Seq[(Long, Array[Double])], k: Int) =
+    TestSpark.jobsDuring(Coreset.kCenter(pts.toDF("vec_id", "embedding"),
+        col("vec_id"), col("embedding"), k = k))
+      match { case (df, jobs) =>
+        (df.orderBy("sel_rank").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            if (r.isNullAt(2)) None else Some(r.getLong(2))))
+          .toSeq, jobs) }
+
+  private def ref(pts: Seq[(Long, Array[Double])], k: Int) =
+    brute(pts.map { case (i, x) => (i, quant(x)) }, k)
+
+  // The build's jobs are the greedy's pool scans: quantizing a local
+  // relation and returning the k rows run none.
+
+  test("lazy greedy: kept rows serve later rounds without a scan") {
+    val pts = cloud(60)
+    val (got, scans) = kCenterRows(pts, 6)
+    assert(got === ref(pts, 6))
+    assert(scans === 4) // 2 of the 6 rounds pick from kept rows
+  }
+
+  test("lazy greedy: a tie at the (M+1)-th score rescans") {
+    // 5 vectors, 9 copies each: every scan's (M+1)-th row is a copy of
+    // a kept row, so no kept row beats it strictly, and each round
+    // after the seed scans again
+    val base = cloud(5).map(_._2)
+    val pts = (0 until 45).map(i => (i.toLong, base(i % 5)))
+    val (got, scans) = kCenterRows(pts, 4)
+    assert(got === ref(pts, 4))
+    assert(scans === 4)
+  }
+
+  test("lazy greedy: n <= M scans once; n < k and k = 1 match the reference") {
+    val few = cloud(7)
+    assert(kCenterRows(few, 2) === ((ref(few, 2), 1)))   // n = 7 <= M = 8
+    assert(kCenterRows(few, 10) === ((ref(few, 10), 1))) // n < k
+    val pts = cloud(40)
+    assert(kCenterRows(pts, 1) === ((ref(pts, 1), 1)))
+  }
+
+  test("q_kcenter's build runs the pinned number of jobs on sf0.01") {
+    val build = () => SparkEntry.queries("q_kcenter")(spark, "/root/testdata/sf0.01")
+    build() // infers and memoises the fixture's schema
+    assert(TestSpark.jobsDuring(build())._2 === 4)
+  }
 }

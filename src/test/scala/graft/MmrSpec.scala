@@ -28,15 +28,16 @@ class MmrSpec extends AnyFunSuite {
     a.zip(b).map { case (x, y) => x * y }.sum
 
   /** Sequential greedy MMR reference. */
-  private def ref(queryId: Long, k: Int): Seq[(Long, Long, Long, Long)] = {
-    val q = vecs.map { case (i, v) => (i, quant(v)) }.toMap
+  private def ref(queryId: Long, k: Int,
+      vs: Seq[(Long, Seq[Float])] = vecs): Seq[(Long, Long, Long, Long)] = {
+    val q = vs.map { case (i, v) => (i, quant(v)) }.toMap
     val qv = q(queryId)
-    val pool = vecs.map(_._1).filter(_ != queryId)
+    val pool = vs.map(_._1).filter(_ != queryId)
     var selected = List.empty[Array[Long]]
     var selIds = Set.empty[Long]
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long)]
-    for (t <- 1 to k) {
+    for (t <- 1 to (k min pool.size)) {
       val cands = pool.filterNot(selIds)
       val scored = cands.map { i =>
         val rel = dot(qv, q(i))
@@ -89,5 +90,44 @@ class MmrSpec extends AnyFunSuite {
       col("embedding"), 0L, 10).collect().map(_.toSeq).toSeq
     assert(a === b)
     assert(a.length === 4) // pool of 5 minus the query vector
+  }
+
+  private def run(vs: Seq[(Long, Seq[Float])], queryId: Long, k: Int) =
+    TestSpark.jobsDuring(Mmr.diverseTopK(vs.toDF("vec_id", "embedding"),
+        col("vec_id"), col("embedding"), queryId, k))
+      match { case (df, jobs) =>
+        (df.orderBy("sel_rank").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toSeq, jobs) }
+
+  // The build's jobs are the query-vector lookup plus the greedy's pool
+  // scans: quantizing a local relation and returning the k rows run none.
+
+  test("lazy greedy: kept rows serve later rounds without a scan") {
+    val (got, jobs) = run(vecs, 0L, 3)
+    assert(got === ref(0L, 3))
+    assert(jobs === 1 + 2) // the first round's scan bounds nothing
+  }
+
+  test("lazy greedy: a tie at the (M+1)-th score rescans") {
+    // every pool vector is the same, so every score ties
+    val same = vecs.map { case (i, v) => (i, if (i == 0L) v else vecs(1)._2) }
+    val (got, jobs) = run(same, 0L, 3)
+    assert(got === ref(0L, 3, same))
+    assert(got.map(_._2) === Seq(1L, 2L, 3L))
+    assert(jobs === 1 + 3)
+  }
+
+  test("lazy greedy: n <= M scans once; n < k and k = 1 match the reference") {
+    assert(run(vecs, 0L, 8) === ((ref(0L, 8), 1 + 1))) // pool 29 <= M = 32
+    val small = vecs.take(5)                            // pool 4 < k
+    assert(run(small, 0L, 10) === ((ref(0L, 10, small), 1 + 1)))
+    assert(run(vecs, 0L, 1) === ((ref(0L, 1), 1 + 1)))
+  }
+
+  test("q_mmr's build runs the pinned number of jobs on sf0.01") {
+    val build = () => SparkEntry.queries("q_mmr")(spark, "/root/testdata/sf0.01")
+    build() // infers and memoises the fixture's schema
+    assert(TestSpark.jobsDuring(build())._2 === 5)
   }
 }

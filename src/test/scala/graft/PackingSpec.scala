@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,47 @@ class PackingSpec extends AnyFunSuite {
         .sortBy(_._1).map(_._2).toSeq
       assert(got === expected, s"parts=$parts")
     }
+  }
+
+  test("a multi-value cumsum equals one single-value call per value, the " +
+      "sequential scan and, in each _total, the column sum") {
+    val rows = (0 until 500).map(i =>
+      (i.toLong, ((i * 37) % 91 + 1).toLong, ((i * 53) % 17 - 8).toLong))
+    val (as, bs) = (rows.map(_._2), rows.map(_._3))
+    for (parts <- Seq(1, 19)) {
+      val df = rows.toDF("id", "a", "b").repartition(parts)
+      val multi = Packing.withGlobalCumsum(df, col("id"),
+          Seq(col("a") -> "ca", col("b") -> "cb"))
+        .select("id", "ca", "cb", "ca_total", "cb_total")
+        .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      val single = Packing.withGlobalCumsum(
+          Packing.withGlobalCumsum(df, col("id"), col("a"), "ca"),
+          col("id"), col("b"), "cb")
+        .select("id", "ca", "cb").as[(Long, Long, Long)].collect()
+        .sortBy(_._1).toSeq
+      assert(multi.map(r => (r._1, r._2, r._3)) === single, s"parts=$parts")
+      assert(multi.map(_._2) === as.scanLeft(0L)(_ + _).init, s"parts=$parts")
+      assert(multi.map(_._3) === bs.scanLeft(0L)(_ + _).init, s"parts=$parts")
+      assert(multi.forall(r => r._4 == as.sum && r._5 == bs.sum), s"parts=$parts")
+    }
+  }
+
+  test("a multi-value cumsum of an empty input is empty") {
+    val df = Seq.empty[(Long, Long, Long)].toDF("id", "a", "b")
+    val out = Packing.withGlobalCumsum(df, col("id"),
+      Seq(col("a") -> "ca", col("b") -> "cb"))
+    assert(out.columns.toSeq === Seq("id", "a", "b", "ca", "ca_total", "cb", "cb_total"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("offsets and totals of every value share one global Window operator") {
+    val df = Packing.withGlobalCumsum(
+      (0 until 100).map(i => (i.toLong, i.toLong, 1L)).toDF("id", "a", "b"),
+      col("id"), Seq(col("a") -> "ca", col("b") -> "cb"))
+    val global = df.queryExecution.sparkPlan.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(global.size === 1, df.queryExecution.sparkPlan.toString)
   }
 
   test("packChunks: exact chunk ids and offsets at a tiny budget") {

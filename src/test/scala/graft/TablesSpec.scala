@@ -88,4 +88,20 @@ class TablesSpec extends AnyFunSuite {
     // events normalization yields the ns contract on the live fixture
     assert(Tables.events(spark, d).schema("ts").dataType.typeName === "long")
   }
+
+  test("a table's schema is inferred once per version of its file") {
+    val d = tmpDir()
+    writeNs(d)
+    Tables.events(spark, d)
+    assert(TestSpark.jobsDuring(Tables.events(spark, d))._2 === 0)
+    // rewritten at the same path with ts as a string: inferred again, and
+    // the drift contract still refuses it
+    rows.map { case (id, us, u, t, v, p) => (id, us.toString, u, t, v, p) }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
+    val (e, jobs) = TestSpark.jobsDuring(
+      intercept[IllegalStateException](Tables.events(spark, d)))
+    assert(jobs > 0)
+    assert(e.getMessage.startsWith("fixture drift: events.ts is string, expected instant"))
+  }
 }

@@ -4,11 +4,15 @@ from outDir/oracle_sql.json in DuckDB over the sfDir parquet tables and
 compare to the Spark parquet dumps (exact, column-name-sorted, row by row,
 NaN == NaN and null == null but null != NaN, arrays and structs element by
 element). Both sides are read through Arrow, which keeps NULL and NaN apart.
+Each column's Arrow type must also fall in the same class on both sides:
+integer, decimal, floating point, string, list or struct (lists and
+structs by their element types); any other type is its own class.
 
 Usage: compare.py <sfDir> <outDir> [query ...]
 """
 import json, sys, glob, math, os
 import duckdb
+import pyarrow.types as pat
 
 
 def isnan(v):
@@ -36,11 +40,30 @@ def mismatches(a, b):
     return [i for i, (x, y) in enumerate(zip(a, b)) if not same(x, y)]
 
 
+def type_class(t):
+    """The class of an Arrow type that the comparison holds equal."""
+    if pat.is_integer(t):
+        return "integer"
+    if pat.is_decimal(t):
+        return "decimal"
+    if pat.is_floating(t):
+        return "floating point"
+    if pat.is_string(t) or pat.is_large_string(t):
+        return "string"
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return f"list<{type_class(t.value_type)}>"
+    if pat.is_struct(t):
+        return "struct<" + ", ".join(f"{f.name}: {type_class(f.type)}" for f in t) + ">"
+    return str(t)
+
+
 def columns(rel):
-    """A DuckDB result as {column name: Python values}, read through Arrow
-    so that a NULL stays None (pandas would turn a NULL double into NaN)."""
+    """A DuckDB result as {column name: (type class, Python values)}, read
+    through Arrow so that a NULL stays None (pandas would turn a NULL
+    double into NaN)."""
     tbl = rel.fetch_arrow_table()
-    return {c: tbl.column(c).to_pylist() for c in tbl.column_names}
+    return {f.name: (type_class(f.type), tbl.column(f.name).to_pylist())
+            for f in tbl.schema}
 
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
@@ -70,6 +93,12 @@ for name, sql in sorted(oracle.items()):
     if sorted(ocols) != sorted(scols):
         print(f"{name}: SCHEMA MISMATCH spark={sorted(scols)} oracle={sorted(ocols)}"); fail += 1; continue
     cols = sorted(ocols)
+    types = {c: (ocols[c][0], scols[c][0]) for c in cols if ocols[c][0] != scols[c][0]}
+    if types:
+        print(f"{name}: TYPE MISMATCH " + ", ".join(
+            f"{c}: spark={sp} oracle={o}" for c, (o, sp) in types.items())); fail += 1; continue
+    ocols = {c: v for c, (_, v) in ocols.items()}
+    scols = {c: v for c, (_, v) in scols.items()}
     nrows = len(scols[cols[0]])
     if len(ocols[cols[0]]) != nrows:
         print(f"{name}: ROWS MISMATCH spark={nrows} oracle={len(ocols[cols[0]])}"); fail += 1; continue
