@@ -1722,17 +1722,21 @@ object BatchQueries {
         |ORDER BY rs.s_acctbal DESC, rs.n_name, rs.s_name, p.p_partkey
         |LIMIT 100""".stripMargin)),
 
-    // TPC-H Q11 shape: parts whose corpus-wide revenue share exceeds
-    // a threshold fraction of the global total — the
-    // HAVING-vs-global-scalar pattern. Money is quantized to exact
-    // integer basis points at the source (round of an IEEE double
-    // product is bit-identical across engines), so the sums, the
-    // 1-row global total (broadcast cross join), and the share
-    // comparison (value·1000 > total — multiplication instead of a
-    // rounding division) are all exact BIGINT. Overflow headroom:
-    // total·1000 < 2⁶³ holds to ~10¹⁵ basis points ≈ $10¹¹ corpus
-    // revenue; beyond that swap the bp column to DECIMAL(38,10) (the
-    // q_market_share pattern) at ~2× agg cost.
+    // TPC-H Q11 shape: parts whose corpus-wide revenue exceeds a
+    // multiple of the MEAN part revenue — the HAVING-vs-global-scalar
+    // pattern. The threshold is 4/3 × mean (value·n_parts·3 >
+    // total·4), so it scales with the part count and selects a
+    // non-empty head at every fixture scale (a fixed share of the
+    // total selects every part at sf0.001 and none from sf0.01 up).
+    // Money is quantized to exact integer basis points at the source
+    // (round of an IEEE double product is bit-identical across
+    // engines), so the sums, the 1-row global total and part count
+    // (broadcast cross join), and the comparison (multiplication
+    // instead of a rounding division) are all exact BIGINT. Overflow
+    // headroom: value·n_parts·3 ≈ 3·total < 2⁶³ holds to ~3·10¹⁸
+    // basis points ≈ $10¹⁴ corpus revenue; beyond that swap the bp
+    // column to DECIMAL(38,10) (the q_market_share pattern) at ~2×
+    // agg cost.
     "q_important_parts" -> Query((s, d) => {
       val bp = round(
         (col("l_extendedprice") * (lit(1.0) - col("l_discount"))) *
@@ -1740,9 +1744,10 @@ object BatchQueries {
       val pv = Tables.lineitem(s, d)
         .groupBy(col("l_partkey").as("p_partkey"))
         .agg(sum(bp).as("value_bp"))
-      val tot = pv.agg(sum(col("value_bp")).as("_total"))
+      val tot = pv.agg(sum(col("value_bp")).as("_total"),
+        count(lit(1)).as("_n"))
       pv.crossJoin(broadcast(tot))
-        .filter(col("value_bp") * 1000L > col("_total"))
+        .filter(col("value_bp") * col("_n") * 3L > col("_total") * 4L)
         .select(col("p_partkey"), col("value_bp"))
         .orderBy(col("value_bp").desc, col("p_partkey"))
     },
@@ -1752,9 +1757,10 @@ object BatchQueries {
         |    CAST(SUM(CAST(round((l_extendedprice * (1.0 - l_discount))
         |      * 10000) AS BIGINT)) AS BIGINT) AS value_bp
         |  FROM lineitem GROUP BY 1),
-        |tot AS (SELECT SUM(value_bp) AS total FROM pv)
+        |tot AS (SELECT SUM(value_bp) AS total, count(*) AS n_parts
+        |  FROM pv)
         |SELECT p_partkey, value_bp FROM pv, tot
-        |WHERE value_bp * 1000 > total
+        |WHERE value_bp * n_parts * 3 > total * 4
         |ORDER BY value_bp DESC, p_partkey""".stripMargin)),
 
     // TPC-H Q20 shape: suppliers holding a dominant share (> 20%) of

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Content-addressed naming for persisted artifact tables (BPE merge
-  * tables, gram relations, ANN indexes — every get-or-build family).
+  * tables, gram relations, ANN indexes — every get-or-build family),
+  * and the one locked get-or-build ([[getOrBuild]]) the BPE and gram
+  * artifacts share: a builder only says how to write its table.
   *
   * Round-17, closing round-16 verdict "What's wrong" #2: artifact
   * table names used to key on `(dir, params, corpus row count)` via
@@ -65,6 +67,40 @@ object Artifacts {
     */
   def tableName(prefix: String, params: String, fp: Long): String =
     s"${prefix}_${params}_f${java.lang.Long.toHexString(fp)}"
+
+  // Per-table monitors serializing get-or-build: a build racing a
+  // concurrent get-or-build on one warehouse would double-write the
+  // external path. In-JVM races are real (bench child chunks, parallel
+  // test suites); CROSS-JVM races are structurally absent under the
+  // default warehouse — the Derby metastore is single-process, so two
+  // JVMs never share a catalog.
+  private val locks =
+    scala.collection.concurrent.TrieMap.empty[String, Object]
+
+  /** THE get-or-build every artifact family shares (BPE merge tables,
+    * gram relations): names the table `<prefix>_<params>_f<fp>` from
+    * the content [[fingerprint]] of `cols` over `corpus`, and — under
+    * that table's lock — calls `build(table, path)` only if the table
+    * is absent. `path` is `<warehouse>/<table>_data`: an EXTERNAL
+    * table, because a fresh catalog (new Derby per JVM) with a
+    * leftover data dir from a previous run must overwrite, not refuse
+    * (managed CTAS throws LOCATION_ALREADY_EXISTS on a non-empty
+    * managed location). Returns the table name.
+    */
+  def getOrBuild(corpus: DataFrame, cacheKey: String, prefix: String,
+      params: String, cols: Column*)(
+      build: (String, String) => Unit): String = {
+    val spark = corpus.sparkSession
+    val tbl = tableName(prefix, params,
+      fingerprint(corpus, cacheKey, cols: _*))
+    locks.getOrElseUpdate(tbl, new Object).synchronized {
+      if (!spark.catalog.tableExists(tbl)) {
+        val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+        build(tbl, s"$wh/${tbl}_data")
+      }
+    }
+    tbl
+  }
 
   /** Test seam: drop a cached fingerprint so a spec can model a
     * fresh session against a regenerated fixture.

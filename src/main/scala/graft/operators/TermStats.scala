@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   * rank-window + filter. No collect(), no vocabulary broadcast (at
   * 100 TB the vocab can be billions of terms, so document frequency
   * must stay a distributed relation joined on the term key).
+  *
+  * The n-gram family (contamination, novelty, shared-gram share,
+  * trim spans) is written once over ONE gram relation `(_id, [pos,]
+  * _k)` — see the section at the end: the inline hashed source, its
+  * saved bucketed table and the streaming novelty twin all feed the
+  * same four consumers.
   */
 object TermStats {
 
@@ -436,196 +442,6 @@ object TermStats {
       .withColumn("avg_centibits", expr("total_bits * 100 DIV n_tokens"))
   }
 
-  /** Eval-set DECONTAMINATION audit (Brown et al. 2020, GPT-3
-    * appendix C; the n-gram-overlap test-set-leakage check every
-    * pretraining pipeline runs before training and every eval report
-    * runs after): for each TRAINING document, how many of its
-    * distinct word n-grams also occur in ANY held-out evaluation
-    * document — (doc_id, n_grams, n_contaminated, contam_pct), the
-    * relation a pipeline filters (or flags) on before the corpus
-    * ships. `isEval` marks the benchmark slice; both slices tokenize
-    * identically ([[cleanWords]] → positional [[ngrams]] →
-    * array_distinct before the explode, all stateless).
-    *
-    * Scale shape: gram-keyed throughout — the eval gram set is a
-    * DISTINCT relation joined on the gram key (never a broadcast or
-    * driver-side set: a 10⁵-task eval SUITE is small, but the same
-    * audit runs train-vs-train at corpus scale); with `hashedKey`
-    * both the distinct and the LEFT join move 8-byte xxhash64 longs
-    * instead of ~6-word strings (the q_ngram_novelty key-narrowing),
-    * and the output is gram-free so the string-key oracle still
-    * gates it exactly (collisions ≈ |grams|²/2⁶⁵ — immaterial;
-    * TermStatsSpec pins hashed == string on the fixture). Per-doc
-    * rollup is one combinable aggregate.
-    */
-  def evalContamination(df: DataFrame, id: Column, text: Column,
-      isEval: Column, n: Int, hashedKey: Boolean = true): DataFrame = {
-    // the eval/train SPLIT happens before tokenization, so each doc
-    // is tokenized exactly once (two disjoint scans = one corpus
-    // pass). Measured A/B at sf0.1 (standalone, quiesced): split
-    // 16.5 s ≈ recompute 16.9 s < persist 17.5 s — locally the cost
-    // is the train-gram aggregate shuffle, not the tokenize, so the
-    // variants tie; the split form is kept because at 100 TB the
-    // second full-corpus scan the recompute form pays IS material
-    // (I/O-bound there, CPU-bound here), and caching an exploded
-    // relation ~5× the corpus is the worst of the three
-    // hashed path: the Shingles kernel fuses gram build + per-doc
-    // distinct + xxhash64 into one codegen'd pass (hash values
-    // byte-identical to xxhash64(concat_ws(" ", gram)) — see
-    // [[hashedGrams]]); string path stays the HOF chain the oracle
-    // mirrors structurally (parity pinned in TermStatsSpec)
-    def gramsOf(slice: DataFrame) =
-      if (hashedKey) slice.select(id.as("_id"),
-        explode(hashedGrams(cleanWords(text), n, distinct = true))
-          .as("_k"))
-      else slice.select(id.as("_id"),
-          explode(array_distinct(ngrams(cleanWords(text), n))).as("_g"))
-        .select(col("_id"), col("_g").as("_k"))
-    val evalKeys = gramsOf(df.filter(isEval)).select(col("_k"))
-      .distinct().withColumn("_hit", lit(1L))
-    gramsOf(df.filter(!isEval))
-      .join(evalKeys, Seq("_k"), "left")
-      .groupBy(col("_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_contaminated"))
-      .withColumn("contam_pct",
-        expr("n_contaminated * 100 DIV n_grams"))
-  }
-
-  /** Materialize the tokenize→distinct-n-gram relation as a saved
-    * table BUCKETED on the gram key — the artifact pattern (BPE
-    * merges, ANN indexes) applied to GRAMS: the corpus-gram scan is
-    * the shared fixed cost of the whole dedup/contamination/novelty
-    * family (~17 s each at sf0.1 because every query re-pays it), and
-    * a corpus's gram relation changes exactly when the corpus does.
-    * One materialization, N consumers; gram-key-bucketed, so every
-    * downstream distinct/join on `_k` reads the corpus side
-    * EXCHANGE-FREE. Schema: (_id, _k) with _k = xxhash64(gram) — the
-    * 8-byte key the family already joins on; external table (explicit
-    * `path`), same staleness/overwrite contract as the other
-    * artifacts.
-    */
-  def buildGramTable(df: DataFrame, id: Column, text: Column, n: Int,
-      table: String, path: String, buckets: Int = 8): Unit =
-    // Shingles kernel: same `_k` values as the previous
-    // array_distinct(ngrams) → xxhash64 chain (hash input identical
-    // byte for byte), so existing saved tables stay compatible
-    df.select(id.as("_id"),
-        explode(hashedGrams(cleanWords(text), n, distinct = true))
-          .as("_k"))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "_k").sortBy("_k")
-      .saveAsTable(table)
-
-  /** [[evalContamination]] over a saved gram table: identical output
-    * (TermStatsSpec pins it), ZERO tokenization — the steady-state
-    * shape when one corpus snapshot feeds many leakage audits
-    * (per-benchmark eval slices, per-epoch checks). `isEval` is a
-    * predicate over `_id` (the doc id as stored). Bucket-join bonus:
-    * both the eval-key distinct and the train-side join group by the
-    * table's own bucketing, so neither shuffles the corpus grams.
-    */
-  def evalContaminationFromTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, isEval: Column): DataFrame = {
-    val keyed = spark.table(table)
-    val evalKeys = keyed.filter(isEval).select(col("_k")).distinct()
-      .withColumn("_hit", lit(1L))
-    keyed.filter(!isEval)
-      .join(evalKeys, Seq("_k"), "left")
-      .groupBy(col("_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_contaminated"))
-      .withColumn("contam_pct",
-        expr("n_contaminated * 100 DIV n_grams"))
-  }
-
-  /** [[ngramNovelty]]-shaped audit over the saved DISTINCT gram table
-    * (round-17; the q_contam_artifact pattern extended to the third
-    * gram consumer): `isNew` is a predicate over `_id` splitting the
-    * increment from the base corpus. Identical output to the inline
-    * novelty query — the shared oracle hash-gates it — with ZERO
-    * tokenization: the fresh side is the table filtered (already
-    * distinct per doc), the base side a bucket-local distinct, and
-    * the LEFT join runs inside the table's own bucketing, so the
-    * corpus grams never shuffle. Steady-state shape when one corpus
-    * snapshot scores many candidate increments.
-    */
-  def ngramNoveltyFromTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, isNew: Column): DataFrame = {
-    val keyed = spark.table(table)
-    val base = keyed.filter(!isNew).select(col("_k")).distinct()
-      .withColumn("_seen", lit(1L))
-    keyed.filter(isNew)
-      .join(base, Seq("_k"), "left")
-      .groupBy(col("_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("_seen"), lit(0L))).as("n_seen"))
-      .select(col("_id"), col("n_grams"), col("n_seen"),
-        ((col("n_grams") - col("n_seen")).cast("double") /
-          col("n_grams").cast("double")).as("novelty_frac"))
-  }
-
-  /** Materialize the POSITIONAL gram relation `(_id, pos, _k)` as a
-    * saved table bucketed on the gram key — the positional sibling of
-    * [[buildGramTable]] for the consumers that need gram POSITIONS or
-    * per-position counts ([[crossDocNgramStats]]'s duplicated-share
-    * and [[sharedGramSpans]]'s trim spans), which the distinct table
-    * cannot serve. Same key (`xxhash64` of the gram string), same
-    * bucketing contract: every downstream groupBy/join on `_k` — and,
-    * because hash-partitioning on `_k` co-locates equal `(_id, _k)`
-    * pairs, every groupBy on `(_id, _k)` too — reads the corpus side
-    * exchange-free.
-    */
-  def buildGramPosTable(df: DataFrame, id: Column, text: Column, n: Int,
-      table: String, path: String, buckets: Int = 8): Unit =
-    // positional Shingles kernel (distinct = false): index i of the
-    // hash array IS the gram-start token index, so posexplode yields
-    // the identical (pos, _k) pairs the ngrams-string chain produced
-    df.select(id.as("_id"),
-        posexplode(hashedGrams(cleanWords(text), n, distinct = false))
-          .as(Seq("pos", "_k")))
-      .select(col("_id"), col("pos").cast("long").as("pos"), col("_k"))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "_k").sortBy("_k")
-      .saveAsTable(table)
-
-  /** [[crossDocNgramStats]] over a saved positional gram table:
-    * identical output (the shared oracle hash-gates it), zero
-    * tokenization. Both aggregations run exchange-free — the
-    * `(_id, _k)` partial agg because partitioning on `_k` already
-    * clusters equal pairs, the doc-frequency agg on the bucket key
-    * itself; only the final per-doc rollup shuffles (on `_id`,
-    * |docs|-sized — unavoidable and small relative to grams).
-    */
-  def crossDocNgramStatsFromTable(
-      spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    sharedGramRollup(
-      spark.table(table).select(col("_id"), col("_k").as("gram")))
-
-  /** [[sharedGramSpans]] over a saved positional gram table: the
-    * doc-frequency gate groups on the bucket key (exchange-free),
-    * the position join stays inside the bucketing, and only the
-    * per-doc gaps-and-islands window shuffles on `_id`.
-    */
-  def sharedGramSpansFromTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, n: Int): DataFrame = {
-    val toks = spark.table(table)
-    val docFreq = toks.groupBy(col("_k"))
-      .agg(count_distinct(col("_id")).as("_nd"))
-    val w = Window.partitionBy(col("_id")).orderBy(col("pos"))
-    toks.join(docFreq.filter(col("_nd") > 1), "_k")
-      .select(col("_id"), col("pos"))
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) === 1L, 0L)
-          .otherwise(1L))
-      .withColumn("island", sum(col("brk")).over(w))
-      .groupBy(col("_id"), col("island"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(n.toLong - 1)).as("span_end"),
-        count(lit(1)).as("span_grams"))
-      .drop("island")
-  }
-
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): rank each
     * document by its LM quality signal WITHIN its group (CCNet
     * buckets per language; here `group` is the caller's slice — e.g.
@@ -753,6 +569,122 @@ object TermStats {
         "bigrams"), "_id")
   }
 
+  // ---- The n-gram family: one gram relation, four consumers ----------
+  //
+  // Every n-gram consumer below is a function of ONE relation, the
+  // gram rows `(_id, [pos,] _k)`, and never of the text. Three sources
+  // feed it: the hashed inline source ([[gramKeys]] /
+  // [[gramPositions]], the Shingles kernel's xxhash64 keys), a saved
+  // bucketed table of that same source (`spark.table(tbl)`, written by
+  // [[saveGramTable]]), and — in test sources only — the string-key
+  // `ngrams` chain the DuckDB oracles replay, which pins hashed ==
+  // string on the fixtures. Every consumer output is gram-free
+  // (per-doc counts and positions), so the string-key oracle gates the
+  // hashed source exactly (64-bit collisions ≈ |grams|²/2⁶⁵ —
+  // immaterial). The streaming novelty twin reads the same source.
+
+  /** The hashed gram relation `(_id, _k)`: `_k` = xxhash64 of each
+    * space-joined word `n`-gram ([[hashedGrams]], one codegen'd pass —
+    * byte-identical to `xxhash64(concat_ws(" ", gram))`). With
+    * `distinct` each doc's grams are a set (the contamination/novelty
+    * input); without, every gram occurrence is a row (the
+    * [[sharedGramRollup]] input, which counts multiplicities).
+    * Documents with fewer than `n` words have no rows.
+    */
+  def gramKeys(df: DataFrame, id: Column, text: Column, n: Int,
+      distinct: Boolean): DataFrame = {
+    require(n >= 1, "n must be >= 1")
+    df.select(id.as("_id"),
+      explode(hashedGrams(cleanWords(text), n, distinct)).as("_k"))
+  }
+
+  /** The positional hashed gram relation `(_id, pos, _k)`: one row per
+    * gram start, `pos` the 0-based token index as BIGINT (index i of
+    * the positional [[hashedGrams]] array is the gram starting at
+    * token i). The [[sharedGramSpans]] input; [[sharedGramRollup]]
+    * reads it too (it ignores `pos`).
+    */
+  def gramPositions(df: DataFrame, id: Column, text: Column,
+      n: Int): DataFrame = {
+    require(n >= 1, "n must be >= 1")
+    df.select(id.as("_id"),
+        posexplode(hashedGrams(cleanWords(text), n, distinct = false))
+          .as(Seq("pos", "_k")))
+      .select(col("_id"), col("pos").cast("long").as("pos"), col("_k"))
+  }
+
+  /** Save a gram relation as a table BUCKETED and sorted on `_k` — the
+    * artifact pattern (BPE merges, ANN indexes) applied to grams: the
+    * corpus tokenization is the shared fixed cost of the whole family,
+    * and a corpus's gram relation changes exactly when the corpus
+    * does. One materialization, N consumers; every downstream
+    * distinct/groupBy/join on `_k` — and every groupBy on `(_id, _k)`,
+    * since hash-partitioning on `_k` co-locates equal pairs — reads
+    * the corpus side exchange-free. External table (explicit `path`),
+    * the same overwrite contract as the other artifacts.
+    */
+  def saveGramTable(grams: DataFrame, table: String, path: String,
+      buckets: Int = 8): Unit =
+    grams.write.mode("overwrite").option("path", path)
+      .bucketBy(buckets, "_k").sortBy("_k")
+      .saveAsTable(table)
+
+  /** Per doc of the `probe` slice of a per-doc-distinct gram relation:
+    * its gram count and how many of its grams occur anywhere in the
+    * `keys` slice — (_id, n_grams, _hits). Both slices are FILTERS of
+    * the one relation on `_id`: over the inline source Catalyst pushes
+    * each filter below the explode, so each side tokenizes only its
+    * own documents (two disjoint scans = one corpus pass; measured no
+    * slower than persisting the exploded relation, which is ~5× the
+    * corpus); over a bucketed table both the key distinct and the LEFT
+    * join run inside the table's own bucketing. The key side is a
+    * DISTINCT relation joined on the gram key — never a broadcast or a
+    * driver-side set, so the same audit runs train-vs-train at corpus
+    * scale.
+    */
+  private def overlap(grams: DataFrame, probe: Column,
+      keys: Column): DataFrame = {
+    val hit = grams.filter(keys).select(col("_k")).distinct()
+      .withColumn("_hit", lit(1L))
+    grams.filter(probe)
+      .join(hit, Seq("_k"), "left")
+      .groupBy(col("_id"))
+      .agg(count(lit(1)).as("n_grams"),
+        sum(coalesce(col("_hit"), lit(0L))).as("_hits"))
+  }
+
+  /** Eval-set DECONTAMINATION audit (Brown et al. 2020, GPT-3
+    * appendix C; the n-gram-overlap test-set-leakage check every
+    * pretraining pipeline runs before training and every eval report
+    * runs after): for each TRAINING document, how many of its
+    * distinct n-grams also occur in ANY held-out evaluation
+    * document — (_id, n_grams, n_contaminated, contam_pct), the
+    * relation a pipeline filters (or flags) on before the corpus
+    * ships. `grams` is a per-doc-distinct `(_id, _k)` relation
+    * ([[gramKeys]] with `distinct`, or its saved table); `isEval` is a
+    * predicate over `_id` marking the benchmark slice. An empty eval
+    * slice reports every train doc at zero.
+    */
+  def contamination(grams: DataFrame, isEval: Column): DataFrame =
+    overlap(grams, !isEval, isEval)
+      .select(col("_id"), col("n_grams"),
+        col("_hits").as("n_contaminated"))
+      .withColumn("contam_pct", expr("n_contaminated * 100 DIV n_grams"))
+
+  /** N-gram NOVELTY gate (continual-pretraining admission): for each
+    * document of the increment (`isNew`, a predicate over `_id`), the
+    * fraction of its distinct n-grams never seen in the rest of the
+    * corpus — (_id, n_grams, n_seen, novelty_frac). Same input
+    * contract as [[contamination]]; the history compresses to its
+    * distinct-gram relation (vocabulary-sized, reusable across
+    * increments) and each increment LEFT-joins on the gram key.
+    */
+  def novelty(grams: DataFrame, isNew: Column): DataFrame =
+    overlap(grams, isNew, !isNew)
+      .select(col("_id"), col("n_grams"), col("_hits").as("n_seen"),
+        ((col("n_grams") - col("_hits")).cast("double") /
+          col("n_grams").cast("double")).as("novelty_frac"))
+
   /** CROSS-document duplicated n-gram profile — the substring-level
     * dedup signal document-level MinHash misses (Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better",
@@ -760,126 +692,23 @@ object TermStats {
     * templated spans recur across otherwise-distinct documents, and
     * their per-doc share is the standard gate/trim criterion.
     *
-    * For each document: total n-gram positions, positions whose n-gram
-    * also occurs in at least one OTHER document, and the shared
-    * fraction. Shape at scale: explode → (doc, gram) partial agg (the
-    * map-side combine absorbs within-doc repeats before the shuffle) →
-    * gram-keyed doc-frequency relation → join back on gram → per-doc
-    * roll-up. Both aggregations and the join key on the gram; no
-    * vocabulary broadcast, no collect. For 100 TB the gram key would
-    * be `xxhash64(gram)` (8 bytes vs ~30-char strings through two
-    * shuffles — see Shingles/SetSimJoin for the hashed variant); the
-    * string key here keeps the query oracle-expressible.
-    *
-    * Documents with fewer than `n` words produce no n-grams and are
-    * absent from the output (mirrored by the oracle).
+    * Input: every gram occurrence as an `(_id, _k)` row ([[gramKeys]]
+    * without `distinct`, or the positional table). Per document: total
+    * gram positions, positions whose gram also occurs in at least one
+    * OTHER document, and the shared fraction. Shape: (doc, gram)
+    * partial agg (the map-side combine absorbs within-doc repeats
+    * before the shuffle) → gram-keyed doc-frequency relation → join
+    * back on the gram → per-doc roll-up; no vocabulary broadcast, no
+    * collect. Over the bucketed table both gram aggregations run
+    * exchange-free and only the |docs|-row rollup shuffles.
     */
-  def crossDocNgramStats(df: DataFrame, id: Column, text: Column,
-      n: Int): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    val base = df.select(id.as("_id"), cleanWords(text).as("_ws"))
-    sharedGramRollup(base
-      .select(col("_id"), explode(ngrams(col("_ws"), n)).as("gram")))
-  }
-
-  /** Production-scale variant of [[crossDocNgramStats]]: the gram key
-    * is `xxhash64` of the gram string, so both shuffles and the join
-    * move 8-byte longs instead of ~(6·n)-char strings — the same
-    * key-narrowing [[graft.functions.Shingles]]/SetSimJoin use. Output
-    * is identical to the string-key path absent a 64-bit collision
-    * (expected collisions ≈ |grams|²/2⁶⁵ — immaterial even at 100 TB
-    * gram counts for a per-doc FRACTION; TermStatsSpec pins equality
-    * against the string path on real data). The string-key variant is
-    * what keeps the DuckDB oracle exact.
-    */
-  def crossDocNgramStatsHashed(df: DataFrame, id: Column, text: Column,
-      n: Int): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    // one codegen'd pass builds + hashes the positional grams
-    // ([[hashedGrams]], distinct = false: the rollup needs per-doc
-    // gram multiplicities)
-    sharedGramRollup(df.select(id.as("_id"),
-      explode(hashedGrams(cleanWords(text), n, distinct = false))
-        .as("gram")))
-  }
-
-  /** Maximal duplicated spans per document — the actual REMOVAL unit
-    * of substring-level dedup (Lee et al. trim the duplicated spans,
-    * not whole documents): positions whose n-gram occurs in another
-    * document, merged into maximal runs (consecutive gram starts
-    * overlap by n-1 tokens, so a run is one contiguous duplicated
-    * region). Output per span: (_id, span_start, span_end, span_grams)
-    * with token indices 0-based and span_end inclusive
-    * (= last gram start + n-1).
-    *
-    * Shape: the same explode → gram-keyed doc-frequency join as
-    * [[crossDocNgramStats]], then gaps-and-islands inside the per-doc
-    * window (lag → break flag → running sum), the [[Sessionize]]
-    * pattern transplanted from time to token position — one extra
-    * shuffle on the doc key, spill-safe through the sort machinery.
-    */
-  def sharedGramSpans(df: DataFrame, id: Column, text: Column,
-      n: Int): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    val base = df.select(id.as("_id"), cleanWords(text).as("_ws"))
-    val toks = base.select(col("_id"),
-      posexplode(ngrams(col("_ws"), n)).as(Seq("pos", "gram")))
-    val docFreq = toks.groupBy(col("gram"))
-      .agg(count_distinct(col("_id")).as("_nd"))
-    val w = Window.partitionBy(col("_id")).orderBy(col("pos"))
-    toks.join(docFreq.filter(col("_nd") > 1), "gram")
-      .select(col("_id"), col("pos").cast("long").as("pos"))
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) === 1L, 0L)
-          .otherwise(1L))
-      .withColumn("island", sum(col("brk")).over(w))
-      .groupBy(col("_id"), col("island"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(n.toLong - 1)).as("span_end"),
-        count(lit(1)).as("span_grams"))
-      .drop("island")
-  }
-
-  /** Production-scale variant of [[sharedGramSpans]] — the same
-    * key-narrowing as [[crossDocNgramStatsHashed]]: gram keys are the
-    * Shingles kernel's xxhash64 longs, so the doc-frequency shuffle
-    * and the position join move 8-byte keys instead of ~(6·n)-char
-    * strings, and the gram build is one codegen'd pass. Output
-    * (span positions/counts — gram-free) is identical to the
-    * string-key path absent a 64-bit collision (TermStatsSpec pins
-    * equality on the fixtures; the string variant is what the DuckDB
-    * oracle replays).
-    */
-  def sharedGramSpansHashed(df: DataFrame, id: Column, text: Column,
-      n: Int): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    val toks = df.select(id.as("_id"),
-      posexplode(hashedGrams(cleanWords(text), n, distinct = false))
-        .as(Seq("pos", "gram")))
-    val docFreq = toks.groupBy(col("gram"))
-      .agg(count_distinct(col("_id")).as("_nd"))
-    val w = Window.partitionBy(col("_id")).orderBy(col("pos"))
-    toks.join(docFreq.filter(col("_nd") > 1), "gram")
-      .select(col("_id"), col("pos").cast("long").as("pos"))
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) === 1L, 0L)
-          .otherwise(1L))
-      .withColumn("island", sum(col("brk")).over(w))
-      .groupBy(col("_id"), col("island"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(n.toLong - 1)).as("span_end"),
-        count(lit(1)).as("span_grams"))
-      .drop("island")
-  }
-
-  /** (_id, gram) positions → per-doc totals/shared counts/fraction. */
-  private def sharedGramRollup(grams: DataFrame): DataFrame = {
+  def sharedGramRollup(grams: DataFrame): DataFrame = {
     val perDoc = grams
-      .groupBy(col("_id"), col("gram"))
+      .groupBy(col("_id"), col("_k"))
       .agg(count(lit(1)).as("_cnt"))
-    val docFreq = perDoc.groupBy(col("gram"))
+    val docFreq = perDoc.groupBy(col("_k"))
       .agg(count(lit(1)).as("_nd"))
-    perDoc.join(docFreq, "gram")
+    perDoc.join(docFreq, "_k")
       .groupBy(col("_id"))
       .agg(
         sum(col("_cnt")).as("n_grams"),
@@ -888,5 +717,39 @@ object TermStats {
       .withColumn("shared_gram_frac",
         col("n_shared_grams").cast("double") /
           col("n_grams").cast("double"))
+  }
+
+  /** Maximal duplicated spans per document — the actual REMOVAL unit
+    * of substring-level dedup (Lee et al. trim the duplicated spans,
+    * not whole documents): positions whose n-gram occurs in another
+    * document, merged into maximal runs (consecutive gram starts
+    * overlap by n-1 tokens, so a run is one contiguous duplicated
+    * region). Input: the positional `(_id, pos, _k)` relation of order
+    * `n` ([[gramPositions]] or its table). Output per span:
+    * (_id, span_start, span_end, span_grams) with token indices
+    * 0-based and span_end inclusive (= last gram start + n-1).
+    *
+    * Shape: the gram-keyed doc-frequency gate of [[sharedGramRollup]],
+    * then gaps-and-islands inside the per-doc window (lag → break flag
+    * → running sum), the [[Sessionize]] pattern transplanted from time
+    * to token position — one extra shuffle on the doc key, spill-safe
+    * through the sort machinery.
+    */
+  def sharedGramSpans(grams: DataFrame, n: Int): DataFrame = {
+    require(n >= 1, "n must be >= 1")
+    val docFreq = grams.groupBy(col("_k"))
+      .agg(count_distinct(col("_id")).as("_nd"))
+    val w = Window.partitionBy(col("_id")).orderBy(col("pos"))
+    grams.join(docFreq.filter(col("_nd") > 1), "_k")
+      .select(col("_id"), col("pos"))
+      .withColumn("brk",
+        when(col("pos") - lag(col("pos"), 1).over(w) === 1L, 0L)
+          .otherwise(1L))
+      .withColumn("island", sum(col("brk")).over(w))
+      .groupBy(col("_id"), col("island"))
+      .agg(min(col("pos")).as("span_start"),
+        (max(col("pos")) + lit(n.toLong - 1)).as("span_end"),
+        count(lit(1)).as("span_grams"))
+      .drop("island")
   }
 }

@@ -16,13 +16,23 @@ case class EnrichedBar(symbol: String, ts: Long, close: Double,
 
 /** Per-symbol running state: exactly the O(1)-per-key memory the
   * indicator recursions need — last 19 closes (MA20 needs 20 incl.
-  * current), last 13 gains/losses (RSI-14), the previous close, and
-  * the three EMA accumulators.
+  * current), last 13 gains/losses (RSI-14), the previous close, the
+  * three EMA accumulators, and the last stepped bar's ts (the
+  * ordering guard in [[StatefulIndicators.enrich]]).
+  *
+  * STATE-SCHEMA COMPATIBILITY: `lastTs` was added after the initial
+  * release. flatMapGroupsWithState serializes this case class into
+  * the checkpoint, so a query restarted from a checkpoint written by
+  * the seven-field schema will fail to decode its state — upgrading
+  * across this change requires a FRESH checkpoint directory (or an
+  * offline state rewrite), the same cost as [[CusumChartState]]'s
+  * `lastTs`.
   */
 case class IndicatorState(recentCloses: List[Double],
     recentGains: List[Double], recentLosses: List[Double],
     prevClose: Option[Double],
-    ema12: Option[Double], ema26: Option[Double], sig: Option[Double])
+    ema12: Option[Double], ema26: Option[Double], sig: Option[Double],
+    lastTs: Long = Long.MinValue)
 
 /** CONTINUOUS streaming indicators: unlike the reference — whose
   * rolling windows silently restart at every micro-batch boundary
@@ -38,7 +48,11 @@ case class IndicatorState(recentCloses: List[Double],
   * the symbol, identical to the batch pipeline's partitioning. Bars
   * must arrive in ts order per symbol ACROSS batches (true for the
   * reference's per-run history resends after [[StreamingPipeline
-  * .dedupStream]]); within a batch they are sorted here.
+  * .dedupStream]]); within a batch they are sorted here. A bar older
+  * than its symbol's last stepped bar fails the task with a contract
+  * error — the same contract as [[StreamingCusum.chart]] and
+  * [[StreamingSessionize]] (detectable, never silently-wrong
+  * indicators).
   */
 object StatefulIndicators {
 
@@ -100,7 +114,7 @@ object StatefulIndicators {
 
     val next = IndicatorState(closes.takeRight(19).toList,
       gains.takeRight(13).toList, losses.takeRight(13).toList,
-      Some(bar.close), Some(e12), Some(e26), Some(sig))
+      Some(bar.close), Some(e12), Some(e26), Some(sig), bar.ts)
     (next, EnrichedBar(bar.symbol, bar.ts, bar.close, ma5, ma20, rsi,
       line, sig, hist, sug, reason))
   }
@@ -115,6 +129,11 @@ object StatefulIndicators {
       state: GroupState[IndicatorState]): Iterator[EnrichedBar] = {
     var st = state.getOption.getOrElse(empty)
     val out = rows.toSeq.sortBy(_.ts).map { bar =>
+      if (bar.ts < st.lastTs)
+        throw new IllegalStateException(
+          s"out-of-order bar for symbol $symbol: ts=${bar.ts} < " +
+            s"last=${st.lastTs} — StatefulIndicators requires per-symbol " +
+            "ts-ordered arrival across micro-batches")
       val (next, enriched) = step(st, bar)
       st = next
       enriched

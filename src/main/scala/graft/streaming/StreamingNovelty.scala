@@ -54,13 +54,14 @@ case class NoveltyPartial(doc_id: Long, n_grams: Long, n_seen: Long)
   * relation doesn't have).
   *
   * Scale shape: one shuffle keyed on shard (exactly `shards` live
-  * groups forever); the gram hash is the SAME xxhash64 key
-  * q_ngram_novelty joins on, computed map-side; per-doc distinctness
-  * comes from `array_distinct` on the gram array BEFORE the explode —
-  * per-row work, NOT a stateful streaming dropDuplicates. A shard
-  * group buffers its slice of one micro-batch's gram rows while
-  * scoring (bounded by batch size / shards — the same within-group
-  * materialization every keyed-state op here performs).
+  * groups forever); the observations ARE the gram relation
+  * q_ngram_novelty consumes ([[graft.operators.TermStats.gramKeys]]:
+  * the same xxhash64 keys, computed map-side, per-doc distinct inside
+  * the Shingles kernel — per-row work, NOT a stateful streaming
+  * dropDuplicates). A shard group buffers its slice of one
+  * micro-batch's gram rows while scoring (bounded by batch size /
+  * shards — the same within-group materialization every keyed-state
+  * op here performs).
   */
 object StreamingNovelty {
 
@@ -72,21 +73,18 @@ object StreamingNovelty {
     Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
       Encoders.scalaLong)
 
-  /** (shard, doc_id, gram_hash) observation rows: per-doc-DISTINCT
-    * n-grams (array_distinct before the explode — stateless), hashed
-    * with the same xxhash64 the batch gate keys on, routed to a shard
-    * by the hash itself.
+  /** (shard, doc_id, gram_hash) observation rows: the batch gate's own
+    * per-doc-distinct hashed gram relation
+    * ([[graft.operators.TermStats.gramKeys]] — stateless, per row),
+    * routed to a shard by the gram key itself.
     */
   def observations(docs: DataFrame, id: Column, text: Column,
       n: Int, shards: Int): Dataset[(Int, Long, Long)] = {
     require(shards >= 1, "shards must be >= 1")
-    import graft.operators.TermStats
-    docs
-      .select(id.cast("long").as("_id"),
-        explode(array_distinct(
-          TermStats.ngrams(TermStats.cleanWords(text), n))).as("_g"))
-      .select(pmod(xxhash64(col("_g")), lit(shards)).cast("int"),
-        col("_id"), xxhash64(col("_g")))
+    graft.operators.TermStats
+      .gramKeys(docs, id.cast("long"), text, n, distinct = true)
+      .select(pmod(col("_k"), lit(shards)).cast("int"), col("_id"),
+        col("_k"))
       .as[(Int, Long, Long)]
   }
 

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The table-backed gram-family twins (round-17): each FromTable
-  * variant must equal its inline query bit for bit on the fixture —
-  * the same proof the shared DuckDB oracles re-run at sf0.01 — plus
-  * the degenerate edges (gram order longer than every document).
+/** The table-backed gram-family twins: each consumer fed the saved
+  * gram table must equal the same consumer fed the inline gram
+  * relation, bit for bit on the fixture — the same proof the shared
+  * DuckDB oracles re-run at sf0.01 — plus the degenerate edges (gram
+  * order longer than every document).
   */
 class GramTableSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -23,6 +24,10 @@ class GramTableSpec extends AnyFunSuite {
     assert(a == b, s"$artifact diverged from $inline")
   }
 
+  test("contamination from the gram table equals the inline audit") {
+    pin("q_contam_audit", "q_contam_artifact")
+  }
+
   test("novelty from the gram table equals the inline novelty query") {
     pin("q_ngram_novelty", "q_novelty_artifact")
   }
@@ -36,6 +41,8 @@ class GramTableSpec extends AnyFunSuite {
   }
 
   test("artifact twins share their inline oracles verbatim") {
+    assert(SparkEntry.oracleSql("q_contam_artifact") ==
+      SparkEntry.oracleSql("q_contam_audit"))
     assert(SparkEntry.oracleSql("q_novelty_artifact") ==
       SparkEntry.oracleSql("q_ngram_novelty"))
     assert(SparkEntry.oracleSql("q_shared_artifact") ==
@@ -51,24 +58,23 @@ class GramTableSpec extends AnyFunSuite {
     // table built at that order must round-trip as an empty table.
     val docs = Tables.documents(spark, dir)
     val n = 100000
-    val inline = graft.operators.TermStats.evalContamination(
-      docs, col("doc_id"), col("text"), col("doc_id") % 17 === 0, n)
+    import graft.operators.TermStats
+    val isEval = col("_id") % 17 === 0
+    val inline = TermStats.contamination(TermStats.gramKeys(docs,
+      col("doc_id"), col("text"), n, distinct = true), isEval)
     assert(inline.count() == 0L)
     val tbl = s"graft_gram_empty_spec_$n"
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-    graft.operators.TermStats.buildGramTable(docs, col("doc_id"),
-      col("text"), n, tbl, s"$wh/${tbl}_data")
+    TermStats.saveGramTable(TermStats.gramKeys(docs, col("doc_id"),
+      col("text"), n, distinct = true), tbl, s"$wh/${tbl}_data")
     assert(spark.table(tbl).count() == 0L)
-    assert(graft.operators.TermStats.evalContaminationFromTable(
-      spark, tbl, col("_id") % 17 === 0).count() == 0L)
-    assert(graft.operators.TermStats.ngramNoveltyFromTable(
-      spark, tbl, col("_id") % 10 === 0).count() == 0L)
+    assert(TermStats.contamination(spark.table(tbl), isEval).count() == 0L)
+    assert(TermStats.novelty(spark.table(tbl), col("_id") % 10 === 0)
+      .count() == 0L)
     val ptbl = s"graft_grampos_empty_spec_$n"
-    graft.operators.TermStats.buildGramPosTable(docs, col("doc_id"),
-      col("text"), n, ptbl, s"$wh/${ptbl}_data")
-    assert(graft.operators.TermStats.crossDocNgramStatsFromTable(
-      spark, ptbl).count() == 0L)
-    assert(graft.operators.TermStats.sharedGramSpansFromTable(
-      spark, ptbl, n).count() == 0L)
+    TermStats.saveGramTable(TermStats.gramPositions(docs, col("doc_id"),
+      col("text"), n), ptbl, s"$wh/${ptbl}_data")
+    assert(TermStats.sharedGramRollup(spark.table(ptbl)).count() == 0L)
+    assert(TermStats.sharedGramSpans(spark.table(ptbl), n).count() == 0L)
   }
 }

@@ -23,6 +23,20 @@ class SmokeSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
+  test("q_important_parts selects a non-empty head at sf0.001 and sf0.01") {
+    // its threshold scales with the part count (4/3 × the mean part
+    // value); a fixed share of the total selected nothing from sf0.01
+    // up, so its oracle compared two empty results there
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val parts = SparkEntry.queries("q_important_parts")(spark,
+        s"/root/testdata/$sf")
+      val all = Tables.lineitem(spark, s"/root/testdata/$sf")
+        .select("l_partkey").distinct().count()
+      val n = parts.count()
+      assert(n > 0L && n < all, s"$sf: $n of $all parts selected")
+    }
+  }
+
   test("exactly the four declared rows-only queries lack an oracle") {
     val rowsOnly = SparkEntry.catalogue.collect {
       case (name, Query(_, NoOracle(_))) => name

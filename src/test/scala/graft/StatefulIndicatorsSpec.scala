@@ -142,4 +142,25 @@ class StatefulIndicatorsSpec extends AnyFunSuite {
     }.toSeq
     assert(normalize(whole) === normalize(replay))
   }
+
+  test("cross-batch ordering violation is DETECTABLE — the query fails " +
+      "with the contract error, never silently-wrong indicators") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Bar]
+    val query = StatefulIndicators.enrich(stream.toDS())
+      .writeStream.format("memory").queryName("stateful_late")
+      .outputMode("append").start()
+    try {
+      stream.addData(Seq(Bar("ZZZ", 5000L, 10.0), Bar("ZZZ", 6000L, 11.0)))
+      query.processAllAvailable()
+      // a bar OLDER than ZZZ's last stepped ts arrives later
+      stream.addData(Seq(Bar("ZZZ", 4000L, 12.0)))
+      val e = intercept[Exception] { query.processAllAvailable() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(_.contains("out-of-order bar")),
+        s"expected the contract error, got: ${messages(e)}")
+    } finally query.stop()
+  }
 }

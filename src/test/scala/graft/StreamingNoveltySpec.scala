@@ -118,8 +118,8 @@ class StreamingNoveltySpec extends AnyFunSuite {
       .filter(col("doc_id") % 10 === 0)
       .select("doc_id", "n_grams", "n_seen", "novelty_frac")
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val batch = LlmQueries.ngramNoveltyQ(spark,
-        "/root/testdata/sf0.001", hashedKey = true)
+    val batch = SparkEntry.queries("q_ngram_novelty")(spark,
+        "/root/testdata/sf0.001")
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(streamed.nonEmpty && streamed === batch,
       "bounded-state stream must equal the oracle-gated batch gate")

@@ -64,8 +64,9 @@ object TermStatsProperties extends Properties("TermStats") {
   property("crossDocNgramStats equals brute force (n=2)") =
     forAll(corpusGen) { corpus =>
       import spark.implicits._
-      val got = TermStats.crossDocNgramStats(
-          corpus.toDF("doc_id", "text"), col("doc_id"), col("text"), 2)
+      val got = TermStats.sharedGramRollup(TermStats.gramKeys(
+          corpus.toDF("doc_id", "text"), col("doc_id"), col("text"), 2,
+          distinct = false))
         .select("_id", "n_grams", "n_shared_grams")
         .as[(Long, Long, Long)].collect()
         .map(t => t._1 -> (t._2, t._3)).toMap
@@ -75,8 +76,8 @@ object TermStatsProperties extends Properties("TermStats") {
   property("sharedGramSpans equals brute-force islands (n=2)") =
     forAll(corpusGen) { corpus =>
       import spark.implicits._
-      val got = TermStats.sharedGramSpans(
-          corpus.toDF("doc_id", "text"), col("doc_id"), col("text"), 2)
+      val got = TermStats.sharedGramSpans(TermStats.gramPositions(
+          corpus.toDF("doc_id", "text"), col("doc_id"), col("text"), 2), 2)
         .select("_id", "span_start", "span_end", "span_grams")
         .as[(Long, Long, Long, Long)].collect().toSet
       got == refSpans(corpus, 2)

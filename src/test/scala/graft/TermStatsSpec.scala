@@ -210,8 +210,8 @@ class TermStatsSpec extends AnyFunSuite {
 
   test("crossDocNgramStats: shared-across-docs grams counted per doc") {
     // bigrams: only "apple cherry" occurs in two docs (0 and 2)
-    val out = TermStats.crossDocNgramStats(
-        corpus, col("doc_id"), col("text"), 2)
+    val out = TermStats.sharedGramRollup(TermStats.gramKeys(
+        corpus, col("doc_id"), col("text"), 2, distinct = false))
       .select("_id", "n_grams", "n_shared_grams", "shared_gram_frac")
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(out === Seq(
@@ -221,7 +221,8 @@ class TermStatsSpec extends AnyFunSuite {
     // a within-doc repeat of a shared gram counts every position:
     // "x y x y" has "x y" twice; shared with doc 11 → 2 of its 3 grams
     val rep = Seq((10L, "x y x y"), (11L, "x y z")).toDF("doc_id", "text")
-    val r = TermStats.crossDocNgramStats(rep, col("doc_id"), col("text"), 2)
+    val r = TermStats.sharedGramRollup(TermStats.gramKeys(
+        rep, col("doc_id"), col("text"), 2, distinct = false))
       .select("_id", "n_grams", "n_shared_grams")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(r === Seq((10L, 3L, 2L), (11L, 2L, 1L)))
@@ -231,14 +232,16 @@ class TermStatsSpec extends AnyFunSuite {
     // "x y" is the only cross-doc bigram: doc 10 has it at positions 0
     // and 2 (non-adjacent → two spans), doc 11 once
     val c1 = Seq((10L, "x y x y"), (11L, "x y z")).toDF("doc_id", "text")
-    val s1 = TermStats.sharedGramSpans(c1, col("doc_id"), col("text"), 2)
+    val s1 = TermStats.sharedGramSpans(
+        TermStats.gramPositions(c1, col("doc_id"), col("text"), 2), 2)
       .select("_id", "span_start", "span_end", "span_grams")
       .as[(Long, Long, Long, Long)].collect().sortBy(t => (t._1, t._2)).toSeq
     assert(s1 === Seq((10L, 0L, 1L, 1L), (10L, 2L, 3L, 1L),
       (11L, 0L, 1L, 1L)))
     // adjacent duplicated positions 0 and 1 merge into ONE span 0..2
     val c2 = Seq((20L, "a b c d"), (21L, "a b c e")).toDF("doc_id", "text")
-    val s2 = TermStats.sharedGramSpans(c2, col("doc_id"), col("text"), 2)
+    val s2 = TermStats.sharedGramSpans(
+        TermStats.gramPositions(c2, col("doc_id"), col("text"), 2), 2)
       .select("_id", "span_start", "span_end", "span_grams")
       .as[(Long, Long, Long, Long)].collect().sortBy(t => (t._1, t._2)).toSeq
     assert(s2 === Seq((20L, 0L, 2L, 2L), (21L, 0L, 2L, 2L)))
@@ -246,44 +249,45 @@ class TermStatsSpec extends AnyFunSuite {
 
   test("hashed-gram shared-ngram path equals the string-key path") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val str = TermStats.crossDocNgramStats(
-        docs, col("doc_id"), col("text"), 5)
-      .select("_id", "n_grams", "n_shared_grams")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val hashed = TermStats.crossDocNgramStatsHashed(
-        docs, col("doc_id"), col("text"), 5)
-      .select("_id", "n_grams", "n_shared_grams")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    def run(grams: org.apache.spark.sql.DataFrame) =
+      TermStats.sharedGramRollup(grams)
+        .select("_id", "n_grams", "n_shared_grams")
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val str = run(StringGrams.keys(docs, col("doc_id"), col("text"), 5,
+      distinct = false))
+    val hashed = run(TermStats.gramKeys(docs, col("doc_id"), col("text"),
+      5, distinct = false))
     assert(str.nonEmpty && str === hashed)
   }
 
   test("hashed-gram spans path equals the string-key path") {
-    // q_dedup_spans ships the hashed-kernel variant (round-17); its
-    // DuckDB oracle replays raw gram strings — valid only while the
-    // two paths agree row-for-row on real data
+    // q_dedup_spans reads the hashed gram relation; its DuckDB oracle
+    // replays raw gram strings — valid only while the two sources
+    // agree row-for-row on real data
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val str = TermStats.sharedGramSpans(
-        docs, col("doc_id"), col("text"), 5)
-      .select("_id", "span_start", "span_end", "span_grams")
-      .as[(Long, Long, Long, Long)].collect()
-      .sortBy(t => (t._1, t._2)).toSeq
-    val hashed = TermStats.sharedGramSpansHashed(
-        docs, col("doc_id"), col("text"), 5)
-      .select("_id", "span_start", "span_end", "span_grams")
-      .as[(Long, Long, Long, Long)].collect()
-      .sortBy(t => (t._1, t._2)).toSeq
+    def run(grams: org.apache.spark.sql.DataFrame) =
+      TermStats.sharedGramSpans(grams, 5)
+        .select("_id", "span_start", "span_end", "span_grams")
+        .as[(Long, Long, Long, Long)].collect()
+        .sortBy(t => (t._1, t._2)).toSeq
+    val str = run(StringGrams.positions(docs, col("doc_id"), col("text"), 5))
+    val hashed = run(TermStats.gramPositions(docs, col("doc_id"),
+      col("text"), 5))
     assert(str.nonEmpty && str === hashed)
   }
 
   test("hashed-gram novelty gate equals the string-key oracle twin") {
-    // q_ngram_novelty ships the xxhash64 key (round-13 verdict #4);
-    // its DuckDB oracle replays raw gram strings — valid only while
-    // the two paths agree row-for-row on real data
-    val str = LlmQueries.ngramNoveltyQ(spark, "/root/testdata/sf0.001",
-        hashedKey = false)
+    // q_ngram_novelty reads the xxhash64 gram relation; its DuckDB
+    // oracle replays raw gram strings — valid only while the two
+    // sources agree row-for-row on real data
+    val dir = "/root/testdata/sf0.001"
+    val str = TermStats.novelty(
+        StringGrams.keys(Tables.documents(spark, dir), col("doc_id"),
+          col("text"), 5, distinct = true),
+        col("_id") % 10 === 0)
+      .orderBy("_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val hashed = LlmQueries.ngramNoveltyQ(spark, "/root/testdata/sf0.001",
-        hashedKey = true)
+    val hashed = SparkEntry.queries("q_ngram_novelty")(spark, dir)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(str.nonEmpty && str === hashed)
   }
@@ -301,7 +305,8 @@ class TermStatsSpec extends AnyFunSuite {
         .drop("_id").collect().toSeq,
       TermStats.bigramSurprisal(df, col("doc_id"), col("text"))
         .drop("_id").collect().toSeq,
-      TermStats.sharedGramSpans(df, col("doc_id"), col("text"), 2)
+      TermStats.sharedGramSpans(
+          TermStats.gramPositions(df, col("doc_id"), col("text"), 2), 2)
         .drop("_id").collect().toSeq)
     assert(profile(clean) === profile(messy))
   }
@@ -410,34 +415,31 @@ class TermStatsSpec extends AnyFunSuite {
       (2L, "one two three four five six seven"),   // train: clean
       (3L, "x alpha beta gamma delta epsilon y")   // train: 2 of 3 grams
     ).toDF("doc_id", "text")
-    val got = TermStats.evalContamination(docs, col("doc_id"),
-        col("text"), col("doc_id") === 0L, n = 5)
+    def grams(df: org.apache.spark.sql.DataFrame) =
+      TermStats.gramKeys(df, col("doc_id"), col("text"), 5, distinct = true)
+    val got = TermStats.contamination(grams(docs), col("_id") === 0L)
       .select("_id", "n_grams", "n_contaminated", "contam_pct")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got === Seq((1L, 2L, 2L, 100L), (2L, 3L, 0L, 0L),
       (3L, 3L, 1L, 33L)), got.toString)
-    // fixture parity: the 8-byte xxhash64 key path equals the
-    // string-key path (the oracle's form) row for row
+    // fixture parity: the 8-byte xxhash64 key source equals the
+    // string-key source (the oracle's form) row for row
     val fx = Tables.documents(spark, "/root/testdata/sf0.001")
-    def run(h: Boolean) = TermStats.evalContamination(fx,
-        col("doc_id"), col("text"), col("doc_id") % 17 === 0, n = 5,
-        hashedKey = h)
-      .orderBy("_id")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    val hashed = run(true)
-    assert(hashed === run(false) && hashed.nonEmpty)
+    def run(src: org.apache.spark.sql.DataFrame) =
+      TermStats.contamination(src, col("_id") % 17 === 0)
+        .orderBy("_id")
+        .as[(Long, Long, Long, Long)].collect().toSeq
+    val hashed = run(grams(fx))
+    assert(hashed === run(StringGrams.keys(fx, col("doc_id"), col("text"),
+      5, distinct = true)) && hashed.nonEmpty)
     // persisted gram-table path (the artifact pattern applied to
     // grams): identical output to the inline audit, zero tokenization
     // in the probe, and the bucket layout serves the join
     try {
-      TermStats.buildGramTable(fx, col("doc_id"), col("text"), n = 5,
-        table = "graft_gram_fx",
+      TermStats.saveGramTable(grams(fx), table = "graft_gram_fx",
         path = java.nio.file.Files
           .createTempDirectory("graft-gram-fx").toString)
-      val viaTable = TermStats.evalContaminationFromTable(spark,
-          "graft_gram_fx", col("_id") % 17 === 0)
-        .orderBy("_id")
-        .as[(Long, Long, Long, Long)].collect().toSeq
+      val viaTable = run(spark.table("graft_gram_fx"))
       assert(viaTable === hashed,
         "gram-table audit must equal the inline audit")
     } finally spark.sql("DROP TABLE IF EXISTS graft_gram_fx")
@@ -445,8 +447,7 @@ class TermStatsSpec extends AnyFunSuite {
     // eval docs → the left join probes an empty key set → every
     // train doc reports zero contamination (never an error, never a
     // dropped doc)
-    val noEval = TermStats.evalContamination(docs, col("doc_id"),
-        col("text"), lit(false), n = 5)
+    val noEval = TermStats.contamination(grams(docs), lit(false))
       .select("_id", "n_grams", "n_contaminated", "contam_pct")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(noEval.map(_._1) === Seq(0L, 1L, 2L, 3L))
