@@ -919,8 +919,8 @@ object LlmQueries {
     // batch size vs real tokens) — the batch-assembly pass that turns
     // O(max_len) padding waste on a shuffled corpus into near-zero
     // waste on a length-sorted one. The global ordering rides the
-    // two-phase prefix-sum machinery (range partition + partition-id
-    // windows + broadcast offsets), NOT a single-task global window,
+    // two-phase prefix-sum machinery (range partition + per-partition
+    // sums as offsets + one narrow pass), NOT a single-task global window,
     // so batch assignment over 10¹⁰ docs stays fully parallel.
     "q_batch_padding" -> Query((s, d) => {
       val toks = docs(s, d).select(col("doc_id"),

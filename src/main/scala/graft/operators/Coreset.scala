@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -71,15 +72,16 @@ object Coreset {
       s: Long = 1000L): DataFrame = {
     val (q, sel) = traverse(emb, id, vec, k, s)
     // k rows of driver metadata (the centroid-matrix contract) back
-    // into a relation for the gate
-    q.sparkSession.createDataFrame(
+    // into a one-partition relation that declares its sel_rank order
+    Bridge.sortedRelation(q.sparkSession,
       q.sparkSession.sparkContext.parallelize(
         sel.zipWithIndex.map { case (r, i) =>
-          Row(i + 1L, r.getAs[Long]("id"), r.getAs[Any]("score"))
+          InternalRow(i + 1L, r.getAs[Long]("id"), r.getAs[Any]("score"))
         }, 1),
       StructType(Seq(StructField("sel_rank", LongType, nullable = false),
         StructField("id", LongType, nullable = false),
-        StructField("dist", LongType, nullable = true))))
+        StructField("dist", LongType, nullable = true))),
+      Some("sel_rank"))
   }
 
   /** Every vector assigned to its nearest selected center — the

@@ -27,11 +27,10 @@ import org.apache.spark.sql.functions._
   * the score value followed by either a broadcast of the per-score
   * relation's 1-row totals or the two-phase distributed prefix scan
   * ([[Packing.withGlobalCumsum]] — range partition, per-partition
-  * windows, broadcast offsets). No metric ever sorts, windows, or
-  * collects the raw observation relation: after the first aggregate
-  * the working set is |distinct scores| rows, and the only
-  * single-task window anywhere runs over ~|partitions| rows of scan
-  * metadata.
+  * sums collected as ~|partitions| offsets, one narrow pass). No
+  * metric ever sorts, windows, or collects the raw observation
+  * relation: after the first aggregate the working set is |distinct
+  * scores| rows, and no single-task window runs anywhere.
   */
 object Eval {
 
@@ -301,7 +300,7 @@ object Eval {
     *
     * Shape difference from the global metric: the prefix scan here is
     * an ORDINARY window partitioned by the group key (groups are the
-    * parallelism — no _pid machinery needed), over the per-(group,
+    * parallelism — no global prefix scan needed), over the per-(group,
     * score) aggregated relation; the final group-by reuses the same
     * hash partitioning, so the whole metric is ONE exchange on the
     * group key. The one-monster-group limit is the EMA/CUSUM
@@ -452,9 +451,11 @@ object Eval {
     * two-phase prefix scan over the |distinct scores| relation that
     * sums row counts and weights side by side (no 2³¹ packing bound on
     * the weight mass, unlike ksTest's carry-free trick) and yields both
-    * grand totals from its offsets window; fractions are the trailing
-    * divisions. Descending semantics realized by scanning negated
-    * scores ascending.
+    * grand totals; fractions are the trailing divisions. The scan runs
+    * ascending on the score itself: what a threshold keeps is the total
+    * minus the strictly-below prefix, so the result arrives in
+    * threshold order and an `orderBy("threshold")` plans no exchange
+    * and no sort.
     */
   def survivalByThreshold(df: DataFrame, score: Column,
       weight: Column): DataFrame = {
@@ -463,19 +464,17 @@ object Eval {
       .filter(col("_s").isNotNull && col("_w").isNotNull)
     val by = obs.groupBy("_s")
       .agg(count(lit(1)).as("_cnt"), sum(col("_w")).as("_ws"))
-    val c = Packing.withGlobalCumsum(by, (-col("_s")).as("_ns"),
+    val c = Packing.withGlobalCumsum(by, col("_s"),
       Seq(col("_cnt") -> "_cnt_below", col("_ws") -> "_ws_below"))
     val (n, wt) = (col("_cnt_below_total"), col("_ws_below_total"))
-    c.select(col("_s").as("threshold"),
-        (col("_cnt_below") + col("_cnt")).as("n_kept"),
-        (col("_ws_below") + col("_ws")).as("weight_kept"),
+    val (kept, wKept) = (n - col("_cnt_below"), wt - col("_ws_below"))
+    c.select(col("_s").as("threshold"), kept.as("n_kept"),
+        wKept.as("weight_kept"),
         when(coalesce(n, lit(0L)) === 0L, lit(null))
-          .otherwise((col("_cnt_below") + col("_cnt")).cast("double") /
-            n.cast("double"))
+          .otherwise(kept.cast("double") / n.cast("double"))
           .cast("double").as("frac_rows"),
         when(coalesce(wt, lit(0L)) === 0L, lit(null))
-          .otherwise((col("_ws_below") + col("_ws")).cast("double") /
-            wt.cast("double"))
+          .otherwise(wKept.cast("double") / wt.cast("double"))
           .cast("double").as("frac_weight"))
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -62,16 +63,17 @@ object Mmr {
       col("rel") - red
     }
     val spark = emb.sparkSession
-    spark.createDataFrame(
+    Bridge.sortedRelation(spark,
       spark.sparkContext.parallelize(sel.zipWithIndex.map { case (r, i) =>
         val (rel, mmr) = (r.getAs[Long]("rel"), r.getAs[Long]("score"))
-        Row(i + 1L, r.getAs[Long]("id"), rel, rel - mmr, mmr)
+        InternalRow(i + 1L, r.getAs[Long]("id"), rel, rel - mmr, mmr)
       }, 1),
       StructType(Seq(
         StructField("sel_rank", LongType, nullable = false),
         StructField("id", LongType, nullable = false),
         StructField("rel", LongType, nullable = false),
         StructField("red", LongType, nullable = false),
-        StructField("mmr", LongType, nullable = false))))
+        StructField("mmr", LongType, nullable = false))),
+      Some("sel_rank"))
   }
 }

@@ -1,32 +1,40 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference,
+  GenericInternalRow, JoinedRow, NullsFirst, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sequence packing for LLM training data: documents' token streams
   * are concatenated in a deterministic order and sliced into
   * fixed-size context-window chunks — the standard "concatenate then
   * chunk" packing policy. The core primitive is a DISTRIBUTED global
-  * prefix sum: the naive formulation (`sum().over(Window.orderBy(...))`
+  * prefix scan: the naive formulation (`sum().over(Window.orderBy(...))`
   * with no partition spec) collapses the whole dataset onto ONE task,
   * which is exactly the plan that dies at 100 TB.
   *
-  * Distributed scan shape (classic two-phase):
-  *  1. range-partition by the order key (global order across
-  *     partitions, local order within);
-  *  2. per-partition exclusive running sum via a window PARTITIONED on
-  *     `spark_partition_id()` — parallel, no cross-partition traffic;
-  *  3. per-partition totals (one row per partition) get their own
-  *     exclusive prefix sum — the only single-partition window, over
-  *     ~numPartitions rows of index metadata — and join back as
-  *     offsets via a broadcast. The same window, over the whole frame,
-  *     also yields each value's grand total.
-  * The partition-id stamp rides on a [[org.apache.spark.sql.graft
-  * .Bridge.persistRows]]-materialized relation so both consumers (rows
-  * and totals) read the SAME physical rows — partition assignment can
-  * never diverge between them. Several values share one scan: one
-  * persisted relation, one range partitioning, one offsets window.
+  * Distributed scan shape (classic two-phase, one shuffle):
+  *  1. range-partition by the order key and sort within partitions
+  *     (global order across partitions, local order within), persisted
+  *     once;
+  *  2. one job folds each partition's values into one summary per
+  *     value (its sum or max) and returns those ~numPartitions values
+  *     to the driver, which turns them into exclusive per-partition
+  *     offsets and the grand totals;
+  *  3. one narrow pass over the persisted partitions appends offset +
+  *     running value (and the totals) to each row.
+  * No window, no broadcast and no exchange follow the range
+  * partitioning. The result declares that layout
+  * ([[org.apache.spark.sql.graft.Bridge.sortedRelation]]) when the
+  * order key is a column, so an `orderBy` on it, or an aggregate keyed
+  * on it, plans no further exchange. Several values share one scan:
+  * one persisted relation, one range partitioning, one summary job.
+  * Steps 1–2 run when the scan is built; the appended columns are lazy.
   */
 object Packing {
 
@@ -39,75 +47,100 @@ object Packing {
     withGlobalCumsum(df, orderCol, Seq(value -> out)).drop(s"${out}_total")
 
   /** For each `(value, out)` pair, adds `out` = exclusive prefix sum of
-    * `value` in `orderCol` order (0 for the first row) and
-    * `out_total` = the sum of `value` over all rows, from ONE two-phase
-    * scan. `orderCol` must be unique for a deterministic result.
+    * `value` in `orderCol` order (0 for the first row, NULL values
+    * skipped) and `out_total` = the sum of `value` over all rows (NULL
+    * when no value is non-NULL), from ONE two-phase scan. A sum past
+    * the long range fails, as ANSI `sum` does. `orderCol` must be unique
+    * for a deterministic result.
     */
   def withGlobalCumsum(df: DataFrame, orderCol: Column,
       sums: Seq[(Column, String)]): DataFrame = {
     require(sums.nonEmpty, "need at least one (value, out) pair")
     val vs = sums.indices.map(i => s"_psv$i")
-    val ranged = org.apache.spark.sql.graft.Bridge.persistRows(
-      df.select(col("*") +: sums.zip(vs).map { case ((value, _), v) =>
-          value.cast("long").as(v) }: _*)
-        .repartitionByRange(orderCol)
-        .withColumn("_pid", spark_partition_id()))
-    val wLocal = Window.partitionBy("_pid").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.select(col("*") +: vs.map(v =>
-      coalesce(sum(col(v)).over(wLocal), lit(0L)).as(s"${v}_before")): _*)
-    // one Window operator: both frames share its order on _pid
-    val wOff = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = ranged.groupBy("_pid")
-      .agg(sum(col(vs.head)).as(s"${vs.head}_p"),
-        vs.tail.map(v => sum(col(v)).as(s"${v}_p")): _*)
-      .select(col("_pid") +: vs.flatMap(v => Seq(
-        coalesce(sum(col(s"${v}_p")).over(wOff), lit(0L)).as(s"${v}_off"),
-        sum(col(s"${v}_p")).over(wAll).as(s"${v}_tot"))): _*)
-    sums.zip(vs).foldLeft(local.join(broadcast(offsets), "_pid")) {
-      case (d, ((_, out), v)) => d
-        .withColumn(out, col(s"${v}_off") + col(s"${v}_before"))
-        .withColumn(s"${out}_total", col(s"${v}_tot"))
-    }.drop("_pid" +: vs.flatMap(v =>
-      Seq(v, s"${v}_before", s"${v}_off", s"${v}_tot")): _*)
+    scan(df.select(col("*") +: sums.zip(vs).map { case ((value, _), v) =>
+        value.cast("long").as(v) }: _*), orderCol, vs,
+      sums.flatMap { case (_, out) => Seq(StructField(out, LongType, false),
+        StructField(s"${out}_total", LongType, true)) },
+      (a, b) => Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long])) {
+      (before, totals) => before.indices.flatMap(j =>
+        Seq(if (before(j) == null) 0L else before(j), totals(j)))
+    }
   }
 
   /** Adds `out` = EXCLUSIVE prefix max of `value` in `orderCol` order
-    * (NULL for the globally first row) — the scan primitive behind
-    * [[Skyline]]'s frontier test, in the same two-phase shape as
-    * [[withGlobalCumsum]]: range-partition on the order key, local
-    * running max per partition, per-partition maxima rolled into
-    * broadcast offsets (the only single-task window runs over
-    * |partitions| rows). `orderCol` must be unique. `greatest` merges
-    * the partition offset with the local prefix (it skips NULLs, so
-    * partition-first and global-first rows fall out naturally).
+    * (NULL for the globally first row, and while no non-NULL value
+    * precedes) — the scan primitive behind [[Skyline]]'s frontier test,
+    * in the same two-phase shape as [[withGlobalCumsum]]. `orderCol`
+    * must be unique. No cast: max is type-preserving, so the scan works
+    * for any orderable value type (int sizes, double prices,
+    * timestamps) — unlike the cumsum, which needs the widening to long.
+    * Ties keep the earlier value, as `greatest` does.
     */
   def withGlobalPrefixMax(df: DataFrame, orderCol: Column, value: Column,
       out: String): DataFrame = {
-    // No cast: max is type-preserving, so the scan works for any
-    // orderable value type (int sizes, double prices, timestamps) —
-    // unlike the cumsum, which needs the widening to long.
-    val ranged = org.apache.spark.sql.graft.Bridge.persistRows(
-      df.withColumn("_pmv", value)
-        .repartitionByRange(orderCol)
-        .withColumn("_pid", spark_partition_id()))
-    val wLocal = Window.partitionBy("_pid").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.withColumn("_local_before",
-      max(col("_pmv")).over(wLocal))
-    val wOff = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged.groupBy("_pid")
-      .agg(max(col("_pmv")).as("_pmax"))
-      .withColumn("_off", max(col("_pmax")).over(wOff))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn(out, greatest(col("_off"), col("_local_before")))
-      .drop("_pid", "_pmv", "_local_before", "_off")
+    val withV = df.withColumn("_pmv", value)
+    val t = withV.schema("_pmv").dataType
+    val ord = TypeUtils.getInterpretedOrdering(t)
+    scan(withV, orderCol, Seq("_pmv"), Seq(StructField(out, t, true)),
+      (a, b) => if (ord.gt(b, a)) b else a)((before, _) => before.toSeq)
   }
+
+  /** The scan both prefix operators share. Each of `values` (columns of
+    * `df`) is folded in `orderCol` order with `plus`, an associative
+    * merge of two non-NULL values; NULLs are skipped. `emit(before, totals)` gives the appended `out` columns of
+    * one row from the exclusive prefix of every value (NULL while
+    * nothing non-NULL precedes) and the grand totals (NULL when every
+    * value is NULL). The `values` columns are dropped from the result.
+    */
+  private def scan(df: DataFrame, orderCol: Column, values: Seq[String],
+      out: Seq[StructField], plus: (Any, Any) => Any)(
+      emit: (Array[Any], Array[Any]) => Seq[Any]): DataFrame = {
+    val sorted = df.repartitionByRange(orderCol).sortWithinPartitions(orderCol)
+    val schema = df.schema
+    val idx = values.map(schema.fieldIndex)
+    val types = values.map(schema(_).dataType)
+    def merge(a: Any, b: Any): Any =
+      if (a == null) b else if (b == null) a else plus(a, b)
+    // one partition's running fold: adds `row` to `acc` and returns the
+    // exclusive prefix before it
+    def fold(acc: Array[Any], row: InternalRow): Array[Any] = {
+      val before = acc.clone()
+      idx.indices.foreach { j =>
+        if (!row.isNullAt(idx(j)))
+          acc(j) = merge(acc(j), InternalRow.copyValue(row.get(idx(j), types(j))))
+      }
+      before
+    }
+    val rows = Bridge.persistedRows(sorted)
+    val k = values.size
+    val parts = rows.mapPartitions { it =>
+      val acc = new Array[Any](k)
+      it.foreach(fold(acc, _))
+      Iterator.single(acc)
+    }.collect()
+    val offsets = parts.scanLeft(new Array[Any](k))((a, p) =>
+      Array.tabulate(k)(j => merge(a(j), p(j))))
+    val totals = offsets.last
+    val scanned = rows.mapPartitionsWithIndex { (i, it) =>
+      val acc = offsets(i).clone()
+      it.map[InternalRow](row => new JoinedRow(row,
+        new GenericInternalRow(emit(fold(acc, row), totals).toArray)))
+    }
+    Bridge.sortedRelation(df.sparkSession, scanned,
+      StructType(schema.fields ++ out), keyColumn(sorted))
+      .drop(values: _*)
+  }
+
+  /** The column `sorted` (a sort within partitions over a range
+    * repartitioning) is ordered on, when its key is a bare column in
+    * ascending NULLs-first order; else None.
+    */
+  private def keyColumn(sorted: DataFrame): Option[String] =
+    sorted.queryExecution.analyzed match {
+      case Sort(Seq(SortOrder(a: AttributeReference, Ascending, NullsFirst, _)),
+          false, _, _) => Some(a.name)
+      case _ => None
+    }
 
   /** Per-document sliding-window chunking (the retrieval-pipeline
     * chunker): overlapping token windows of `window` tokens every

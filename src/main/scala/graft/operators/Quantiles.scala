@@ -222,8 +222,8 @@ object Quantiles {
   /** Adds `out` = the exact `ntile(k)` bucket of each row in
     * `orderCol` order, WITHOUT a single-partition window: the global
     * rank comes from [[Packing.withGlobalCumsum]]'s two-phase scan
-    * (range partition on the order key → per-partition window →
-    * broadcast offsets) and the bucket from ntile's piecewise closed
+    * (range partition on the order key → per-partition sums as
+    * offsets → one narrow pass) and the bucket from ntile's piecewise closed
     * form. With q = n div k and rem = n mod k, buckets 1..rem hold
     * q+1 rows and the rest q, so rank r (1-based) maps to
     *   r ≤ rem·(q+1):  (r−1) div (q+1) + 1

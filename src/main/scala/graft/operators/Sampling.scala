@@ -206,7 +206,7 @@ object Sampling {
     *
     * Scale shape: the only global state is the prefix sum, computed by
     * [[Packing.withGlobalCumsum]]'s two-phase scan (range partition on
-    * the hash → local window → broadcast per-partition offsets) — no
+    * the hash → per-partition sums as offsets → one narrow pass) — no
     * single-task window; the total rides a broadcast-scalar join. The
     * md5 order key doubles as the anti-clustering guarantee systematic
     * sampling needs: adjacent input rows land far apart, so stride

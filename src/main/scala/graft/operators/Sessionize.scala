@@ -70,7 +70,7 @@ object Sessionize {
       intervals: DataFrame, startUs: Column, endUs: Column,
       binUs: Long): DataFrame = {
     require(binUs >= 1, "bin width must be positive")
-    val p = probe.select(id.as("_pid"), tsUs.as("_pts"))
+    val p = probe.select(id.as("_probe"), tsUs.as("_pts"))
       .withColumn("_pbin", expr(s"_pts DIV ${binUs}L"))
     val iv = intervals.select(startUs.as("_s"), endUs.as("_e"))
       .filter(col("_s") <= col("_e"))
@@ -78,8 +78,8 @@ object Sessionize {
         explode(sequence(expr(s"_s DIV ${binUs}L"), expr(s"_e DIV ${binUs}L"))))
     p.join(iv, col("_pbin") === col("_ibin") &&
         col("_pts").between(col("_s"), col("_e")), "left")
-      .groupBy(col("_pid"))
+      .groupBy(col("_probe"))
       .agg(count(col("_s")).as("n_active"))
-      .select(col("_pid").as("probe_id"), col("n_active"))
+      .select(col("_probe").as("probe_id"), col("n_active"))
   }
 }

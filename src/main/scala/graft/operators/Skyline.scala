@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * (2) the exclusive prefix max over the x-ordered reduced relation
   * via [[Packing.withGlobalPrefixMax]] — the two-phase
   * partition-offset scan, so even a huge distinct-x relation never
-  * funnels through one task (the only single-task window runs over
-  * |partitions| rows). A point is on the frontier iff its y strictly
+  * funnels through one task (only the |partitions| per-partition
+  * maxima meet on the driver). A point is on the frontier iff its y strictly
   * exceeds every smaller-x point's y.
   *
   * Output is the frontier POINT SET (x, best y at that x) — a pure

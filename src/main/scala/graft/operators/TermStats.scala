@@ -174,9 +174,9 @@ object TermStats {
     * collected, never broadcast), per-doc token and new-term counts
     * are two more combinable rollups over the same cache; the two running
     * totals ride ONE packed two-phase prefix scan
-    * ([[Packing.withGlobalCumsum]]: range-partition by doc_id, local
-    * window, |partitions|-row offsets relation — no global
-    * single-task window). Packing contract: new_terms rides the low
+    * ([[Packing.withGlobalCumsum]]: range-partition by doc_id,
+    * |partitions| per-partition sums as offsets, one narrow pass — no
+    * window at all). Packing contract: new_terms rides the low
     * 32 bits, so the scan is exact while total vocabulary < 2³² terms
     * and total tokens < 2³¹ — document-count-scale corpora far beyond
     * the reference's; past that, run two scans.

@@ -27,7 +27,7 @@ object DumpPlans {
     "q_sim_topk" -> "brute-force ANN — query side broadcast, corpus scanned once",
     "q_ham_topk" -> "binary Hamming ANN — narrow signatures + broadcast queries",
     "q_quantiles" -> "histogram quantiles — (g,v) partial agg + one group window",
-    "q_pack_chunks" -> "distributed prefix sum — partition-id windows + offset broadcast",
+    "q_pack_chunks" -> "distributed prefix sum — range-partitioned scan read back, no window, no broadcast",
     "q_vocab_oov" -> "vocab top-k — TakeOrderedAndProject + broadcast join",
     "q_revenue_topk" -> "TPC-H Q3 shape — broadcast dim, decimal agg, TakeOrdered",
     "q_skew_agg" -> "salted two-phase aggregation",
@@ -46,13 +46,13 @@ object DumpPlans {
     "q_bigram_lm" -> "bigram-LM surprisal — gram-keyed count relations, no vocab broadcast",
     "q_kmeans_assign" -> "integer k-means — one narrow scan, centroids as reference objects",
     "q_semantic_dedup" -> "SemDeDup — cluster-key equi-join pairs, integer cosine verify",
-    "q_weighted_sample" -> "weighted systematic sample — two-phase cumsum, broadcast total",
+    "q_weighted_sample" -> "weighted systematic sample — two-phase cumsum read back, broadcast total",
     "q_hash_classifier" -> "hashed n-gram classifier — one corpus scan, broadcast weights",
     "q_cms_topk" -> "count-min heavy hitters — vocab-relation sketch, TakeOrdered top-k",
     "q_resample_ohlc" -> "tick→bar OHLCV — partial min_by/max_by combine, one bucket-key exchange",
     "q_weighted_median" -> "weighted median — TWO-PHASE: bucket histogram partial agg + broadcast crossing bucket, no serial group scan",
     "q_semantic_clusters" -> "semantic clusters — integer-cosine pairs into the RDD CC fixpoint",
-    "q_batch_padding" -> "batch assembly — two-phase global length order (partition cumsum + offset broadcast), no single-task window",
+    "q_batch_padding" -> "batch assembly — two-phase global length order (range partition, per-partition offsets), no window",
     "q_split_drift" -> "split drift — per-(split,bucket) partial agg, totals broadcast back",
     "q_impute_median" -> "median imputation — histogram median broadcast back, full-parallel scan",
     "q_text_normalize" -> "NFC normalize — native codegen expression inside WholeStageCodegen, no fallback",

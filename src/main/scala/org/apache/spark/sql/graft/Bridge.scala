@@ -43,11 +43,50 @@ object Bridge {
     * row buffers, so caching without a copy would alias every row to
     * the last buffer state.
     */
-  def persistRows(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
+  def persistRows(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(persistedRows(df), df.schema)
+
+  /** The persisted `InternalRow` RDD behind [[persistRows]], for a
+    * caller that works on the rows themselves.
+    */
+  def persistedRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
+    val rdd = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
+  }
+
+  /** A frame over `rows`, one `InternalRow` per row of `schema`, that
+    * declares the layout the rows already have when `key` names a
+    * column: ascending (NULLs first) on `key`, each partition sorted and
+    * every key of partition i at or below every key of partition i+1 —
+    * `RangePartitioning`, or `SinglePartition` for one partition. The
+    * plan over it then needs no Exchange or Sort for an `orderBy(key)`,
+    * nor an Exchange for an aggregate or window keyed on it. The caller
+    * vouches for the layout: a false one gives wrong results, not an
+    * error. Without `key` the frame declares nothing, as
+    * [[persistRows]]' do. Like theirs, the rows bypass the CacheManager.
+    */
+  def sortedRelation(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType,
+      key: Option[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning,
+      SinglePartition, UnknownPartitioning}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val n = rows.getNumPartitions
+    val order = key.filter(_ => n > 0)
+      .map(k => SortOrder(attrs(schema.fieldIndex(k)), Ascending)).toSeq
+    val partitioning =
+      if (order.isEmpty) UnknownPartitioning(n)
+      else if (n == 1) SinglePartition
+      else RangePartitioning(order, n)
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      org.apache.spark.sql.execution.LogicalRDD(attrs, rows, partitioning,
+        order)(session))
   }
 
   /** [[persistRows]] + RDD-lineage truncation — the iterative-loop

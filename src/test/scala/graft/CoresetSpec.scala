@@ -165,4 +165,11 @@ class CoresetSpec extends AnyFunSuite {
     build() // infers and memoises the fixture's schema
     assert(TestSpark.jobsDuring(build())._2 === 4)
   }
+
+  test("q_kcenter's execution runs one job on sf0.01") {
+    val df = SparkEntry.queries("q_kcenter")(spark, "/root/testdata/sf0.01")
+    // the k rows arrive as one partition declared sorted by sel_rank:
+    // the orderBy needs no range sample, shuffle or sort
+    assert(TestSpark.jobsDuring(df.collect())._2 === 1)
+  }
 }

@@ -130,4 +130,11 @@ class MmrSpec extends AnyFunSuite {
     build() // infers and memoises the fixture's schema
     assert(TestSpark.jobsDuring(build())._2 === 5)
   }
+
+  test("q_mmr's execution runs one job on sf0.01") {
+    val df = SparkEntry.queries("q_mmr")(spark, "/root/testdata/sf0.01")
+    // the k rows arrive as one partition declared sorted by sel_rank:
+    // the orderBy needs no range sample, shuffle or sort
+    assert(TestSpark.jobsDuring(df.collect())._2 === 1)
+  }
 }

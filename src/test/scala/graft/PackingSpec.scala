@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,9 +16,40 @@ import graft.operators.{Dedup, Packing}
 /** Goldens for the LLM-pipeline packing (distributed prefix sum,
   * concatenate-then-chunk) and benchmark-decontamination operators.
   */
-class PackingSpec extends AnyFunSuite {
+class PackingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The shape of a prefix scan over a shuffle-free input: the executed
+    * (AQE-final) plan holds no window and no exchange of any kind, the
+    * rows' lineage exactly one shuffle, over more than one partition
+    * (no single-task pass over the data), and the result declares range
+    * partitioning and ascending order on `key` — a declaration
+    * ScanLayoutSpec checks is true.
+    */
+  private def assertOneRangeShuffle(df: DataFrame, key: String): Unit = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), plan.toString)
+    assert(!nodes.exists(_.isInstanceOf[Exchange]), plan.toString)
+    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case s: ShuffleDependency[_, _, _] => s +: shuffles(s.rdd)
+        case d => shuffles(d.rdd)
+      }
+    val deps = shuffles(df.queryExecution.toRdd)
+    assert(deps.size === 1, df.queryExecution.toRdd.toDebugString)
+    assert(deps.head.partitioner.numPartitions > 1)
+    // AQE may coalesce a small scan's ranges into one partition
+    val Seq(o) = plan.outputOrdering
+    assert(o.child.asInstanceOf[Attribute].name === key && o.direction === Ascending)
+    plan.outputPartitioning match {
+      case RangePartitioning(Seq(r), _) => assert(r.semanticEquals(o))
+      case SinglePartition => ()
+      case other => fail(s"declared $other, not range partitioning on $key")
+    }
+  }
 
   test("globalCumsum equals the sequential scan under any partitioning") {
     val n = 1000
@@ -57,14 +95,11 @@ class PackingSpec extends AnyFunSuite {
     assert(out.collect().isEmpty)
   }
 
-  test("offsets and totals of every value share one global Window operator") {
+  test("a multi-value scan plans no window and no exchange; one range shuffle") {
     val df = Packing.withGlobalCumsum(
       (0 until 100).map(i => (i.toLong, i.toLong, 1L)).toDF("id", "a", "b"),
       col("id"), Seq(col("a") -> "ca", col("b") -> "cb"))
-    val global = df.queryExecution.sparkPlan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => w
-    }
-    assert(global.size === 1, df.queryExecution.sparkPlan.toString)
+    assertOneRangeShuffle(df, "id")
   }
 
   test("packChunks: exact chunk ids and offsets at a tiny budget") {
@@ -82,16 +117,14 @@ class PackingSpec extends AnyFunSuite {
       (2L, 7L, 0L, 7L), (3L, 12L, 1L, 4L)))
   }
 
-  test("the data-sized window is partitioned; only offsets go global") {
-    val df = Packing.withGlobalCumsum(
-      Tables.documents(spark, "/root/testdata/sf0.001")
-        .select(col("doc_id"), lit(1L).as("v")), col("doc_id"), col("v"), "cum")
-    val plan = df.queryExecution.executedPlan.toString
-    // the per-row running sum must be keyed on the partition id —
-    // an unpartitioned window here would serialize the whole dataset
-    // through one task at scale
-    assert(plan.contains("windowspecdefinition(_pid"),
-      s"expected the bulk window partitioned by _pid:\n$plan")
+  test("scans over documents run no single-task window or exchange") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    assertOneRangeShuffle(Packing.withGlobalCumsum(
+      docs.select(col("doc_id"), lit(1L).as("v")), col("doc_id"), col("v"),
+      "cum"), "doc_id")
+    assertOneRangeShuffle(Packing.withGlobalPrefixMax(
+      docs.select(col("doc_id"), length(col("text")).as("v")), col("doc_id"),
+      col("v"), "pm"), "doc_id")
   }
 
   test("slidingChunks: window/stride coverage, last chunk clamped") {

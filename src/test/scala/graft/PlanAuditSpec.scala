@@ -264,12 +264,13 @@ class PlanAuditSpec extends AnyFunSuite {
       "within-cluster pairs must come from an equi-join, not a loop join")
   }
 
-  test("weighted sampling: broadcast offsets + scalar total, no merge join") {
+  test("weighted sampling: no offsets join, broadcast scalar total") {
     val p = plan("q_weighted_sample")
-    // the per-partition offset join and the grand-total join both
-    // broadcast index-metadata relations; the data side never shuffles
-    // for a join
-    assert(p.contains("BroadcastHashJoin"), "offset join must broadcast")
+    // the prefix scan's offsets never meet the rows in a join (they
+    // are added per partition), the grand-total join broadcasts a
+    // 1-row relation, and the data side never shuffles for a join
+    assertScanWindowFree("q_weighted_sample")
+    assert(!p.contains("BroadcastHashJoin"), "offsets must not be joined back")
     assert(p.contains("BroadcastNestedLoopJoin"), "scalar total must broadcast")
     assert(!p.contains("SortMergeJoin"),
       "no data-sized join side may shuffle:\n" +
@@ -318,43 +319,48 @@ class PlanAuditSpec extends AnyFunSuite {
         p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
   }
 
-  test("batch padding: two-phase global order — data window partitions " +
-    "by _pid; only the per-partition totals go single-partition") {
+  test("batch padding: the length-order scan plans no window") {
     val p = plan("q_batch_padding")
-    // phase 1: the full-relation rank window is PARTITIONED (by the
-    // physical partition id) — a single-task global window over the
-    // data would serialize 10¹⁰ docs through one reducer
-    assert("Window \\[[^\\]]*\\], \\[_pid#\\d+\\]".r.findFirstIn(p).isDefined,
-      "data window must partition by _pid:\n" +
-        p.linesIterator.filter(_.contains("Window")).mkString("\n"))
-    // phase 2: exactly one SinglePartition exchange, and it carries
-    // the one-row-per-partition totals relation into a broadcast —
-    // bounded by the partition count, never by the data
-    assert("Exchange SinglePartition".r.findAllIn(p).size === 1,
+    // the global length order is a prefix scan that ran when the query
+    // was built: the plan reads its rows, and neither a window nor a
+    // single-partition exchange is left to serialize 10¹⁰ docs
+    // through one task
+    assertScanWindowFree("q_batch_padding")
+    assert(!p.contains("SinglePartition"),
       p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
-    assert(p.contains("BroadcastExchange"),
-      "offsets must come back as a broadcast")
   }
 
-  /** Every Window node either partitions by the two-phase scan's _pid
-    * stamp or is the ~|partitions|-row offsets window (ORDER BY _pid)
-    * — i.e. no single-task window ever runs over the DATA relation.
+  /** A prefix scan runs when its query is built: the plan reads the
+    * scanned rows as an existing RDD and holds no window at all — no
+    * partition-id window, no offsets window, and no single-task window
+    * over the data. PackingSpec pins the scan's own shape: no window,
+    * no exchange after its one range shuffle.
     */
-  private def assertNoDataWindowSerializes(q: String): Unit = {
+  private def assertScanWindowFree(q: String): Unit = {
     val p = plan(q)
-    val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(windows.nonEmpty, s"$q: expected window nodes, got none")
-    windows.foreach { w =>
-      assert(w.contains("_pid"),
-        s"$q plans a window that neither partitions by _pid nor scans " +
-          s"the offsets metadata:\n$w")
-    }
+    assert(p.contains("Scan ExistingRDD"), s"$q: the scan's rows are not read:\n$p")
+    assert(!p.contains("Window") && !p.contains("_pid"),
+      s"$q plans a window:\n" +
+        p.linesIterator.filter(_.contains("Window")).mkString("\n"))
   }
 
   test("eval prefix scans (auc/ks/pr) never serialize the data " +
     "relation through one window task") {
     Seq("q_auc", "q_ks_test", "q_pr_curve", "q_pr_auc",
-      "q_precision_at_k").foreach(assertNoDataWindowSerializes)
+      "q_precision_at_k").foreach(assertScanWindowFree)
+  }
+
+  test("gate tradeoff, k-center and MMR results plan no exchange or sort") {
+    // each result is a relation that declares its order (the scan's
+    // range partitioning on threshold; one partition by sel_rank), so
+    // the final orderBy plans nothing above it
+    Seq("q_gate_tradeoff", "q_kcenter", "q_mmr").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("Scan ExistingRDD"), p)
+      assert(!p.contains("Exchange") && !p.contains("Sort"), s"$q:\n$p")
+    }
   }
 
   test("eval metrics broadcast their 1-row totals relations") {
@@ -439,7 +445,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "stay on the offsets metadata; fleiss kappa is window-free with " +
     "broadcast totals") {
     Seq("q_calibration_quantile", "q_gini")
-      .foreach(assertNoDataWindowSerializes)
+      .foreach(assertScanWindowFree)
     val p = plan("q_fleiss_kappa")
     assert(!p.contains("Window ["),
       "fleissKappa is aggregation-only — no windows")
