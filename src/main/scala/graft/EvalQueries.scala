@@ -75,7 +75,7 @@ object EvalQueries {
     // Two-sample Kolmogorov-Smirnov drift statistic between the
     // content-addressed train and val splits on order value (exact
     // cents) — the binning-free distribution-shift test; both CDFs
-    // ride ONE packed two-phase prefix scan.
+    // and both split sizes come from ONE two-phase prefix scan.
     "q_ks_test" -> Query((s, d) => {
       val o = Sampling.splitAssign(
           Tables.orders(s, d).select(col("o_orderkey"),

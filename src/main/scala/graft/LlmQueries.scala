@@ -1417,9 +1417,9 @@ object LlmQueries {
         |ORDER BY df DESC, term""".stripMargin)),
 
     // Vocabulary-growth (Heaps'-law) audit: per-document new-term
-    // count + running vocabulary size vs running token count, via the
-    // packed two-phase prefix scan (see TermStats.vocabGrowth for the
-    // packing contract). A flat curve = the slice is repeating itself.
+    // count + running vocabulary size vs running token count, both
+    // summed by one two-phase prefix scan (TermStats.vocabGrowth).
+    // A flat curve = the slice is repeating itself.
     "q_vocab_growth" -> Query((s, d) =>
       graft.operators.TermStats
         .vocabGrowth(docs(s, d), col("doc_id"), col("text"))

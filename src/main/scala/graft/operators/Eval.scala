@@ -24,13 +24,15 @@ import org.apache.spark.sql.functions._
   * calling, as q_ks_test does with prices.
   *
   * Scale shape: each metric is one map-side-combinable group-by on
-  * the score value followed by either a broadcast of the per-score
-  * relation's 1-row totals or the two-phase distributed prefix scan
-  * ([[Packing.withGlobalCumsum]] — range partition, per-partition
-  * sums collected as ~|partitions| offsets, one narrow pass). No
-  * metric ever sorts, windows, or collects the raw observation
-  * relation: after the first aggregate the working set is |distinct
-  * scores| rows, and no single-task window runs anywhere.
+  * the score value followed by either plain aggregates or the
+  * two-phase distributed prefix scan ([[Packing.withGlobalCumsum]] —
+  * range partition, per-partition sums collected as ~|partitions|
+  * offsets, one narrow pass), which sums several counts side by side
+  * and hands back each one's grand total, so no scan-based metric
+  * joins a totals relation back. No metric ever sorts, windows, or
+  * collects the raw observation relation: after the first aggregate
+  * the working set is |distinct scores| rows, and no single-task
+  * window runs anywhere.
   */
 object Eval {
 
@@ -131,46 +133,25 @@ object Eval {
     * between train/val splits, between snapshots, or between a source
     * and the blend (PSI's nonparametric, binning-free sibling).
     *
-    * Both running CDFs ride ONE two-phase prefix scan by packing the
-    * per-value counts into a single long (cntA + cntB·2³²): the packed
-    * sums are carry-free while each population has < 2³¹ rows, which a
-    * raise_error guard on the (already-needed) 1-row totals enforces —
-    * beyond that, run two scans. Exact-integer surface needs
+    * Both running CDFs and both population sizes come from ONE
+    * two-phase prefix scan that sums the per-value counts side by side
+    * (their grand totals are n_a and n_b). Exact-integer surface needs
     * n_a·n_b < 2⁶² (cross-multiplied terms); the double `ks` is the
-    * scale-path value.
+    * scale-path value. Empty input returns zero rows.
     */
   def ksTest(df: DataFrame, value: Column, isA: Column): DataFrame = {
-    val Pack = 4294967296L // 2^32
     val obs = df.select(value.cast("long").as("_v"),
       when(isA, 1L).otherwise(0L).as("_a"))
       .filter(col("_v").isNotNull) // NULL values have no CDF position
     val byV = obs.groupBy("_v")
       .agg(sum(col("_a")).as("_ca"),
         (count(lit(1)) - sum(col("_a"))).as("_cb"))
-    val cum = Packing.withGlobalCumsum(
-        byV.withColumn("_packed", col("_ca") + col("_cb") * lit(Pack)),
-        col("_v"), col("_packed"), "_cum_before")
-      .withColumn("_cum", col("_cum_before") + col("_packed"))
-    // coalesce: on an EMPTY input the global agg yields NULL n_a/n_b,
-    // and a NULL guard condition would fall through to raise_error —
-    // empty input must return the empty relation, not crash (the
-    // totals row only exists when byV is non-empty, so the coalesce
-    // arm fires only in the degenerate aggregate-over-nothing plan
-    // states; rocAuc's all-NULL row is the sibling behavior).
-    // Totals read the PERSISTED cumsum relation — aggregating byV
-    // again would rescan the raw data.
-    val tot = cum.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"))
-      .select(col("n_a"), col("n_b"),
-        when(coalesce(col("n_a"), lit(0L)) < lit(Pack / 2) &&
-            coalesce(col("n_b"), lit(0L)) < lit(Pack / 2),
-          lit(0L)).otherwise(raise_error(lit(
-            "ksTest: packed scan needs each side < 2^31 rows — " +
-              "run two scans")).cast("long")).as("_guard"))
-    cum.crossJoin(broadcast(tot))
-      .select(col("n_a"), col("n_b"),
-        (abs(expr(s"_cum % ${Pack}L") * col("n_b") -
-          expr(s"_cum DIV ${Pack}L") * col("n_a")) + col("_guard"))
-          .as("_d"))
+    val cum = Packing.withGlobalCumsum(byV, col("_v"),
+      Seq(col("_ca") -> "_ca_below", col("_cb") -> "_cb_below"))
+    val (nA, nB) = (col("_ca_below_total"), col("_cb_below_total"))
+    cum.select(nA.as("n_a"), nB.as("n_b"),
+        abs((col("_ca_below") + col("_ca")) * nB -
+          (col("_cb_below") + col("_cb")) * nA).as("_d"))
       .groupBy("n_a", "n_b")
       .agg(max(col("_d")).as("ks_num"))
       .select(col("n_a"), col("n_b"), col("ks_num"),
@@ -182,63 +163,37 @@ object Eval {
   }
 
   /** The (score, pos, neg) per-distinct-score relation with the
-    * exclusive prefix sums of BOTH class counts above the threshold,
-    * packed into one two-phase scan (ksTest's carry-free packing,
-    * descending-score direction realized by scanning NEGATED scores
-    * ascending), plus the broadcast class totals (n_pos, n_neg) —
-    * already needed for the guard, so callers reuse them for free.
-    *
-    * Guard: the packing is carry-free only while EACH class has
-    * < 2³¹ rows; past that tp/fp would silently corrupt, so a
-    * raise_error on the 1-row totals (ksTest's pattern,
-    * coalesce-protected so empty input stays empty, not a crash)
-    * fails loudly instead. `guardLimit` exists only so tests can
-    * fire the guard at fixture scale.
+    * inclusive counts of both classes at or above each threshold
+    * (tp, fp) and the class totals (n_pos, n_neg), from ONE two-phase
+    * prefix scan that sums both counts side by side; the descending
+    * score direction is realized by scanning NEGATED scores ascending.
     */
   private[graft] def thresholdCounts(df: DataFrame, score: Column,
-      label: Column, guardLimit: Long = 2147483648L): DataFrame = {
-    val Pack = 4294967296L // 2^32
+      label: Column): DataFrame = {
     val obs = df.select(score.cast("long").as("_s"),
       when(label, 1L).otherwise(0L).as("_y"))
       .filter(col("_s").isNotNull)
     val byScore = obs.groupBy("_s")
       .agg(sum(col("_y")).as("_pos"),
         (count(lit(1)) - sum(col("_y"))).as("_neg"))
-    // prefix in DESCENDING score order = ascending order of −score;
-    // _guard is 0 under the bound, so folding it into tp only forces
-    // the raise_error to evaluate on the overflow path
-    val cum = Packing.withGlobalCumsum(
-      byScore.withColumn("_packed",
-        col("_pos") + col("_neg") * lit(Pack)),
-      (-col("_s")).as("_ns"), col("_packed"), "_cum_before")
-    // totals from the PERSISTED cumsum relation (one raw-data scan)
-    val tot = cum.agg(sum(col("_pos")).as("n_pos"),
-        sum(col("_neg")).as("n_neg"))
-      .select(col("n_pos"), col("n_neg"),
-        when(coalesce(col("n_pos"), lit(0L)) < lit(guardLimit) &&
-            coalesce(col("n_neg"), lit(0L)) < lit(guardLimit),
-          lit(0L)).otherwise(raise_error(lit(
-            "thresholdCounts: packed scan needs each class < 2^31 rows" +
-              " — run two scans")).cast("long")).as("_guard"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("tp",
-        expr(s"_cum_before % ${Pack}L") + col("_pos") + col("_guard"))
-      .withColumn("fp", expr(s"_cum_before DIV ${Pack}L") + col("_neg"))
+    Packing.withGlobalCumsum(byScore, (-col("_s")).as("_ns"),
+        Seq(col("_pos") -> "_tp_before", col("_neg") -> "_fp_before"))
+      .withColumn("tp", col("_tp_before") + col("_pos"))
+      .withColumn("fp", col("_fp_before") + col("_neg"))
+      .withColumnRenamed("_tp_before_total", "n_pos")
+      .withColumnRenamed("_fp_before_total", "n_neg")
   }
 
   /** Precision-recall curve: one row per distinct score threshold t
     * (descending semantics: predict positive iff score ≥ t):
     * (threshold, tp, fp, fn, precision, recall) — every count an
-    * exact BIGINT from one packed two-phase prefix scan over the
+    * exact BIGINT from one two-phase prefix scan over the
     * distinct-score relation, precision/recall single trailing
     * divisions. This is the exact, hash-gateable PR surface; the
-    * scalar summary is [[averagePrecision]]. Guard (enforced by a
-    * raise_error inside [[thresholdCounts]]): each class < 2³¹ rows.
+    * scalar summary is [[averagePrecision]].
     */
-  def prCurve(df: DataFrame, score: Column, label: Column): DataFrame = {
-    // thresholdCounts already joined the broadcast totals in
-    val cum = thresholdCounts(df, score, label)
-    cum
+  def prCurve(df: DataFrame, score: Column, label: Column): DataFrame =
+    thresholdCounts(df, score, label)
       .select(col("_s").as("threshold"), col("tp"), col("fp"),
         (col("n_pos") - col("tp")).as("fn"),
         (col("tp").cast("double") /
@@ -246,7 +201,6 @@ object Eval {
         when(col("n_pos") === 0L, lit(null)).otherwise(
           col("tp").cast("double") / col("n_pos").cast("double"))
           .cast("double").as("recall"))
-  }
 
   /** Average precision (the PR-AUC companion to [[rocAuc]] for
     * imbalanced gates): AP = Σₜ (ΔRecall·Precision) over descending
@@ -266,8 +220,7 @@ object Eval {
     *
     * Overflow contract: 2·pos(t)·tp(t)·SCALE < 2⁶³ per term needs
     * pos(t)·tp(t) < 4.6·10⁹ at the default SCALE=10⁹ (lower SCALE to
-    * trade precision for headroom); the packed scan needs each class
-    * < 2³¹ rows — enforced by [[thresholdCounts]]'s raise_error.
+    * trade precision for headroom).
     *
     * Empty input returns ZERO rows (not one all-NULL row): the DuckDB
     * oracle's grouped aggregate yields no groups over an empty CTE,
@@ -409,8 +362,8 @@ object Eval {
     * chi2 = chi2_num/(n_a·n_b) is the single trailing division.
     *
     * Overflow contract: t_k < 2⁶³ needs D_k²/c_k < 9.2·10¹⁸ —
-    * satisfied whenever both sides have < 2³¹ rows (the ksTest
-    * bound), since D_k²/c_k ≤ c_k·max(n_a,n_b)²... bounded by
+    * satisfied whenever both sides have < 2³¹ rows, since
+    * D_k²/c_k ≤ c_k·max(n_a,n_b)²... bounded by
     * N·max(n)²; for larger corpora pre-scale the counts (chi2 is
     * scale-degree-2 homogeneous, the p-value contract moves with it).
     * NULL buckets are dropped, matching the siblings.
@@ -449,9 +402,8 @@ object Eval {
     *
     * Exactness/shape: one combinable group-by on the score, then ONE
     * two-phase prefix scan over the |distinct scores| relation that
-    * sums row counts and weights side by side (no 2³¹ packing bound on
-    * the weight mass, unlike ksTest's carry-free trick) and yields both
-    * grand totals; fractions are the trailing divisions. The scan runs
+    * sums row counts and weights side by side and yields both grand
+    * totals; fractions are the trailing divisions. The scan runs
     * ascending on the score itself: what a threshold keeps is the total
     * minus the strictly-below prefix, so the result arrives in
     * threshold order and an `orderBy("threshold")` plans no exchange
@@ -619,54 +571,33 @@ object Eval {
   /** Precision/recall at the top-k rows ranked by (score DESC,
     * `id` ASC — the explicit deterministic tie-break): one row per
     * requested k: (k, tp, precision, recall). The global rank is the
-    * packed two-phase prefix scan over the PER-ROW relation (ids are
-    * unique, so |working set| = |rows| here, still fully distributed
-    * — no single-task sort); label hits and row counts share one
-    * packed scan. Exact BIGINTs + trailing divisions.
-    *
-    * Guard — STRICTER than the siblings': this scan packs per-ROW
-    * (not per-distinct-score) counts, and the high word accumulates
-    * the running ROW count, so the carry-free surface is TOTAL rows
-    * < 2³¹ (the siblings bound each class). A raise_error on the
-    * (already-needed) 1-row totals enforces it; past the bound every
-    * rank would silently shift. `guardLimit` exists only so tests
-    * can fire the guard at fixture scale.
+    * two-phase prefix scan over the PER-ROW relation (ids are unique,
+    * so |working set| = |rows| here, still fully distributed — no
+    * single-task sort); the running label hits, the running row count
+    * and the positive total come from that one scan. Exact BIGINTs +
+    * trailing divisions.
     */
   def precisionAtK(df: DataFrame, score: Column, id: Column,
-      label: Column, ks: Seq[Int],
-      guardLimit: Long = 2147483648L): DataFrame = {
+      label: Column, ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1), "need ks >= 1")
-    val Pack = 4294967296L // 2^32
     val obs = df.select(score.cast("long").as("_s"), id.as("_id"),
       when(label, 1L).otherwise(0L).as("_y"))
       .filter(col("_s").isNotNull)
-    // rank in (score desc, id asc) order: pack (y + 2^32·1) and scan
-    // ascending on the composite (−score, id) key
-    val cum = Packing.withGlobalCumsum(
-        obs.withColumn("_packed", col("_y") + lit(Pack)),
-        struct((-col("_s")).as("_ns"), col("_id")), col("_packed"),
-        "_cum_before")
-      .withColumn("_rank", expr(s"_cum_before DIV ${Pack}L") + 1L)
-      .withColumn("_tp_at", expr(s"_cum_before % ${Pack}L") + col("_y"))
-    // totals from the PERSISTED cumsum relation (one raw-data scan)
-    val tot = cum.agg(sum(col("_y")).as("n_pos"),
-        count(lit(1)).as("_n_rows"))
-      .select(col("n_pos"),
-        when(col("_n_rows") < lit(guardLimit), lit(0L))
-          .otherwise(raise_error(lit(
-            "precisionAtK: packed per-row scan needs total rows < 2^31" +
-              " — run two scans")).cast("long")).as("_guard"))
+    // rank in (score desc, id asc) order: scan ascending on the
+    // composite (−score, id) key
+    val cum = Packing.withGlobalCumsum(obs,
+        struct((-col("_s")).as("_ns"), col("_id")),
+        Seq(col("_y") -> "_tp_before", lit(1L) -> "_rank_before"))
+      .withColumn("_rank", col("_rank_before") + 1L)
+      .withColumn("_tp_at", col("_tp_before") + col("_y"))
     val kdf = cum.sparkSession.createDataFrame(
       ks.distinct.sorted.map(k => Tuple1(k.toLong)))
       .toDF("k")
     // tp@k = running positive count at the k-th ranked row (or at the
-    // last row when k > n): max _tp_at over rank ≤ k. _guard is 0
-    // under the bound; folding it into tp forces the overflow path
-    // to evaluate the raise_error
+    // last row when k > n): max _tp_at over rank ≤ k
     cum.join(broadcast(kdf), col("_rank") <= col("k"))
-      .groupBy("k").agg(max(col("_tp_at")).as("_tp0"))
-      .crossJoin(broadcast(tot))
-      .withColumn("tp", col("_tp0") + col("_guard"))
+      .groupBy(col("k"), col("_tp_before_total").as("n_pos"))
+      .agg(max(col("_tp_at")).as("tp"))
       .select(col("k"), col("tp"),
         (col("tp").cast("double") / col("k").cast("double"))
           .as("precision"),
@@ -694,7 +625,7 @@ object Eval {
     *
     * Shape: one combinable group-by on the score, one two-phase
     * prefix scan over |distinct scores| rows
-    * ([[Packing.withGlobalCumsum]]), a 1-row broadcast total, one
+    * ([[Packing.withGlobalCumsum]], whose grand total is n), one
     * final |bins|-group aggregate. Overflow: rankBefore·bins < 2⁶³
     * needs n·bins < 2⁶³ — unreachable. NULL scores dropped, matching
     * the siblings.
@@ -707,13 +638,8 @@ object Eval {
       .filter(col("_s").isNotNull)
     val byScore = obs.groupBy("_s")
       .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_pos"))
-    val cum = Packing.withGlobalCumsum(byScore, col("_s"), col("_n"),
-      "_below")
-    // totals from the PERSISTED cumsum relation — aggregating byScore
-    // again would rescan the raw data
-    val tot = cum.agg(sum(col("_n")).as("_nt"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("bin", expr(s"_below * $bins DIV _nt"))
+    Packing.withGlobalCumsum(byScore, col("_s"), Seq(col("_n") -> "_below"))
+      .withColumn("bin", expr(s"_below * $bins DIV _below_total"))
       .groupBy("bin")
       .agg(min(col("_s")).as("score_lo"), max(col("_s")).as("score_hi"),
         sum(col("_n")).as("n"), sum(col("_pos")).as("n_pos"))
@@ -736,9 +662,10 @@ object Eval {
     * over |distinct values| rows, exactly the [[rocAuc]] machinery.
     * Ties need no tie-break: the formula depends only on (v, c, B).
     *
-    * Negative values would make the formula meaningless (Gini is
-    * defined for non-negative quantities), so a raise_error on the
-    * (already-needed) totals row rejects them loudly. gini is NULL
+    * n, total, 2·Σᵢ i·x₍ᵢ₎ and the smallest value are one aggregate
+    * over the scanned rows. Negative values would make the formula
+    * meaningless (Gini is defined for non-negative quantities), so a
+    * raise_error on that smallest value rejects them loudly. gini is NULL
     * when n = 0 or total = 0. Overflow: v·c·(2B+c+1) ≤ 3·vmax·n²
     * per term needs vmax·n² < 3·10¹⁸ — at 10¹² rows keep values
     * pre-scaled. NULL values dropped, matching the siblings.
@@ -749,18 +676,12 @@ object Eval {
     val byV = obs.groupBy("_v").agg(count(lit(1)).as("_c"))
     val cum = Packing.withGlobalCumsum(byV, col("_v"), col("_c"),
       "_below")
-    // totals from the PERSISTED cumsum relation (one raw-data scan)
-    val tot = cum.agg(sum(col("_c")).as("n"),
-        sum(col("_v") * col("_c")).as("total"), min(col("_v")).as("_mn"))
-      .select(col("n"), col("total"),
-        when(coalesce(col("_mn"), lit(0L)) >= 0L, lit(0L))
-          .otherwise(raise_error(lit(
-            "gini: values must be non-negative")).cast("long"))
-          .as("_guard"))
-    cum.crossJoin(broadcast(tot))
-      .agg(first(col("n")).as("n"), first(col("total")).as("total"),
-        (sum(col("_v") * col("_c") *
-          (col("_below") * 2 + col("_c") + 1)) + first(col("_guard")))
+    cum.agg(sum(col("_c")).as("n"),
+        sum(col("_v") * col("_c")).as("total"),
+        (sum(col("_v") * col("_c") * (col("_below") * 2 + col("_c") + 1)) +
+          when(coalesce(min(col("_v")), lit(0L)) >= 0L, lit(0L))
+            .otherwise(raise_error(lit(
+              "gini: values must be non-negative")).cast("long")))
           .as("_w"))
       .select(col("n"), col("total"),
         (col("_w") - (col("n") + 1) * col("total")).as("gini_num"),

@@ -233,17 +233,15 @@ object Quantiles {
     * front-loaded boundary ranks; QuantilesSpec pins a 997-row case).
     * `orderCol` must be unique (use a struct with a key tie-break;
     * negate components for descending order) — the same determinism
-    * contract every hash-gated ranking here carries. The row count
-    * rides a broadcast-scalar join; all arithmetic is integer DIV.
+    * contract every hash-gated ranking here carries. The row count n is
+    * the same scan's grand total; all arithmetic is integer DIV.
     */
   def withGlobalNtile(df: DataFrame, orderCol: Column, k: Int,
       out: String): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val ranked = Packing.withGlobalCumsum(df, orderCol, lit(1L), "_gnt_cum")
-    val n = ranked.agg(count(lit(1)).as("_gnt_n"))
-    ranked.crossJoin(broadcast(n))
-      .withColumn("_gnt_q", expr(s"_gnt_n DIV $k"))
-      .withColumn("_gnt_rem", expr(s"_gnt_n % $k"))
+    Packing.withGlobalCumsum(df, orderCol, Seq(lit(1L) -> "_gnt_cum"))
+      .withColumn("_gnt_q", expr(s"_gnt_cum_total DIV $k"))
+      .withColumn("_gnt_rem", expr(s"_gnt_cum_total % $k"))
       .withColumn(out,
         when(col("_gnt_cum") < col("_gnt_rem") * (col("_gnt_q") + 1),
           expr("_gnt_cum DIV (_gnt_q + 1)") + lit(1L))
@@ -251,7 +249,7 @@ object Quantiles {
             expr("(_gnt_cum - _gnt_rem * (_gnt_q + 1)) DIV _gnt_q") +
             lit(1L))
           .cast("long"))
-      .drop("_gnt_cum", "_gnt_n", "_gnt_q", "_gnt_rem")
+      .drop("_gnt_cum", "_gnt_cum_total", "_gnt_q", "_gnt_rem")
   }
 
   /** Exact per-group lower weighted median: the smallest value whose

@@ -207,7 +207,7 @@ object Sampling {
     * Scale shape: the only global state is the prefix sum, computed by
     * [[Packing.withGlobalCumsum]]'s two-phase scan (range partition on
     * the hash → per-partition sums as offsets → one narrow pass) — no
-    * single-task window; the total rides a broadcast-scalar join. The
+    * single-task window; the same scan yields the weight total. The
     * md5 order key doubles as the anti-clustering guarantee systematic
     * sampling needs: adjacent input rows land far apart, so stride
     * periodicity cannot alias with any data periodicity.
@@ -219,18 +219,16 @@ object Sampling {
       .withColumn("_wsw", greatest(weight.cast("long"), lit(1L)))
       .withColumn("_wsh", md5(key.cast("string")))
     val ord = struct(col("_wsh"), key)
-    val cum = Packing.withGlobalCumsum(base, ord, col("_wsw"), "_wscum")
-    val total = cum.agg(sum(col("_wsw")).as("_wstotal"))
     // integer DIV throughout: `/` on longs is double division, and
     // floor(double) loses exactness past 2^53 — a real hazard when the
     // cumulative weight is corpus-scale
-    cum.crossJoin(broadcast(total))
+    Packing.withGlobalCumsum(base, ord, Seq(col("_wsw") -> "_wscum"))
       .withColumn("_wsstride",
-        greatest(expr("_wstotal DIV " + target.toLong), lit(1L)))
+        greatest(expr("_wscum_total DIV " + target.toLong), lit(1L)))
       .filter(
         expr("_wscum DIV _wsstride") <
           expr("(_wscum + _wsw) DIV _wsstride"))
-      .drop("_wsh", "_wstotal", "_wsstride")
+      .drop("_wsh", "_wscum_total", "_wsstride")
       .withColumnRenamed("_wsw", "sample_w")
       .withColumnRenamed("_wscum", "sample_cum")
   }

@@ -173,13 +173,10 @@ object TermStats {
     * map-side-combinable min over it (|vocab| rows out — never
     * collected, never broadcast), per-doc token and new-term counts
     * are two more combinable rollups over the same cache; the two running
-    * totals ride ONE packed two-phase prefix scan
+    * totals are summed side by side by ONE two-phase prefix scan
     * ([[Packing.withGlobalCumsum]]: range-partition by doc_id,
     * |partitions| per-partition sums as offsets, one narrow pass — no
-    * window at all). Packing contract: new_terms rides the low
-    * 32 bits, so the scan is exact while total vocabulary < 2³² terms
-    * and total tokens < 2³¹ — document-count-scale corpora far beyond
-    * the reference's; past that, run two scans.
+    * window at all), exact up to the long range.
     */
   def vocabGrowth(df: DataFrame, id: Column, text: Column): DataFrame = {
     // ONE corpus explode, combined to the (doc, term, tf) relation,
@@ -199,15 +196,11 @@ object TermStats {
       .select(col("_id"),
         coalesce(col("toks"), lit(0L)).as("toks"),
         coalesce(col("new_terms"), lit(0L)).as("new_terms"))
-      .withColumn("_pk",
-        col("toks") * lit(4294967296L) + col("new_terms"))
-    Packing.withGlobalCumsum(base, col("_id"), col("_pk"), "_before")
-      // integer unpack: `div`/pmod, NOT `/` (long / long is DOUBLE
-      // division in Spark — the q_winsorize-family lesson)
+    Packing.withGlobalCumsum(base, col("_id"),
+        Seq(col("toks") -> "_toks_before", col("new_terms") -> "_new_before"))
       .select(col("_id").as("doc_id"), col("toks"), col("new_terms"),
-        expr("(_before + _pk) div 4294967296").as("cum_toks"),
-        pmod(col("_before") + col("_pk"), lit(4294967296L))
-          .as("vocab_size"))
+        (col("_toks_before") + col("toks")).as("cum_toks"),
+        (col("_new_before") + col("new_terms")).as("vocab_size"))
   }
 
   /** Positive-PMI collocations (Church & Hanks, CL 1990: word

@@ -10,6 +10,32 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 case class BloomState(bits: Array[Long])
 
+/** The one shard segment both Bloom twins ([[StreamingBloomDedup]],
+  * [[StreamingNovelty]]) keep in [[BloomState]]: its size guard, its
+  * allocation on a group's first batch, the all-probes-set test and
+  * the set-all insert over probe bit positions (each below
+  * 64·segLongs; every twin computes its own probes).
+  */
+private[streaming] object BloomSegment {
+  /** Below ~16 longs the double-hashing FP formula breaks down (see
+    * StreamingBloomDedup's FP-formula note), so no twin sizes a
+    * segment smaller.
+    */
+  def checkSize(segLongs: Int, numHashes: Int): Unit =
+    require(segLongs >= 16 && numHashes >= 1,
+      "need segLongs >= 16 and numHashes >= 1: the double-hashing FP " +
+        "formula needs segBits >> k^2")
+
+  def bits(state: GroupState[BloomState], segLongs: Int): Array[Long] =
+    state.getOption.map(_.bits).getOrElse(new Array[Long](segLongs))
+
+  def allSet(bits: Array[Long], ps: Array[Long]): Boolean =
+    ps.forall(p => (bits((p >>> 6).toInt) & (1L << (p & 63L))) != 0L)
+
+  def setAll(bits: Array[Long], ps: Array[Long]): Unit =
+    ps.foreach(p => bits((p >>> 6).toInt) |= 1L << (p & 63L))
+}
+
 /** A row emitted the first time its key was (probabilistically) seen. */
 case class FirstSeen(key: String, ord: Long)
 
@@ -52,7 +78,7 @@ case class FirstSeen(key: String, ord: Long)
   * for the deployed default (65,536 bits, k=4) and anything near it.
   * A DEGENERATE segment (segLongs of 1-2, i.e. 64-128 bits) breaks
   * the independence approximation and the real FP rate lands above
-  * the formula; don't size by the formula below ~16 segLongs.
+  * the formula, so [[BloomSegment]] rejects segments below 16 longs.
   *
   * Key-frequency skew (round-12 sweep): the route hash is uniform
   * over DISTINCT keys, so shard-group COUNTS balance — but every
@@ -123,8 +149,7 @@ object StreamingBloomDedup {
   private def updateGroup(segLongs: Int, numHashes: Int)(shard: Int,
       rows: Iterator[(Int, String, Long)],
       state: GroupState[BloomState]): Iterator[FirstSeen] = {
-    val bits = state.getOption.map(_.bits)
-      .getOrElse(new Array[Long](segLongs))
+    val bits = BloomSegment.bits(state, segLongs)
     val segBits = 64L * segLongs
     val out = scala.collection.mutable.ArrayBuffer.empty[FirstSeen]
     // ord-sorted so the within-batch survivor of a repeated key is
@@ -132,20 +157,8 @@ object StreamingBloomDedup {
     // slice, so the sort buffer is batch-bounded, not stream-bounded
     rows.toArray.sortBy(t => (t._3, t._2)).foreach { case (_, k, o) =>
       val ps = probes(k, numHashes, segBits)
-      var seen = true
-      var i = 0
-      while (i < ps.length) {
-        val p = ps(i)
-        if ((bits((p >> 6).toInt) & (1L << (p & 63L))) == 0L) seen = false
-        i += 1
-      }
-      if (!seen) {
-        i = 0
-        while (i < ps.length) {
-          val p = ps(i)
-          bits((p >> 6).toInt) |= (1L << (p & 63L))
-          i += 1
-        }
+      if (!BloomSegment.allSet(bits, ps)) {
+        BloomSegment.setAll(bits, ps)
         out += FirstSeen(k, o)
       }
     }
@@ -160,8 +173,7 @@ object StreamingBloomDedup {
     */
   def firstSeen(obs: Dataset[(Int, String, Long)], segLongs: Int = 1024,
       numHashes: Int = 4): Dataset[FirstSeen] = {
-    require(segLongs >= 1 && numHashes >= 1,
-      "segLongs and numHashes must be >= 1")
+    BloomSegment.checkSize(segLongs, numHashes)
     obs.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(updateGroup(segLongs, numHashes) _)

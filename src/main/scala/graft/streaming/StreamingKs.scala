@@ -20,7 +20,7 @@ import graft.operators.Eval
   * is BY CONSTRUCTION the batch statistic of (that trigger's rows vs
   * the reference), bit for bit; StreamingKsSpec pins it across uneven
   * trigger splits. No new math enters the streaming path — the same
-  * packed two-phase prefix scan runs per trigger.
+  * two-phase prefix scan runs per trigger.
   *
   * Scale shape: the reference relation is scanned once per trigger
   * (persist it for a long-running monitor); the per-trigger work is

@@ -108,7 +108,7 @@ object StreamingNovelty {
     * into their own streams own the same obligation.
     */
   private[graft] def probes(g: Long, numHashes: Int,
-      segBits: Int): Array[Int] = {
+      segBits: Long): Array[Long] = {
     def mix(x: Long): Long = {
       var z = x + 0x9e3779b97f4a7c15L
       z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -117,36 +117,27 @@ object StreamingNovelty {
     }
     val h1 = mix(g)
     val h2 = mix(h1)
-    Array.tabulate(numHashes) { i =>
-      val h = h1 + i.toLong * h2
-      ((h % segBits) + segBits).toInt % segBits
-    }
+    Array.tabulate(numHashes)(i =>
+      java.lang.Math.floorMod(h1 + i.toLong * h2, segBits))
   }
-
-  private def isSet(bits: Array[Long], pos: Int): Boolean =
-    (bits(pos >>> 6) & (1L << (pos & 63))) != 0L
-
-  private def set(bits: Array[Long], pos: Int): Unit =
-    bits(pos >>> 6) |= 1L << (pos & 63)
 
   private def updateGroup(segLongs: Int, numHashes: Int)(shard: Int,
       rows: Iterator[(Int, Long, Long)],
       state: GroupState[BloomState]): Iterator[NoveltyPartial] = {
-    val segBits = segLongs * 64
-    val bits = state.getOption.map(_.bits)
-      .getOrElse(new Array[Long](segLongs))
+    val segBits = 64L * segLongs
+    val bits = BloomSegment.bits(state, segLongs)
     val all = rows.toArray
     // probe EVERY row against the batch-start snapshot first...
     val partials = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Long, Long)]
     all.foreach { case (_, doc, g) =>
-      val seen = probes(g, numHashes, segBits).forall(isSet(bits, _))
+      val seen = BloomSegment.allSet(bits, probes(g, numHashes, segBits))
       val (n, s) = partials.getOrElse(doc, (0L, 0L))
       partials(doc) = (n + 1, if (seen) s + 1 else s)
     }
     // ...then insert, so within-batch docs never see each other
     all.foreach { case (_, _, g) =>
-      probes(g, numHashes, segBits).foreach(set(bits, _))
+      BloomSegment.setAll(bits, probes(g, numHashes, segBits))
     }
     state.update(BloomState(bits))
     partials.iterator.map { case (doc, (n, s)) =>
@@ -160,9 +151,7 @@ object StreamingNovelty {
     */
   def partials(obs: Dataset[(Int, Long, Long)], segLongs: Int = 1024,
       numHashes: Int = 4): Dataset[NoveltyPartial] = {
-    require(segLongs >= 16,
-      "don't size below ~16 segLongs: the double-hashing FP formula " +
-        "needs segBits >> k^2 (see StreamingBloomDedup's bound note)")
+    BloomSegment.checkSize(segLongs, numHashes)
     obs.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(updateGroup(segLongs, numHashes) _)

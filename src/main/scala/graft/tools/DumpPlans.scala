@@ -46,7 +46,7 @@ object DumpPlans {
     "q_bigram_lm" -> "bigram-LM surprisal — gram-keyed count relations, no vocab broadcast",
     "q_kmeans_assign" -> "integer k-means — one narrow scan, centroids as reference objects",
     "q_semantic_dedup" -> "SemDeDup — cluster-key equi-join pairs, integer cosine verify",
-    "q_weighted_sample" -> "weighted systematic sample — two-phase cumsum read back, broadcast total",
+    "q_weighted_sample" -> "weighted systematic sample — two-phase cumsum and its total read back, no join",
     "q_hash_classifier" -> "hashed n-gram classifier — one corpus scan, broadcast weights",
     "q_cms_topk" -> "count-min heavy hitters — vocab-relation sketch, TakeOrdered top-k",
     "q_resample_ohlc" -> "tick→bar OHLCV — partial min_by/max_by combine, one bucket-key exchange",

@@ -115,12 +115,27 @@ class EvalSpec extends AnyFunSuite {
     val b = Eval.ksTest(df.repartition(13), col("v"), col("a"))
       .collect().head.getAs[Long]("ks_num")
     assert(a === b)
+    // and equals the sequential reference at 1 and 17 partitions
+    agreesWithReference(
+      in => Eval.ksTest(in, col("s"), col("y"))
+        .as[(Long, Long, Long, Long, Option[Double])].collect().toSeq,
+      rows => {
+        val by = perScore(rows)
+        val (nA, nB) = (by.map(_._3).sum, by.map(b => b._2 - b._3).sum)
+        val cdfs = by.scanLeft((0L, 0L)) { case ((ca, cb), (_, n, pos)) =>
+          (ca + pos, cb + n - pos) }.tail
+        if (by.isEmpty) Seq.empty
+        else {
+          val d = cdfs.map { case (ca, cb) => math.abs(ca * nB - cb * nA) }.max
+          Seq((nA, nB, d, nA * nB, ratio(d, nA * nB)))
+        }
+      })
   }
 
   test("ksTest: empty input returns no rows instead of firing the " +
       "packed-scan guard") {
-    // round-9 ADVICE: the guard condition on NULL totals used to
-    // evaluate NULL → otherwise-branch → misleading raise_error
+    // the scan's totals are NULL over no rows: the result must be the
+    // empty relation, not one all-NULL row or an error
     val empty = Seq.empty[(Long, Boolean)].toDF("v", "a")
     assert(Eval.ksTest(empty, col("v"), col("a")).collect().isEmpty)
   }
@@ -157,6 +172,21 @@ class EvalSpec extends AnyFunSuite {
           (r.getAs[Long]("tp") + r.getAs[Long]("fp")))
       assert(r.getAs[Double]("recall") === r.getAs[Long]("tp") / 3.0)
     }
+    // and equals the sequential reference at 1 and 17 partitions
+    agreesWithReference(
+      in => Eval.prCurve(in, col("s"), col("y"))
+        .orderBy(col("threshold").desc)
+        .as[(Long, Long, Long, Long, Double, Option[Double])].collect().toSeq,
+      rows => {
+        val by = perScore(rows).reverse
+        val nPos = by.map(_._3).sum
+        var (tp, fp) = (0L, 0L)
+        by.map { case (s, n, pos) =>
+          tp += pos; fp += n - pos
+          (s, tp, fp, nPos - tp, tp.toDouble / (tp + fp).toDouble,
+            ratio(tp, nPos))
+        }
+      })
   }
 
   test("averagePrecision matches the hand-computed fixed-point sum") {
@@ -195,27 +225,20 @@ class EvalSpec extends AnyFunSuite {
   test("averagePrecision agrees with a sequential brute-force " +
     "reference on pseudo-random inputs") {
     val S = 1000000000L
-    for (seed <- 1 to 3) {
-      val data = (0 until 500).map { i =>
-        val h = (i * 2654435761L + seed * 40503L) % 1000000007L
-        ((h % 37), (h % 3) == 0L)
-      }
-      // sequential reference: group by score, walk thresholds
-      // descending, accumulate the SAME fixed-point terms
-      val byScore = data.groupBy(_._1).view.mapValues { vs =>
-        (vs.count(_._2).toLong, vs.size.toLong)
-      }.toSeq.sortBy(-_._1)
-      var tp = 0L; var all = 0L; var num = 0L
-      byScore.foreach { case (_, (pos, cnt)) =>
-        tp += pos; all += cnt
-        num += (2L * pos * tp * S + all) / (2L * all)
-      }
-      val nPos = data.count(_._2).toLong
-      val row = Eval.averagePrecision(data.toDF("s", "y"), col("s"),
-        col("y")).collect().head
-      assert(row.getAs[Long]("n_pos") === nPos, s"seed $seed")
-      assert(row.getAs[Long]("ap_num") === num, s"seed $seed")
-    }
+    agreesWithReference(
+      in => Eval.averagePrecision(in, col("s"), col("y"))
+        .as[(Long, Long, Long, Option[Double])].collect().toSeq,
+      rows => {
+        val by = perScore(rows).reverse
+        var (tp, all, num) = (0L, 0L, 0L)
+        by.foreach { case (_, n, pos) =>
+          tp += pos; all += n
+          num += (2L * pos * tp * S + all) / (2L * all)
+        }
+        val nPos = by.map(_._3).sum
+        if (by.isEmpty) Seq.empty
+        else Seq((nPos, num, nPos * S, ratio(num, nPos * S)))
+      })
   }
 
   test("precisionAtK matches the hand-computed top-k cuts") {
@@ -249,38 +272,79 @@ class EvalSpec extends AnyFunSuite {
     val b = Eval.precisionAtK(df.repartition(17), col("s"), col("id"),
       col("y"), Seq(100)).collect().head.getAs[Long]("tp")
     assert(a === b)
+    // and equals the sequential reference at 1 and 17 partitions
+    val ks = Seq(1, 7, 50, 1000)
+    agreesWithReference(
+      in => Eval.precisionAtK(in, col("s"), col("id"), col("y"), ks)
+        .orderBy("k").as[(Long, Long, Double, Option[Double])].collect().toSeq,
+      rows => {
+        val ranked = rows.collect { case (id, Some(s), y) => (-s, id, y) }
+          .sortBy(r => (r._1, r._2)).map(_._3)
+        val nPos = ranked.count(identity).toLong
+        if (ranked.isEmpty) Seq.empty
+        else ks.map { k =>
+          val tp = ranked.take(k).count(identity).toLong
+          (k.toLong, tp, tp.toDouble / k.toDouble, ratio(tp, nPos))
+        }
+      })
   }
 
-  test("precisionAtK packed-scan guard FIRES past the row bound and " +
-      "stays silent under it (round-10 ADVICE: per-row packing bounds " +
-      "TOTAL rows, stricter than the per-class siblings)") {
+  test("precisionAtK: the top-ranked positive counts once at k = 1") {
     val df = Seq((5L, "a", true), (4L, "b", false), (3L, "c", true))
       .toDF("s", "id", "y")
-    // guardLimit 2: 3 rows >= 2 -> raise_error must surface
-    val e = intercept[Exception] {
-      Eval.precisionAtK(df, col("s"), col("id"), col("y"), Seq(1),
-        guardLimit = 2L).collect()
-    }
-    assert(e.getMessage != null &&
-      findRaise(e).exists(_.contains("precisionAtK")))
-    // under the bound the guard adds 0 — values identical to default
-    val ok = Eval.precisionAtK(df, col("s"), col("id"), col("y"), Seq(1),
-      guardLimit = 4L).collect().head
+    val ok = Eval.precisionAtK(df, col("s"), col("id"), col("y"), Seq(1))
+      .collect().head
     assert(ok.getAs[Long]("tp") === 1L)
   }
 
-  test("thresholdCounts packed-scan guard FIRES past the class bound " +
-      "and prCurve/averagePrecision values are unchanged under it") {
-    val df = tied.toDF("s", "y")
-    // guardLimit 2: 3 negatives >= 2 -> raise_error through prCurve
-    val e = intercept[Exception] {
-      Eval.thresholdCounts(df, col("s"), col("y"), guardLimit = 2L)
-        .select("tp").collect()
-    }
-    assert(findRaise(e).exists(_.contains("thresholdCounts")))
-    val tp = Eval.thresholdCounts(df, col("s"), col("y"), guardLimit = 4L)
+  test("thresholdCounts: tp counts the positives at or above each " +
+      "descending threshold") {
+    val tp = Eval.thresholdCounts(tied.toDF("s", "y"), col("s"), col("y"))
       .orderBy(col("_s").desc).select("tp").as[Long].collect().toSeq
     assert(tp === Seq(1L, 1L, 2L, 3L, 3L))
+  }
+
+  // (id, score, label) rows with a NULL score every 11th row: the input
+  // of the sequential references below
+  private type Obs = (Long, Option[Long], Boolean)
+
+  private def scoredRows(seed: Int): Seq[Obs] = (0 until 600).map { i =>
+    val h = (i * 2654435761L + seed * 40503L) % 1000000007L
+    (i.toLong, if (i % 11 == 0) None else Some(h % 41), h % 3 == 0L)
+  }
+
+  /** (score, rows, positives) per distinct non-NULL score, ascending. */
+  private def perScore(rows: Seq[Obs]): Seq[(Long, Long, Long)] =
+    rows.collect { case (_, Some(s), y) => (s, y) }.groupBy(_._1).toSeq
+      .sortBy(_._1)
+      .map { case (s, g) => (s, g.size.toLong, g.count(_._2).toLong) }
+
+  /** `metric` equals the sequential `ref` on three pseudo-random inputs
+    * at 1 and 17 partitions, and returns no rows over an empty or an
+    * all-NULL-score input.
+    */
+  private def agreesWithReference[T](metric: org.apache.spark.sql.DataFrame => Seq[T],
+      ref: Seq[Obs] => Seq[T]): Unit = {
+    for (seed <- 1 to 3; parts <- Seq(1, 17)) {
+      val rows = scoredRows(seed)
+      assert(metric(rows.toDF("id", "s", "y").repartition(parts)) ===
+        ref(rows), s"seed $seed, $parts partitions")
+    }
+    val allNull = scoredRows(1).map { case (i, _, y) => (i, Option.empty[Long], y) }
+    assert(metric(Seq.empty[Obs].toDF("id", "s", "y")).isEmpty)
+    assert(metric(allNull.toDF("id", "s", "y")).isEmpty)
+  }
+
+  private def ratio(num: Long, den: Long): Option[Double] =
+    if (den == 0L) None else Some(num.toDouble / den.toDouble)
+
+  test("q_ks_test's warm build and execution run the pinned jobs on " +
+      "sf0.01") {
+    val build = () => SparkEntry.queries("q_ks_test")(spark, "/root/testdata/sf0.01")
+    build() // infers and memoises the fixture's schema
+    val (df, buildJobs) = TestSpark.jobsDuring(build())
+    assert(buildJobs === 4)
+    assert(TestSpark.jobsDuring(df.collect())._2 === 1)
   }
 
   test("averagePrecision: empty input returns ZERO rows (oracle's " +
@@ -316,6 +380,22 @@ class EvalSpec extends AnyFunSuite {
     val b = Eval.calibrationQuantileBins(df.repartition(13), col("s"),
       col("y")).orderBy("bin").collect().toSeq
     assert(a === b)
+    // and equals the sequential reference at 1 and 17 partitions
+    agreesWithReference(
+      in => Eval.calibrationQuantileBins(in, col("s"), col("y"), bins = 7)
+        .orderBy("bin").as[(Long, Long, Long, Long, Long, Double)]
+        .collect().toSeq,
+      rows => {
+        val by = perScore(rows)
+        val n = by.map(_._2).sum
+        val below = by.scanLeft(0L)(_ + _._2)
+        by.zip(below).groupBy { case (_, b) => b * 7 / n }.toSeq.sortBy(_._1)
+          .map { case (bin, g) =>
+            val (cnt, pos) = (g.map(_._1._2).sum, g.map(_._1._3).sum)
+            (bin, g.map(_._1._1).min, g.map(_._1._1).max, cnt, pos,
+              pos.toDouble / cnt.toDouble)
+          }
+      })
   }
 
   test("gini matches hand-computed cases") {
@@ -351,6 +431,19 @@ class EvalSpec extends AnyFunSuite {
     val a = Eval.gini(df.repartition(1), col("v")).collect().head
     val b = Eval.gini(df.repartition(11), col("v")).collect().head
     assert(a === b)
+    // and equals the sequential reference at 1 and 17 partitions
+    agreesWithReference(
+      in => Eval.gini(in, col("s"))
+        .as[(Long, Long, Long, Long, Option[Double])].collect().toSeq,
+      rows => {
+        val by = perScore(rows)
+        val sorted = by.flatMap { case (v, c, _) => Seq.fill(c.toInt)(v) }
+        val (n, total) = (sorted.size.toLong, sorted.sum)
+        val w = sorted.zipWithIndex.map { case (v, i) => 2L * (i + 1) * v }.sum
+        val num = w - (n + 1) * total
+        if (by.isEmpty) Seq.empty
+        else Seq((n, total, num, n * total, ratio(num, n * total)))
+      })
   }
 
   test("hhi matches hand computations; eff_groups is its reciprocal") {

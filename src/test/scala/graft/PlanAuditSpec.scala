@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.First
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+  CartesianProductExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that make these queries scale
@@ -7,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a cartesian product, drops a broadcast, loses filter pushdown, or
   * adds a shuffle to the window pipeline fails here.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -264,16 +271,15 @@ class PlanAuditSpec extends AnyFunSuite {
       "within-cluster pairs must come from an equi-join, not a loop join")
   }
 
-  test("weighted sampling: no offsets join, broadcast scalar total") {
+  test("weighted sampling: no offsets or totals join, the scan's total " +
+      "is read back") {
     val p = plan("q_weighted_sample")
     // the prefix scan's offsets never meet the rows in a join (they
-    // are added per partition), the grand-total join broadcasts a
-    // 1-row relation, and the data side never shuffles for a join
+    // are added per partition), and its grand total is a column of the
+    // scanned rows: the plan holds no join at all
     assertScanWindowFree("q_weighted_sample")
-    assert(!p.contains("BroadcastHashJoin"), "offsets must not be joined back")
-    assert(p.contains("BroadcastNestedLoopJoin"), "scalar total must broadcast")
-    assert(!p.contains("SortMergeJoin"),
-      "no data-sized join side may shuffle:\n" +
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      "no join may follow the scan:\n" +
         p.linesIterator.filter(_.contains("Join")).mkString("\n"))
   }
 
@@ -363,14 +369,42 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("eval metrics broadcast their 1-row totals relations") {
-    // prCurve/ksTest cross-join totals back onto the per-score
-    // relation — those must be broadcasts, never shuffled joins
-    Seq("q_pr_curve", "q_ks_test", "q_precision_at_k").foreach { q =>
-      val p = plan(q)
-      assert(p.contains("BroadcastExchange"), s"$q lost its broadcast")
-      assert(!p.contains("SortMergeJoin"),
-        s"$q: totals relation fell into a sort-merge join")
+  /** `q` after running it: its AQE-final physical plan is final. */
+  private def executed(q: String): QueryExecution = {
+    val df = SparkEntry.queries(q)(spark, dir)
+    df.collect()
+    assert(df.queryExecution.executedPlan.toString.contains(
+      "isFinalPlan=true"), s"$q: plan not final")
+    df.queryExecution
+  }
+
+  test("prefix-scan metrics read the scan's totals: no totals join, " +
+      "no shuffled or cartesian join, pinned broadcasts") {
+    // each global count or total is a `_total` column of the scanned
+    // rows, so no plan re-aggregates the scan and joins the 1-row
+    // result back; the one broadcast left (q_precision_at_k's) carries
+    // the requested k list
+    val broadcasts = Seq("q_ks_test" -> 0, "q_pr_curve" -> 0,
+      "q_pr_auc" -> 0, "q_precision_at_k" -> 1,
+      "q_calibration_quantile" -> 0, "q_gini" -> 0,
+      "q_weighted_sample" -> 0, "q_rfm" -> 0, "q_vocab_growth" -> 0)
+    broadcasts.foreach { case (q, n) =>
+      val qe = executed(q)
+      val p = qe.executedPlan
+      // nothing reads a total back through first() of a joined column
+      assert(!qe.optimizedPlan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[First]))), s"$q:\n${qe.optimizedPlan}")
+      assert(collect(p) { case j: SortMergeJoinExec => j }.isEmpty &&
+        collect(p) { case j: CartesianProductExec => j }.isEmpty,
+        s"$q: a shuffled or cartesian join:\n$p")
+      val totalsJoins = collect(p) { case j: BroadcastNestedLoopJoinExec =>
+        j.children.flatMap(c => collect(c) {
+          case a: BaseAggregateExec if a.groupingExpressions.isEmpty => a })
+      }.flatten
+      assert(totalsJoins.isEmpty, s"$q joins a totals aggregate:\n$p")
+      assert(collect(p) { case b: BroadcastExchangeExec => b }.size === n,
+        s"$q:\n$p")
+      assertScanWindowFree(q)
     }
   }
 

@@ -179,6 +179,36 @@ class QuantilesSpec extends AnyFunSuite {
         struct(col("v"), col("id")), 5, "nt")
       .select("id", "nt").as[(Long, Long)].collect().toMap
     assert(tiny === Map(2L -> 1L, 1L -> 2L))
+    // a sequential ntile at 1 and 17 partitions; empty and all-NULL
+    // order values
+    val rows = (0 until 503).map(i => (i.toLong,
+      if (i % 9 == 0) None else Some(((i * 7919) % 101).toLong)))
+    // ntile(k) over (v, id), NULLs first: the first n mod k buckets
+    // hold one row more
+    def ref(rs: Seq[(Long, Option[Long])], k: Int): Map[Long, Long] = {
+      val (q, rem) = (rs.size / k, rs.size % k)
+      val buckets = (1 to k).flatMap(b =>
+        Seq.fill(if (b <= rem) q + 1 else q)(b.toLong))
+      rs.sortBy { case (id, v) => (v, id) }.map(_._1).zip(buckets).toMap
+    }
+    def scanned(rs: Seq[(Long, Option[Long])], parts: Int, k: Int) =
+      Quantiles.withGlobalNtile(rs.toDF("id", "v").repartition(parts),
+          struct(col("v"), col("id")), k, "nt")
+        .select("id", "nt").as[(Long, Long)].collect().toMap
+    for (k <- Seq(5, 7); parts <- Seq(1, 17))
+      assert(scanned(rows, parts, k) === ref(rows, k), s"k $k, $parts partitions")
+    assert(scanned(Seq.empty, 1, 5).isEmpty)
+    val nulls = rows.map { case (id, _) => (id, Option.empty[Long]) }
+    assert(scanned(nulls, 17, 5) === ref(nulls, 5))
+  }
+
+  test("q_rfm's warm build and execution run the pinned jobs on sf0.01") {
+    // three ntile scans: each runs its summary job when built
+    val build = () => SparkEntry.queries("q_rfm")(spark, "/root/testdata/sf0.01")
+    build() // infers and memoises the fixture's schema
+    val (df, buildJobs) = TestSpark.jobsDuring(build())
+    assert(buildJobs === 10)
+    assert(TestSpark.jobsDuring(df.collect())._2 === 3)
   }
 
   test("weightedMedian equals expanded-median brute force") {

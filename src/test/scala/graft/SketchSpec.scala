@@ -162,6 +162,32 @@ class SketchSpec extends AnyFunSuite {
         col("w"), target)
       .select("id").as[Long].collect().toSet
     assert(again === kept)
+    // a sequential md5-order walk at 1 and 17 partitions; empty input
+    // and NULL weights
+    val rows = (0L until 700L).map(i =>
+      (i, if (i % 10 == 0) None else Some((i * 37) % 53 - 5)))
+    // md5(key) order, weights clamped to >= 1 (NULL too), keep the rows
+    // whose weight span crosses a stride multiple
+    def ref(rs: Seq[(Long, Option[Long])], target: Int): Seq[(Long, Long, Long)] = {
+      def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val ws = rs.map { case (id, w) => (md5(id.toString), id,
+        math.max(w.getOrElse(1L), 1L)) }.sortBy(r => (r._1, r._2))
+      val cum = ws.scanLeft(0L)(_ + _._3)
+      val stride = math.max(cum.last / target, 1L)
+      ws.zip(cum).collect { case ((_, id, w), c)
+        if c / stride < (c + w) / stride => (id, w, c) }.sortBy(_._1)
+    }
+    def got(rs: Seq[(Long, Option[Long])], parts: Int, target: Int) =
+      Sampling.weightedSystematic(rs.toDF("id", "w").repartition(parts),
+          col("id"), col("w"), target)
+        .select("id", "sample_w", "sample_cum").as[(Long, Long, Long)]
+        .collect().toSeq.sortBy(_._1)
+    for (target <- Seq(10, 60); parts <- Seq(1, 17))
+      assert(got(rows, parts, target) === ref(rows, target))
+    assert(got(Seq.empty, 1, 10).isEmpty)
+    val nulls = rows.map { case (id, _) => (id, Option.empty[Long]) }
+    assert(got(nulls, 17, 10) === ref(nulls, 10))
   }
 
   test("weightedSystematic clamps non-positive weights and still samples") {

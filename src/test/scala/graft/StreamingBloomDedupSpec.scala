@@ -44,6 +44,25 @@ class StreamingBloomDedupSpec extends AnyFunSuite {
     spark.table(name).as[(String, Long)].collect().toSeq
   }
 
+  test("a segment below 16 longs is rejected, with the novelty twin's " +
+      "message") {
+    val obs = StreamingBloomDedup.observations(
+      rows.toDF("k", "o"), col("k"), col("o"), shards)
+    val e = intercept[IllegalArgumentException] {
+      StreamingBloomDedup.firstSeen(obs, segLongs = 8)
+    }
+    val grams = graft.streaming.StreamingNovelty.observations(
+      Seq((1L, "a b c d")).toDF("id", "text"), col("id"), col("text"), 2,
+      shards)
+    val n = intercept[IllegalArgumentException] {
+      graft.streaming.StreamingNovelty.partials(grams, segLongs = 8)
+    }
+    assert(e.getMessage === n.getMessage)
+    // 16 longs is accepted (this corpus overfills it: FPs drop keys)
+    val small = StreamingBloomDedup.firstSeen(obs, segLongs = 16).count()
+    assert(small > 0L && small <= exactKeys.size)
+  }
+
   test("batch mode: emitted keys == exact dedup survivors, min-ord row") {
     val out = StreamingBloomDedup.firstSeen(
         StreamingBloomDedup.observations(

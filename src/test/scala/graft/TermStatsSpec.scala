@@ -18,6 +18,32 @@ class TermStatsSpec extends AnyFunSuite {
     (1L, "banana cherry banana banana"),
     (2L, "apple cherry date date")).toDF("doc_id", "text")
 
+  test("vocabGrowth agrees with a sequential Heaps walk at 1 and 17 " +
+      "partitions; empty and all-NULL text") {
+    val docs: Seq[(Long, String)] = (0L until 60L).map(i => (i,
+      if (i % 13 == 0) null
+      else (0 until (i % 7).toInt).map(j => s"w${(i * j + j) % 23}")
+        .mkString(" ")))
+    def ref(ds: Seq[(Long, String)]): Seq[(Long, Long, Long, Long, Long)] = {
+      var (seen, cumT, vocab) = (Set.empty[String], 0L, 0L)
+      ds.sortBy(_._1).map { case (id, t) =>
+        val ws = Option(t).toSeq.flatMap(_.toLowerCase.split("[ \t\n\r\f]+"))
+          .filter(_.nonEmpty)
+        val nw = ws.distinct.count(w => !seen.contains(w)).toLong
+        seen ++= ws; cumT += ws.size; vocab += nw
+        (id, ws.size.toLong, nw, cumT, vocab)
+      }
+    }
+    def got(ds: Seq[(Long, String)], parts: Int) =
+      TermStats.vocabGrowth(ds.toDF("doc_id", "text").repartition(parts),
+          col("doc_id"), col("text"))
+        .orderBy("doc_id").as[(Long, Long, Long, Long, Long)].collect().toSeq
+    Seq(1, 17).foreach(p => assert(got(docs, p) === ref(docs), s"$p partitions"))
+    assert(got(Seq.empty, 1).isEmpty)
+    val nulls = docs.map { case (id, _) => (id, null: String) }
+    assert(got(nulls, 17) === ref(nulls))
+  }
+
   test("tfidf: tf/df/rank and the double scores match hand computation") {
     val out = TermStats.tfidfTopTerms(corpus, col("doc_id"), col("text"), 2)
       .select(col("_id"), col("term"), col("tf"), col("df"), col("tfidf"),
